@@ -8,7 +8,8 @@ Usage: python scripts/oracle_check.py [query ...]   (default: all with oracles)
 The heavy set is the DuckDB-bound text-LSH replays: at sf1 they dominate
 the sweep wall-clock and at sf10 they need hours (run them one at a time,
 cheapest first; dedup_clusters' recursive-CTE oracle is INTRACTABLE at
-sf10 — use scripts/cc_oracle_replay.py for it there).
+sf10 — its sf10 replay is recorded in PLANS.md "r9 late: sf10 CC replay
+re-pinned on the two-tier candidate graphs").
 """
 
 from __future__ import annotations

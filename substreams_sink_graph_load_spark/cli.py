@@ -230,6 +230,7 @@ def main(argv: list[str] | None = None) -> int:
         from .streaming.stats import ProgressReporter
 
         rep = ProgressReporter(spark, "run").start()
+        files = None
         try:
             files = run_ingest(
                 spark,
@@ -247,7 +248,7 @@ def main(argv: list[str] | None = None) -> int:
             rep.stop(
                 last_block=args.stop_block - 1,
                 bundles=sum(len(fs) for fs in files.values())
-                if "files" in dir()
+                if files is not None
                 else "n/a",
             )
         for ent, fs in sorted(files.items()):

@@ -87,8 +87,8 @@ def memoized_h60(mod: int | None = None, max_entries: int | None = None):
     A hot call site that profiles a hit-rate loss under the shared
     budget can pass a larger ``max_entries`` explicitly instead of
     re-raising the global cap for every fold tier (r10 advice item 3).
-    Measured (scripts/memo_hitrate.py, exact replay of the fold's
-    per-task gram stream): the worst task's DISTINCT gram count is 1.2k
+    Measured (PLANS.md "r11: h60 memo hit rate under the 256k cap",
+    exact replay of the fold's per-task gram stream): the worst task's DISTINCT gram count is 1.2k
     (sf1, k=2), 36k (sf1, k=3), 43k (sf10, k=3) — the 256k cap never
     binds and the recompute-rate delta vs the old 4M cap is exactly
     0.0000, so no site overrides.

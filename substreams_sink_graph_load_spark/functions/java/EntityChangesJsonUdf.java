@@ -16,7 +16,7 @@ import org.apache.spark.sql.api.java.UDF1;
  * (sources/protobuf.py, itself golden-tested), mirroring the reference's
  * generated-bindings decode at sinker.go:213-215.
  *
- * Wire schema (proto_descriptor.py): EntityChanges.5 = repeated
+ * Wire schema (sources/protobuf.py): EntityChanges.5 = repeated
  * EntityChange{1:entity,2:id,3:ordinal,4:operation,5:repeated
  * Field{1:name,3:new_value,5:old_value}}; Value oneof
  * {1:int32,2:bigdecimal,3:bigint,4:string,5:bytes,6:bool,10:Array{1:

@@ -28,23 +28,11 @@ from ..functions.text import word_shingles
 def _persist_hot(df: DataFrame, level=None) -> DataFrame:
     """Persist a frame consumed by several downstream branches.
 
-    Default LAZY: the first action fills the cache (r12 A/B on this
-    idle-core host: an eager fill lost on 13 of 15 LSH queries — the
-    fill pass serializes a stage the lazy path overlaps with downstream
-    work).  ``SPARK_GRAFT_EAGER_PERSIST=1`` forces materialization
-    before the consumers run — the r12 verdict's item 5 concern is that
-    at full-utilization production the lazy path's concurrent first
-    actions can compute the frame twice; this knob exists so that trade
-    is A/B-measurable under load (r13 item 6) without editing call
-    sites.  count() over the persisted frame fills the FULL
-    InMemoryRelation (all columns), not a pruned one.  ``level=None``
-    keeps DataFrame.persist()'s default storage level."""
-    import os
-
-    df = df.persist() if level is None else df.persist(level)
-    if os.environ.get("SPARK_GRAFT_EAGER_PERSIST"):
-        df.count()
-    return df
+    LAZY: the first action fills the cache (OPTIMIZATION_r12.md A/B on an idle
+    host: an eager fill lost on 13 of 15 LSH queries — the fill pass
+    serializes a stage the lazy path overlaps with downstream work).
+    ``level=None`` keeps DataFrame.persist()'s default storage level."""
+    return df.persist() if level is None else df.persist(level)
 
 
 def minhash_sketch(

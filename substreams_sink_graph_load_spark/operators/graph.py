@@ -230,8 +230,9 @@ def pagerank_iteration_probe(
     and terminal eager localCheckpoint — so plan auditors can count the
     Exchanges of the ITERATED shape (the real operator checkpoints
     eagerly, leaving only a scan in its final explain()).  Used by
-    scripts/pagerank_bucketed_ab.py, scripts/bucketed_audit.py and
-    tests/test_plan_shapes.py; never by the query path."""
+    scripts/bucketed_audit.py and tests/test_plan_shapes.py (the r10
+    bucketed A/B it served is in PLANS.md "r10: bucketed-edges A/B on
+    graph_pagerank"); never by the query path."""
     base = (100 - damping_pct) * (PPM // 100)
     deg = edges.groupBy(F.col(src).alias("node")).agg(
         F.count("*").cast("long").alias("deg")

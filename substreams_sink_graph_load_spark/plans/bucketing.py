@@ -142,8 +142,8 @@ REGISTRY_BUCKET_KEYS: dict[str, tuple[str, ...]] = {
     # encoded, both directions): graph_pagerank joins/aggregates it on
     # the node key five times per run — bucketing+sorting by src removes
     # the data-scaled edge exchange from every iteration (5 -> 3
-    # exchanges, 0.82x sf1 -> 0.77x sf10, hash parity:
-    # scripts/pagerank_bucketed_ab.py, r10).
+    # exchanges, 0.82x sf1 -> 0.77x sf10, hash parity: PLANS.md "r10:
+    # bucketed-edges A/B on graph_pagerank").
     "pagerank_edges": ("src",),
 }
 

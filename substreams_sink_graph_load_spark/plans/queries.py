@@ -1416,8 +1416,9 @@ def poi_chain_q(spark, sf_dir):
     parallel (applyInPandas over block groups); the chain is a
     driver-side prefix fold over one 32-byte row per block.  The
     sf-SCALED POI surface (millions of events) is exercised by the run
-    stage (streaming/run.py + scripts/throughput_run.py) where the
-    digests also feed the poi2$ entity sink."""
+    stage (streaming/ingest.py; its 1.8M-event throughput is in PLANS.md
+    "End-to-end tocsv throughput") where the digests also feed the poi2$
+    entity sink."""
     import json
 
     from ..operators.poi import poi_chain
@@ -5926,8 +5927,8 @@ def pagerank_edges(spark, sf_dir, allow_bucketed: bool = True):
     table is bucketed AND in-bucket-sorted by ``src``, so the degree
     aggregation and every iteration's edges-side join ride the
     write-time partitioning — 5 -> 3 exchanges per iteration, measured
-    0.82x sf1 -> 0.77x sf10 with hash parity
-    (scripts/pagerank_bucketed_ab.py, r10).  Default: derived from the
+    0.82x sf1 -> 0.77x sf10 with hash parity (PLANS.md "r10:
+    bucketed-edges A/B on graph_pagerank").  Default: derived from the
     sf_dir parquet — same rows, the layout changes partitioning only.
     ``allow_bucketed=False`` forces the parquet derivation — the layout
     WRITER uses it so building a fresh layout never reads the table it
@@ -6418,9 +6419,10 @@ def split_leakage_safe(spark, sf_dir):
     pair graph is orders of magnitude smaller than the corpus); the
     join-back is keyed on doc_id and the split bucket evaluates in the
     join's output projection.  Oracle replays clustering through the
-    recursive-CTE transitive closure — driver-SF-tractable; at sf10 use
-    scripts/cc_oracle_replay.py semantics (same intractability class as
-    dedup_clusters)."""
+    recursive-CTE transitive closure, which is in dedup_clusters'
+    intractability class at large scale factors; the sf1/sf10 replay
+    is recorded in PLANS.md "Round-7: scale ladder for the r6-late
+    trio"."""
     from ..operators.dedup import connected_components, minhash_candidate_pairs
 
     d = _t(spark, sf_dir, "documents")
@@ -8045,7 +8047,7 @@ def sequence_pack_chunks(spark, sf_dir):
 # report go first, then the always-reverified core-parity tier, then the
 # remaining queries ordered by how stale their newest driver row is
 # (oldest round first), ties broken by ascending measured cost
-# (scripts/time_queries.py at sf0.01) so a budget cutoff drops the fewest
+# (_COST below, sf0.01) so a budget cutoff drops the fewest
 # checks.  A hand-maintained list here went stale for two rounds straight
 # and hid five broken queries from the driver — never again.
 
@@ -8067,8 +8069,8 @@ ORACLE_HEAVY = [
     "minhash_precision_eval",
     "dedup_ngram_jaccard",
     "dedup_clusters",
-    # quadratic cross-algorithm oracle: fine through sf1, use
-    # scripts/simhash_pairs_replay.py at sf10
+    # quadratic cross-algorithm oracle: fine through sf1; the sf10 replay
+    # is in PLANS.md "Round-7 continuation: SimHash pair materializer"
     "simhash_hamming_pairs",
     # embeds the same quadratic SimHash CTE as its truth side
     "minhash_recall_eval",
@@ -8163,7 +8165,7 @@ _CORE = [
 ]
 
 _COST = {  # seconds at sf0.01, local[32] - full min-of-3 refresh,
-    # quiet host, r11 (scripts/time_queries.py x3, element-wise min)
+    # quiet host, r11 (three registry sweeps, element-wise min)
     "agg_approx_distinct": 1.91, "agg_approx_percentile": 0.321,
     "agg_count_distinct": 0.305, "agg_cube_part": 0.311,
     "agg_grouping_sets": 0.338, "agg_percentiles": 0.296,

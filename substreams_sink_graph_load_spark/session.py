@@ -75,13 +75,6 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             f"{_parent}{os.pathsep}{_pp}" if _pp else _parent
         )
-    # transformWithStateInPandas workers import google.protobuf; when the
-    # real runtime is absent, put the clean-room shim on PYTHONPATH now,
-    # while the JVM (and thus every Python worker) can still inherit it.
-    from . import protoshim
-
-    protoshim.activate()
-
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:

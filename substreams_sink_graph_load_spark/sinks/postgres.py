@@ -136,37 +136,28 @@ def run_sql(dsn: str, sql: str) -> list[tuple[str, ...]]:
     return [tuple(line.split("\x1f")) for line in out.stdout.splitlines()]
 
 
-def _psql_copy(dsn: str, copy_sql: str, path: str) -> None:
-    """One COPY FROM STDIN through the psql CLI, file streamed on stdin."""
-    with open(path, "rb") as fh:
-        res = subprocess.run(
-            ["psql", dsn, "-v", "ON_ERROR_STOP=1", "-X", "-q", "-c", copy_sql],
-            stdin=fh, capture_output=True,
-        )
-    if res.returncode != 0:
-        raise RuntimeError(
-            f"psql COPY of {path!r} failed: {res.stderr.decode(errors='replace')}"
-        )
-
-
 def _psql_copy_many(dsn: str, copy_sql: str, paths: Sequence[str]) -> None:
     """COPY many files over ONE psql process/connection: each file becomes
     a client-side ``\\copy`` meta-command on stdin.  One subprocess + one
     connection per task, like the psycopg path and the reference's libpq
-    loop — the per-file process spawn of :func:`_psql_copy` dominated the
-    measured injection rate at bundle-file granularity (scripts/
-    throughput_copy.py: 1000-row bundles made COPY *slower* than batched
-    INSERT until this)."""
+    loop — a process spawn per file dominated the measured injection rate
+    at bundle-file granularity (PLANS.md "r9: COPY sink measured against
+    the reference's one performance claim": 1000-row bundles made COPY
+    *slower* than batched INSERT until this).
+
+    The task's files load in ONE transaction (``BEGIN``/``COMMIT`` under
+    ``ON_ERROR_STOP``): a failed file rolls back the files before it, so
+    a task Spark retries after a COPY error does not load them twice."""
     # COPY ... FROM STDIN ... -> \copy ... from '<path>' ...
     head, _, opts = copy_sql.partition(" FROM STDIN ")
-    script = "".join(
+    script = "BEGIN;\n" + "".join(
         "\\copy "
         + head[len("COPY "):]
-        + f" from '{p}' "
+        + " from '" + p.replace("'", "''") + "' "
         + opts
         + "\n"
         for p in paths
-    )
+    ) + "COMMIT;\n"
     res = subprocess.run(
         ["psql", dsn, "-v", "ON_ERROR_STOP=1", "-X", "-q"],
         input=script.encode(), capture_output=True,

@@ -156,54 +156,6 @@ def parse_change_lines(raw: DataFrame) -> DataFrame:
     )
 
 
-def parse_change_lines_stream(raw: DataFrame) -> DataFrame:
-    """:func:`parse_change_lines` for a fully-STREAMING text source, where
-    the per-file ``row_number`` window is unsupported (and so is
-    ``monotonically_increasing_id`` — neither runs on a streaming
-    DataFrame).  The dense ``_line_no`` is replaced by the pair
-    ``(seq, sub_seq)``: ``seq = _bstart`` is the scan split's byte offset
-    within its file, and ``sub_seq`` is a per-scan-partition running row
-    index assigned by an Arrow-batched ``mapInPandas`` stage (rows
-    iterate a file split in byte order, and a (file, split) pair lives in
-    exactly one scan partition, so the counter ascends in line order
-    wherever it is ever compared).  ``(block_num, seq, sub_seq)`` then
-    totals event order exactly like ``(block_num, line_no)`` does — a
-    block never spans files, and within a file the split offset then the
-    in-split index recover byte order.  Values are non-dense (ordering
-    keys, not line numbers), which the TWS fold only ever sorts by."""
-    import pandas as pd  # noqa: F401 (mapInPandas batch type)
-
-    bstart = (
-        F.col("_bstart") if "_bstart" in raw.columns else F.lit(0).cast("long")
-    )
-    src = raw.select("value", bstart.alias("seq"))
-
-    def _number(batches):
-        i = 0
-        for pdf in batches:
-            pdf = pdf.assign(sub_seq=range(i, i + len(pdf)))
-            i += len(pdf)
-            yield pdf
-
-    numbered = src.mapInPandas(
-        _number, "value string, seq long, sub_seq long"
-    )
-    parsed = numbered.select(
-        F.from_json("value", CHANGE_JSON_SCHEMA).alias("j"),
-        "seq",
-        "sub_seq",
-    )
-    return parsed.select(
-        F.col("j.block_num").alias("block_num"),
-        F.col("j.entity_change.entity").alias("entity"),
-        F.col("j.entity_change.id").alias("id"),
-        F.col("j.entity_change.operation").alias("operation"),
-        F.col("j.entity_change.fields").alias("fields"),
-        F.col("seq"),
-        F.col("sub_seq"),
-    )
-
-
 def _candidates(f: Field, originals: list[str]) -> list[str]:
     """Event field names arrive un-normalized (camelCase).  The reference
     normalizes then matches (entity.go:60-64); we match the schema's
@@ -246,13 +198,10 @@ def typed_extract(
     changes: DataFrame,
     desc: EntityDesc,
     originals: list[str] | None = None,
-    extra_cols: list[str] | None = None,
 ) -> DataFrame:
     """Flatten raw change rows into one typed column per declared field.
 
     NULL column == field absent from the event (drives the SCD-2 overlay).
-    ``extra_cols`` passes ordering/metadata columns through untouched
-    (e.g. the streaming chain's ``sub_seq`` tiebreaker).
     """
     originals = originals or []
     fields = [f for f in desc.ordered_fields() if f.name != "id"]
@@ -261,7 +210,6 @@ def typed_extract(
         "seq",
         "id",
         "operation",
-        *(extra_cols or []),
         *[_extract_field(f, originals) for f in fields],
     )
 

@@ -310,40 +310,6 @@ PROTO_PARSED_SCHEMA = T.StructType(
 )
 
 
-_JVM_PROTOBUF_OK: bool | None = None
-
-
-def jvm_protobuf_available(spark) -> bool:
-    """True when the spark-protobuf module is usable in this session.
-
-    The Python API (``pyspark.sql.protobuf.functions``) always imports;
-    the JVM classes ship in the separate spark-protobuf jar, absent from
-    plain pip installs (and from this sandbox).  Probe by resolving a
-    tiny from_protobuf plan against the hand-built descriptor — analysis
-    raises when the jar is missing.  Cached per process."""
-    global _JVM_PROTOBUF_OK
-    if _JVM_PROTOBUF_OK is None:
-        try:
-            from pyspark.sql.protobuf.functions import from_protobuf
-
-            from .proto_descriptor import (
-                MESSAGE_FULL_NAME,
-                entity_changes_descriptor_set,
-            )
-
-            spark.range(1).select(
-                from_protobuf(
-                    F.lit(b"").alias("p"),
-                    MESSAGE_FULL_NAME,
-                    binaryDescriptorSet=entity_changes_descriptor_set(),
-                )
-            ).collect()
-            _JVM_PROTOBUF_OK = True
-        except Exception:
-            _JVM_PROTOBUF_OK = False
-    return _JVM_PROTOBUF_OK
-
-
 _JSON_UDF_NAME = "entity_changes_json"
 _JSON_UDF_CLASS = "sparkgraft.EntityChangesJsonUdf"
 _JSON_UDF_JAR = "entity-changes-json-udf.jar"
@@ -405,8 +371,8 @@ def parse_change_protobuf_javaudf(raw: DataFrame) -> DataFrame:
     (JVM) -> ``from_json`` (JVM) -> posexplode — no Python worker in the
     data path and NO spark-protobuf jar dependency, so this route runs
     in any session with a JDK (the sandbox included), not just clusters
-    that ship the connector jar.  Same output schema as the other two
-    routes (PROTO_PARSED_SCHEMA); caller must have registered the UDF
+    that ship the connector jar.  Same output schema as the Python
+    codec (PROTO_PARSED_SCHEMA); caller must have registered the UDF
     via :func:`jvm_udf_decode_available`.
 
     The intermediate JSON costs one string materialization per payload —
@@ -439,104 +405,6 @@ def parse_change_protobuf_javaudf(raw: DataFrame) -> DataFrame:
     )
 
 
-def _typed_scalar_col(v) -> F.Column:
-    """Map a JVM-decoded Value struct to the ``Typed`` scalar struct shape
-    (_SCALAR_TYPED_PY): oneof members are NULL unless set, bytes render
-    as padded base64 exactly like the wire codec's output."""
-    return F.struct(
-        v["string"].alias("String_"),
-        v["int32"].alias("Int32"),
-        v["bigint"].alias("Bigint"),
-        v["bigdecimal"].alias("Bigdecimal"),
-        F.base64(v["bytes"]).alias("Bytes"),
-        v["bool"].alias("Boolean"),
-        F.lit(None).cast("double").alias("Float"),
-    )
-
-
-def parse_change_protobuf_jvm(raw: DataFrame) -> DataFrame:
-    """JVM-side decode of ``(block_num, payload[, _file, seq])`` wire rows
-    via spark-protobuf's ``from_protobuf`` — same output schema as the
-    Python codec (PROTO_PARSED_SCHEMA), no Python in the data path.
-
-    This is the 100 TB shape for S2 (ref sinker.go:213-215 decodes with
-    generated Go bindings): the whole decode stays in the JVM, driven by
-    the hand-serialized descriptor (proto_descriptor.py).  Requires the
-    spark-protobuf jar; gate with :func:`jvm_protobuf_available` or call
-    :func:`parse_change_protobuf` with ``method="auto"``.
-
-    ``recursive.fields.max.depth`` bounds the Value->Array->Value
-    recursion at the one nesting level the engine's typed schema carries
-    (arrays of scalars — the reference model has no deeper shape);
-    ``enums.as.ints`` keeps ``operation`` an int like the wire codec."""
-    from pyspark.sql.protobuf.functions import from_protobuf
-
-    from .proto_descriptor import (
-        MESSAGE_FULL_NAME,
-        entity_changes_descriptor_set,
-    )
-
-    has_file = "_file" in raw.columns
-    has_seq = "seq" in raw.columns
-    msg = from_protobuf(
-        "payload",
-        MESSAGE_FULL_NAME,
-        binaryDescriptorSet=entity_changes_descriptor_set(),
-        options={"enums.as.ints": "true", "recursive.fields.max.depth": "2"},
-    )
-    ex = raw.select(
-        "block_num",
-        (F.col("_file") if has_file else F.lit(None).cast("string")).alias("_file"),
-        (F.col("seq") if has_seq else F.col("block_num")).cast("long").alias("seq"),
-        F.posexplode(msg["entity_changes"]).alias("_pos", "_c"),
-    )
-    c = F.col("_c")
-    fields_col = F.transform(
-        c["fields"],
-        lambda f: F.struct(
-            f["name"].alias("name"),
-            F.when(
-                f["new_value"].isNotNull(),
-                F.struct(
-                    F.struct(
-                        *(
-                            [
-                                _typed_scalar_col(f["new_value"])[sf.name].alias(
-                                    sf.name
-                                )
-                                for sf in _SCALAR_TYPED_PY.fields
-                            ]
-                            + [
-                                F.when(
-                                    f["new_value"]["array"].isNotNull(),
-                                    F.struct(
-                                        F.transform(
-                                            f["new_value"]["array"]["value"],
-                                            lambda q: F.struct(
-                                                _typed_scalar_col(q).alias("Typed")
-                                            ),
-                                        ).alias("value")
-                                    ),
-                                ).alias("Array")
-                            ]
-                        )
-                    ).alias("Typed")
-                ),
-            ).alias("new_value"),
-        ),
-    )
-    return ex.select(
-        F.col("block_num").cast("long"),
-        c["entity"].alias("entity"),
-        c["id"].alias("id"),
-        c["operation"].cast("int").alias("operation"),
-        fields_col.alias("fields"),
-        "_file",
-        (F.col("_pos") + 1).cast("int").alias("_line_no"),
-        "seq",
-    )
-
-
 def parse_change_protobuf(raw: DataFrame, method: str = "auto") -> DataFrame:
     """Decode ``(block_num, payload[, _file, seq])`` wire rows into the same
     row shape :func:`..sources.jsonl.parse_change_lines` produces, one row
@@ -546,15 +414,9 @@ def parse_change_protobuf(raw: DataFrame, method: str = "auto") -> DataFrame:
     runtime-compiled wire-decoder UDF (:func:`parse_change_protobuf_javaudf`,
     JDK-gated, no connector jar needed, differential-tested bit-for-bit
     against the Python codec incl. the truncation error contract);
-    ``"jvm"`` opts into the spark-protobuf connector route
-    (:func:`parse_change_protobuf_jvm`) — OPTIONAL, never exercised in
-    this sandbox (no connector jar has ever been stageable), so ``auto``
-    deliberately does NOT prefer it: an auto ladder must not route
-    production decode through a rung that has never executed anywhere.
     ``"python"`` is the Arrow-batched wire codec below.  ``"auto"``
-    (default) = javaudf when a JDK is present, else the Python codec —
-    every deployment gets the strongest TESTED no-Python decode, and a
-    bare session still works.
+    (default) = javaudf when a JDK is present, else the Python codec, so
+    a bare session still works.
 
     ``seq`` orders changes globally; absent, ``block_num`` is used (wire
     payloads are one-per-block, already totally ordered by block).  Change
@@ -562,10 +424,8 @@ def parse_change_protobuf(raw: DataFrame, method: str = "auto") -> DataFrame:
     reference's ``for _, change := range entityChanges.EntityChanges``
     (sinker.go:242).
     """
-    if method not in ("auto", "jvm", "javaudf", "python"):
+    if method not in ("auto", "javaudf", "python"):
         raise ValueError(f"unknown protobuf decode method {method!r}")
-    if method == "jvm":
-        return parse_change_protobuf_jvm(raw)
     if method == "javaudf" or (
         method == "auto" and jvm_udf_decode_available(raw.sparkSession)
     ):

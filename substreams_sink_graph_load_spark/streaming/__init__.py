@@ -4,45 +4,5 @@ SCD-2 with cross-batch open-version state.
 """
 
 from .run import StreamingSink, run_stream
-from .stateful import stateful_versions
-from .windows import sessionized_event_counts, windowed_event_counts
 
-
-def rocksdb_state_conf(
-    bounded_memory_mb: int | None = 1024,
-) -> dict[str, str]:
-    """Recommended state-store config for long-running stateful queries
-    (SURVEY §2.10 T4: mutable-entity state is unbounded without FINAL
-    eviction — the default HDFS-backed in-memory store OOMs first).
-
-    Pass to ``get_spark(extra_conf=rocksdb_state_conf())``: RocksDB keeps
-    per-id open versions on local SSD with changelog checkpointing, and the
-    optional bounded-memory knob caps block-cache + memtable usage.
-    """
-    conf = {
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        ),
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
-        "spark.sql.streaming.stateStore.rocksdb.compactOnCommit": "false",
-    }
-    if bounded_memory_mb is not None:
-        conf.update(
-            {
-                "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage": "true",
-                "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB": str(
-                    bounded_memory_mb
-                ),
-            }
-        )
-    return conf
-
-
-__all__ = [
-    "StreamingSink",
-    "rocksdb_state_conf",
-    "run_stream",
-    "sessionized_event_counts",
-    "stateful_versions",
-    "windowed_event_counts",
-]
+__all__ = ["StreamingSink", "run_stream"]

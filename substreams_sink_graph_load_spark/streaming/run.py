@@ -158,180 +158,13 @@ class StreamingSink:
             res = res.unionByName(df)
         return res
 
-    def write_last_block(self, dest_dir: str, block: int, hash_: str = "") -> str:
-        return write_last_block(dest_dir, block, hash_)
-
 
 def write_last_block(dest_dir: str, block: int, hash_: str = "") -> str:
-    """``last_block.txt`` marker (ref sinker.go:167-180) — shared by both
-    state engines."""
+    """``last_block.txt`` marker (ref sinker.go:167-180)."""
     path = os.path.join(dest_dir, "last_block.txt")
     with open(path, "w") as fh:
         fh.write(f"{block}:{hash_}\n")
     return path
-
-
-def _tws_versions(
-    spark: SparkSession,
-    stream: DataFrame,
-    desc: EntityDesc,
-    workdir: str,
-    checkpoint: str,
-    stop_block: int,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """The transformWithStateInPandas production path: the per-id SCD-2
-    fold runs INCREMENTALLY in Spark's RocksDB state store — O(batch) per
-    trigger — instead of the foreachBatch replay of (state ⊎ batch),
-    which re-windows the accumulated open state every microbatch
-    (O(open-state) per trigger).  Closed/finalized versions append to a
-    parquet streaming sink (exactly-once via the sink's commit log);
-    still-open versions are recovered AFTER the run through Spark's
-    state-store reader (``format("statestore")``) — the state store IS
-    the open-version table, so no flush event or state-dir hand-off is
-    needed.  Returns the same (id, block_range_start, block_range_end,
-    emit_block, *fields) frame StreamingSink.flush() produces."""
-    from ..sources.jsonl import parse_change_lines_stream, typed_extract
-    from .stateful import (
-        OUTPUT_SCHEMA_EMIT,
-        ROCKSDB_PROVIDER,
-        stateful_versions_tws_emit,
-    )
-
-    field_cols = [f.name for f in desc.ordered_fields() if f.name != "id"]
-    parsed = parse_change_lines_stream(stream).where(
-        F.col("block_num") < stop_block
-    )
-    events = typed_extract(
-        parsed, desc, originals=list(desc.fields), extra_cols=["sub_seq"]
-    )
-    typed_fields = {f.name: events.schema[f.name].dataType for f in
-                    desc.ordered_fields() if f.name != "id"}
-    changes = events.select(
-        "id",
-        "block_num",
-        "seq",
-        "sub_seq",
-        "operation",
-        F.to_json(
-            F.struct(*field_cols), {"ignoreNullFields": "true"}
-        ).alias("fields_json"),
-    )
-
-    emitted_dir = os.path.join(workdir, "emitted_tws")
-    # the stateful operator's partition count is captured at the FIRST
-    # query start and frozen into the checkpoint — it is the number of
-    # RocksDB instances maintained (and Python state workers launched)
-    # EVERY trigger, so it is the TWS path's main local-overhead lever:
-    # ~cores for a single-node run, thousands for the 100 TB deployment
-    # (set it on the first run; later runs inherit the checkpoint's)
-    # the changelog-checkpointing default below needs Spark >= 3.4
-    # (SPARK-42792); TWS itself needs 4.0 — assert the stronger bound so
-    # a downlevel runtime fails loudly here, not with a silent conf no-op
-    major = int(spark.version.split(".", 1)[0])
-    if major < 4:
-        raise RuntimeError(
-            f"transformWithStateInPandas path requires Spark >= 4.0 "
-            f"(running {spark.version}); use the foreachBatch path"
-        )
-    overrides = {
-        "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
-        # Changelog checkpointing: commit appends a changelog instead of
-        # zipping+syncing a full RocksDB snapshot every trigger (snapshots
-        # move to the background maintenance thread).  Profiled r10
-        # (scripts/profile_tws.py, sf0.1 x 21 triggers): wall 168.5 ->
-        # 139.4s (0.83x), saveZipFiles 30.0 -> 1.8s summed per trigger,
-        # byte-identical CSV output.  Respect an explicit session setting
-        # if the caller already chose.  The conf exists on Spark >= 3.4
-        # only (SPARK-42792) — this package requires Spark 4 (TWS itself
-        # is 4.0+), enforced below rather than assumed (r10 advice item
-        # 4).  Spark >= 3.4 reads BOTH formats and transparently upgrades
-        # a pre-existing snapshot-mode checkpoint on the next commit
-        # (format compatibility is per-version-file, not per-checkpoint),
-        # so resuming an older checkpoint under this default is safe —
-        # soak-tested with a mid-stream kill + resume (PLANS.md r11).
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled": spark.conf.get(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
-        ),
-    }
-    if state_partitions is not None:
-        overrides["spark.sql.shuffle.partitions"] = str(state_partitions)
-    prior = {k: spark.conf.get(k, None) for k in overrides}
-    for k, v in overrides.items():
-        spark.conf.set(k, v)
-    try:
-        query = (
-            stateful_versions_tws_emit(changes)
-            .writeStream.format("parquet")
-            .option("path", emitted_dir)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-    closed = spark.read.schema(OUTPUT_SCHEMA_EMIT).parquet(emitted_dir)
-    try:
-        st = (
-            spark.read.format("statestore")
-            .option("stateVarName", "open_version")
-            .load(checkpoint)
-        )
-        opens = st.select(
-            F.col("key.id").alias("id"),
-            F.col("value.start_block").alias("block_range_start"),
-            F.lit(None).cast("long").alias("block_range_end"),
-            F.col("value.fields_json").alias("fields_json"),
-            F.lit(None).cast("long").alias("emit_block"),
-        )
-        raw = closed.unionByName(opens)
-    except Exception:
-        # no committed state (e.g. zero batches ran) — closed rows only
-        raw = closed
-    if raw.isEmpty():
-        raise ValueError("nothing consumed: no emitted rows and no state")
-
-    # fields_json -> typed columns.  from_json has no BinaryType support;
-    # binary fields read back as the base64 string to_json wrote, then
-    # unbase64 restores the bytes.
-    from pyspark.sql.types import (
-        BinaryType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    read_schema = StructType(
-        [
-            StructField(n, StringType() if isinstance(t, BinaryType) else t)
-            for n, t in typed_fields.items()
-        ]
-    )
-    typed = raw.withColumn("_f", F.from_json("fields_json", read_schema))
-    return typed.select(
-        "id",
-        "block_range_start",
-        "block_range_end",
-        "emit_block",
-        *[
-            (
-                F.unbase64(F.col(f"_f.{n}"))
-                if isinstance(t, BinaryType)
-                else F.col(f"_f.{n}")
-            ).alias(n)
-            for n, t in typed_fields.items()
-        ],
-    )
 
 
 def run_stream(
@@ -344,51 +177,25 @@ def run_stream(
     bundle_size: int = 1000,
     workdir: str | None = None,
     max_files_per_trigger: int = 1,
-    stateful: str = "auto",
-    state_partitions: int | None = None,
 ) -> list[str]:
     """Streaming equivalent of :func:`..tocsv.tocsv`: consume the entity's
     JSONL directory as a file stream (availableNow), maintain incremental
     SCD-2 state across microbatches, and write the same bundled CSV files.
 
-    ``stateful`` selects the state engine for mutable entities:
-
-    - ``"tws"`` — transformWithStateInPandas on the RocksDB state store:
-      the per-id fold is incremental, O(batch) per trigger, with open
-      versions recovered from the state store itself (the production
-      path; requires a google.protobuf runtime — the bundled protoshim
-      suffices).
-    - ``"replay"`` — the foreachBatch (state ⊎ batch) window replay:
-      one code path with batch, no state-store dependency, but each
-      trigger re-folds the accumulated open state (O(open-state)).
-    - ``"auto"`` (default) — ``tws`` when available, else ``replay``.
-
-    Immutable entities carry no state and always use the direct path.
-    Both engines produce byte-identical bundled CSV (pinned by
-    tests/test_streaming.py).  ``state_partitions`` sets the stateful
-    operator's partition count on the FIRST run against a checkpoint
-    (frozen thereafter): the per-trigger TWS overhead scales with it in
-    local mode, so size it near the core count locally and in the
-    thousands on a real cluster.
+    Each trigger runs :class:`StreamingSink`'s foreachBatch replay of
+    (open state ⊎ batch) through the batch SCD-2 window, so the output is
+    byte-identical to batch ``tocsv`` (pinned by tests/test_streaming.py).
+    Immutable entities carry no state and emit every CREATE directly.
 
     On a live deployment the trigger would be ``processingTime`` and the
     source a custom DataSourceStreamReader over gRPC (SURVEY §2.1 S1); the
     file-stream shape, state hand-off, and output contract are identical.
     """
-    if stateful not in ("auto", "tws", "replay"):
-        raise ValueError(f"unknown stateful mode {stateful!r}")
     descs = parse_schema_file(schema_file)
     if entity not in descs:
         raise ValueError(f"cannot find entity {entity!r} in {schema_file!r}")
     desc = descs[entity]
     workdir = workdir or os.path.join(dest_dir, f"_work_{entity}")
-    checkpoint = os.path.join(workdir, "checkpoint")
-
-    use_tws = not desc.immutable and stateful != "replay"
-    if use_tws and stateful == "auto":
-        from .stateful import tws_available
-
-        use_tws = tws_available()
 
     stream = (
         spark.readStream.format("text")
@@ -400,22 +207,15 @@ def run_stream(
             F.col("_metadata.file_block_start").alias("_bstart"),
         )
     )
-
-    if use_tws:
-        versions = _tws_versions(
-            spark, stream, desc, workdir, checkpoint, stop_block,
-            state_partitions=state_partitions,
-        )
-    else:
-        sink = StreamingSink(spark, desc, workdir, stop_block)
-        query = (
-            stream.writeStream.foreachBatch(sink.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        versions = sink.flush()
+    sink = StreamingSink(spark, desc, workdir, stop_block)
+    query = (
+        stream.writeStream.foreachBatch(sink.process_batch)
+        .option("checkpointLocation", os.path.join(workdir, "checkpoint"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    versions = sink.flush()
     if desc.immutable:
         last_block = versions.agg(F.max("block$")).collect()[0][0] or 0
         routed = (

@@ -29,7 +29,7 @@ from substreams_sink_graph_load_spark.sinks.ddl import (
     extract_index_sql,
 )
 from substreams_sink_graph_load_spark.sinks.postgres import (
-    _psql_copy,
+    _psql_copy_many,
     build_copy_sql,
     inject_csv_files,
     list_candidate_files,
@@ -198,7 +198,7 @@ def test_force_not_null_live(pg_dsn, tmp_path):
     p.write_text('id,block_range,name,note\nx1,"[1,)",,\n')
     sql = build_copy_sql("fnn", "t", ["id", "block_range", "name", "note"],
                          ["id", "block_range", "name"])
-    _psql_copy(pg_dsn, sql, str(p))
+    _psql_copy_many(pg_dsn, sql, [str(p)])
     rows = run_sql(
         pg_dsn,
         "SELECT name = '', note IS NULL FROM \"fnn\".\"t\" WHERE id = 'x1'",
@@ -210,7 +210,7 @@ def test_force_not_null_live(pg_dsn, tmp_path):
     p2 = tmp_path / "0000001000-0000001999.csv"
     p2.write_text('id,block_range,name,note\nx2,"[1,)",,\n')
     with pytest.raises(RuntimeError, match="violates not-null|psql COPY"):
-        _psql_copy(pg_dsn, bare, str(p2))
+        _psql_copy_many(pg_dsn, bare, [str(p2)])
 
 
 def test_index_lifecycle_live(pg_dsn):
@@ -252,7 +252,38 @@ def test_copy_error_surfaces(pg_dsn, tmp_path):
     p = tmp_path / "bad.csv"
     p.write_text("id,n\nrow1,notanumber\n")
     with pytest.raises(RuntimeError, match="invalid input syntax"):
-        _psql_copy(pg_dsn, build_copy_sql("err", "t", ["id", "n"], []), str(p))
+        _psql_copy_many(
+            pg_dsn, build_copy_sql("err", "t", ["id", "n"], []), [str(p)]
+        )
+
+
+def test_copy_task_is_one_transaction(pg_dsn, tmp_path):
+    """A task's files load in one transaction: when a later file fails,
+    the rows of the files before it roll back, so a retried task cannot
+    load them twice."""
+    run_sql(pg_dsn, 'CREATE SCHEMA IF NOT EXISTS "txn"')
+    run_sql(pg_dsn, 'CREATE TABLE "txn"."t" ("id" text NOT NULL, "n" integer)')
+    good = tmp_path / "good.csv"
+    good.write_text("id,n\nrow1,1\nrow2,2\n")
+    bad = tmp_path / "bad.csv"
+    bad.write_text("id,n\nrow3,notanumber\n")
+    sql = build_copy_sql("txn", "t", ["id", "n"], [])
+    with pytest.raises(RuntimeError, match="invalid input syntax"):
+        _psql_copy_many(pg_dsn, sql, [str(good), str(bad)])
+    assert run_sql(pg_dsn, 'SELECT count(*) FROM "txn"."t"') == [("0",)]
+
+
+def test_copy_path_with_single_quote(pg_dsn, tmp_path):
+    """A file under a directory whose name contains ``'`` loads: the path
+    is quoted for psql's ``\\copy ... from '<path>'``."""
+    run_sql(pg_dsn, 'CREATE SCHEMA IF NOT EXISTS "quote"')
+    run_sql(pg_dsn, 'CREATE TABLE "quote"."t" ("id" text NOT NULL, "n" integer)')
+    d = tmp_path / "o'brien"
+    d.mkdir()
+    p = d / "0000000000-0000000999.csv"
+    p.write_text("id,n\nq1,7\n")
+    _psql_copy_many(pg_dsn, build_copy_sql("quote", "t", ["id", "n"], []), [str(p)])
+    assert run_sql(pg_dsn, 'SELECT id, n FROM "quote"."t"') == [("q1", "7")]
 
 
 def test_extract_index_cli_live(pg_dsn, tmp_path, monkeypatch):

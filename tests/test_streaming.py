@@ -11,7 +11,7 @@ import time
 
 import pytest
 
-from test_pipeline_e2e import ACCOUNT_EVENTS, TRANSFER_EVENTS, SDL, read_csv
+from test_pipeline_e2e import ACCOUNT_EVENTS, TRANSFER_EVENTS, SDL, ev, read_csv
 import json
 
 from substreams_sink_graph_load_spark.streaming import run_stream
@@ -36,33 +36,22 @@ def fixture_dirs(tmp_path):
     return str(src), str(tmp_path)
 
 
-def _engines():
-    """Both state engines when TWS can run here, else replay only."""
-    from substreams_sink_graph_load_spark.streaming.stateful import (
-        tws_available,
-    )
-
-    return ["replay", "tws"] if tws_available() else ["replay"]
-
-
-def _run_both(spark, src, base, entity, schema_file, stop_block,
-              stateful="auto"):
+def _run_both(spark, src, base, entity, schema_file, stop_block):
     batch_dest = os.path.join(base, "batch_csv")
     stream_dest = os.path.join(base, "stream_csv")
     tocsv(spark, src, batch_dest, entity, schema_file, stop_block=stop_block, bundle_size=1000)
     files = run_stream(
         spark, src, stream_dest, entity, schema_file,
-        stop_block=stop_block, bundle_size=1000, stateful=stateful,
+        stop_block=stop_block, bundle_size=1000,
     )
     return batch_dest, stream_dest, files
 
 
-@pytest.mark.parametrize("engine", _engines())
-def test_stream_equals_batch_mutable(spark, fixture_dirs, engine):
+def test_stream_equals_batch_mutable(spark, fixture_dirs):
     src, base = fixture_dirs
     schema_file = os.path.join(base, "schema.graphql")
     batch_dest, stream_dest, files = _run_both(
-        spark, src, base, "account", schema_file, 3000, stateful=engine
+        spark, src, base, "account", schema_file, 3000
     )
     names = [os.path.basename(f) for f in files]
     assert names == [
@@ -89,24 +78,20 @@ def test_stream_equals_batch_immutable(spark, fixture_dirs):
         assert read_csv(stream_dest, "transfer", n) == read_csv(batch_dest, "transfer", n)
 
 
-@pytest.mark.parametrize("engine", _engines())
-def test_stream_stop_block(spark, fixture_dirs, engine):
+def test_stream_stop_block(spark, fixture_dirs):
     src, base = fixture_dirs
     schema_file = os.path.join(base, "schema.graphql")
     _, stream_dest, files = _run_both(
-        spark, src, base, "account", schema_file, 2500, stateful=engine
+        spark, src, base, "account", schema_file, 2500
     )
     assert os.path.basename(files[-1]) == "0000002000-0000002499.csv"
     assert 'a2,"[2200,)"' in read_csv(stream_dest, "account", "0000002000-0000002499.csv")
 
 
-@pytest.mark.parametrize("engine", _engines())
-def test_stream_resume_across_runs(spark, fixture_dirs, engine):
+def test_stream_resume_across_runs(spark, fixture_dirs):
     """T5 resume: stop after the first bundle, restart with the same
     workdir/checkpoint, deliver the rest — output must equal the batch
-    pipeline over the full log (state + file cursor both survive; on the
-    TWS engine the state lives in the RocksDB store under the checkpoint
-    and the open versions are read back through the statestore reader)."""
+    pipeline over the full log (state + file cursor both survive)."""
     import shutil
 
     src, base = fixture_dirs
@@ -120,16 +105,14 @@ def test_stream_resume_across_runs(spark, fixture_dirs, engine):
     stream_dest = os.path.join(base, "resume_csv")
     workdir = os.path.join(base, "resume_work")
     run_stream(spark, partial_src, stream_dest, "account", schema_file,
-               stop_block=3000, bundle_size=1000, workdir=workdir,
-               stateful=engine)
+               stop_block=3000, bundle_size=1000, workdir=workdir)
     # phase 2: the remaining bundles arrive; same checkpoint + state
     for n in names[1:]:
         shutil.copy(os.path.join(src, "account", n), os.path.join(d, n))
         t = time.time() + 10
         os.utime(os.path.join(d, n), (t, t))
     run_stream(spark, partial_src, stream_dest, "account", schema_file,
-               stop_block=3000, bundle_size=1000, workdir=workdir,
-               stateful=engine)
+               stop_block=3000, bundle_size=1000, workdir=workdir)
     batch_dest = os.path.join(base, "resume_batch")
     tocsv(spark, src, batch_dest, "account", schema_file,
           stop_block=3000, bundle_size=1000)
@@ -138,59 +121,77 @@ def test_stream_resume_across_runs(spark, fixture_dirs, engine):
         assert read_csv(stream_dest, "account", n) == read_csv(batch_dest, "account", n)
 
 
-def test_parse_change_lines_stream_order_key_recovers_line_order(spark, tmp_path):
-    """The window-free (block_num, seq, sub_seq) key of
-    parse_change_lines_stream must order same-block events exactly like
-    parse_change_lines' dense per-file line number — including when one
-    file is read as SEVERAL scan splits (seq = split byte offset,
-    sub_seq = in-partition row index), the case the TWS ordering
-    contract at 100 TB depends on."""
-    import json as _json
+FUZZ_SDL = """
+type Item @entity {
+  id: ID!
+  amount: BigInt
+  label: String
+  count: Int
+}
+"""
 
-    from pyspark.sql import functions as F
 
-    from substreams_sink_graph_load_spark.sources.jsonl import (
-        parse_change_lines,
-        parse_change_lines_stream,
-    )
+def _random_log(seed, n_bundles=4, bundle_size=100, per_bundle=10):
+    """Seeded block-ordered change-log over a few mutable ids: CREATE,
+    UPDATE (also on an unseen id, tolerated as a create), DELETE and
+    FINAL, with same-block runs.  Returns ({bundle file: events}, stop
+    block), the stop block falling inside the last bundle."""
+    import random
 
-    p = tmp_path / "0000000000-0000000999.jsonl"
-    n = 400
-    with open(p, "w") as fh:
-        for i in range(n):
-            fh.write(_json.dumps({
-                "entity_change": {"entity": "acc", "id": f"e{i}",
-                                  "operation": 2, "fields": []},
-                # many events share a block: line order is the tiebreaker
-                "block_num": i // 25,
-            }) + "\n")
+    rnd = random.Random(seed)
+    typed = {
+        "amount": lambda: {"Bigint": str(rnd.randint(-10**20, 10**20))},
+        "label": lambda: {"String_": rnd.choice(["x", "y,z", 'q"', ""])},
+        "count": lambda: {"Int32": rnd.randint(0, 9)},
+    }
+    live, files = set(), {}
+    for b in range(n_bundles):
+        start = b * bundle_size
+        events = []
+        for block in sorted(
+            rnd.randrange(start, start + bundle_size) for _ in range(per_bundle)
+        ):
+            id_ = rnd.choice(["i1", "i2", "i3", "i4"])
+            if id_ in live:
+                op = rnd.choice([2, 2, 3, 4])
+            else:
+                op = rnd.choice([1, 2])
+            (live.discard if op in (3, 4) else live.add)(id_)
+            fields = []
+            if op in (1, 2):
+                fields = [(n, make()) for n, make in typed.items()
+                          if rnd.random() > 0.4] or [("count", typed["count"]())]
+            events.append(ev(block, "Item", id_, op, fields))
+        files[f"{start:010d}-{start + bundle_size - 1:010d}.jsonl"] = events
+    stop = (n_bundles - 1) * bundle_size + rnd.randrange(1, bundle_size)
+    return files, stop
 
-    prior = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        # force the single file into many splits
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
-        raw = (
-            spark.read.format("text").load(str(p))
-            .select(
-                "value",
-                F.col("_metadata.file_path").alias("_file"),
-                F.col("_metadata.file_block_start").alias("_bstart"),
-            )
-        )
-        want = [
-            r["id"]
-            for r in parse_change_lines(raw)
-            .orderBy("block_num", "_line_no")
-            .collect()
-        ]
-        got = [
-            r["id"]
-            for r in parse_change_lines_stream(raw)
-            .orderBy("block_num", "seq", "sub_seq")
-            .collect()
-        ]
-        n_splits = raw.rdd.getNumPartitions()
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prior)
-    assert n_splits > 3  # the multi-split shape actually materialized
-    assert got == want == [f"e{i}" for i in range(n)]
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_stream_random_logs_equal_batch_bytes(spark, tmp_path, seed):
+    """Seeded random change-logs, one bundle file per trigger: every
+    bundled CSV run_stream writes is byte-identical to batch tocsv's,
+    including the bundle cut at a stop block inside the last bundle."""
+    files, stop = _random_log(seed)
+    schema_file = tmp_path / "schema.graphql"
+    schema_file.write_text(FUZZ_SDL)
+    d = tmp_path / "jsonl" / "item"
+    d.mkdir(parents=True)
+    now = time.time()
+    for i, (fname, events) in enumerate(sorted(files.items())):
+        with open(d / fname, "w") as fh:
+            for e in events:
+                fh.write(json.dumps(e) + "\n")
+        os.utime(d / fname, (now + i, now + i))
+    src = str(tmp_path / "jsonl")
+    batch_dest = str(tmp_path / "batch_csv")
+    stream_dest = str(tmp_path / "stream_csv")
+    want = tocsv(spark, src, batch_dest, "item", str(schema_file),
+                 stop_block=stop, bundle_size=100)
+    got = run_stream(spark, src, stream_dest, "item", str(schema_file),
+                     stop_block=stop, bundle_size=100, max_files_per_trigger=1)
+    names = [os.path.basename(f) for f in got]
+    assert names == [os.path.basename(f) for f in want]
+    assert names[-1] == f"0000000300-{stop - 1:010d}.csv"
+    for n in names:
+        assert read_csv(stream_dest, "item", n) == read_csv(batch_dest, "item", n)

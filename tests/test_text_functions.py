@@ -52,7 +52,6 @@ def test_quality_score_bounds(one):
     assert q("data row unique words here") > q("!!! ??? !!! ???")
 
 
-@pytest.mark.slow
 def test_exploded_shingles_match_word_shingles(spark):
     """The codegen (posexplode+lead) shingle path must produce exactly the
     word_shingles() set per doc — including the whole-text fallback for
