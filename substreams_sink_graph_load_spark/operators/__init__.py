@@ -18,7 +18,7 @@ from .dedup import (
     ngram_jaccard_pairs,
     simhash_sketch,
 )
-from .multimodal import attach_binary, extract_features, sample_frames
+from .multimodal import attach_binary, extract_features
 from .poi import poi_block_states, poi_chain, poi_entity_versions, poi_tocsv
 from .skew import salted_agg, salted_join
 from .graph import pagerank_ppm
@@ -53,7 +53,6 @@ __all__ = [
     "simhash_sketch",
     "attach_binary",
     "extract_features",
-    "sample_frames",
     "poi_block_states",
     "poi_chain",
     "poi_entity_versions",

@@ -369,147 +369,3 @@ def exact_rerank(
         .select("q_id", "neighbor_id", "rank")
     )
 
-
-def build_ivf_index(
-    corpus: DataFrame,
-    index_dir: str,
-    n_cells: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> None:
-    """Persist an IVF index: ``centroids.parquet`` (cell, centroid) plus
-    the corpus re-written under ``vectors/`` PARTITIONED BY cell.
-
-    Build-once-probe-many is what makes IVF pay at 100 TB: the k-means
-    fit and the full-corpus assignment run once (Lloyd's via mergeable
-    partials + broadcast-centroid batch assignment, see
-    operators/cluster.py), and every later search prunes to its probed
-    cells at the PARTITION level — the scan never touches the other
-    cells' files, which `.explain` shows as PartitionFilters.
-
-    Deterministic by construction (centroid seeds = k lowest ids), so
-    rebuilding an index from the same corpus is reproducible.
-    """
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    from .cluster import _dist2, kmeans_fit
-
-    cents = kmeans_fit(
-        corpus, n_cells, iters=iters, id_col=id_col, vec_col=emb_col
-    )
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cell int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    # assignment emits the embedding it already holds — a corpus⋈assignment
-    # self-join here would shuffle the whole corpus twice for nothing
-    data = corpus.select(id_col, emb_col)
-    out_schema = StructType(
-        data.schema.fields + [StructField("cell", IntegerType())]
-    )
-
-    def assign_vec(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            block = vec_block(batch.column(1)).astype(np.float64, copy=False)
-            cell = np.argmin(_dist2(block, cents), axis=1).astype(np.int32)
-            yield pa.record_batch(
-                [batch.column(0), batch.column(1), pa.array(cell)],
-                names=[id_col, emb_col, "cell"],
-            )
-
-    (
-        data.mapInArrow(assign_vec, out_schema)
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{index_dir}/vectors")
-    )
-
-
-def ivf_search(
-    spark,
-    index_dir: str,
-    queries: list[tuple[int, list[float]]],
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> DataFrame:
-    """Top-k cosine/dot search against a persisted IVF index.
-
-    The driver ranks the (tiny) centroid table per query and probes the
-    union of the queries' top-``nprobe`` cells with ONE partition-pruned
-    scan; scoring reuses the batched-matmul partial-top-k shape, with a
-    per-query cell mask so a vector only scores against queries that
-    probed its cell.  Returns (q_id, neighbor_id, rank).
-    """
-    if not queries:
-        raise ValueError("queries must be non-empty")
-    crows = (
-        spark.read.parquet(f"{index_dir}/centroids")
-        .orderBy("cell")
-        .collect()
-    )
-    cent = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    cells = np.array([r["cell"] for r in crows], dtype=np.int64)
-    q_ids = np.array([q[0] for q in queries], dtype=np.int64)
-    q_mat = np.array([q[1] for q in queries], dtype=np.float64)
-    # per-query probed cells: top-nprobe by (dot desc, cell asc)
-    scores = q_mat @ cent.T  # Q x C
-    order = np.lexsort((cells[None, :].repeat(len(q_ids), 0), -scores), axis=1)
-    probed = cells[order[:, :nprobe]]  # Q x nprobe
-    probe_sets = [set(map(int, row)) for row in probed]
-    all_cells = sorted({c for s in probe_sets for c in s})
-
-    vectors = spark.read.parquet(f"{index_dir}/vectors").where(
-        F.col("cell").isin(all_cells)
-    )
-
-    def partial(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            mat = vec_block(batch.column(1)).astype(np.float64, copy=False)
-            vcells = batch.column(2).to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-            dots = mat @ q_mat.T  # B x Q
-            out_q, out_id, out_d = [], [], []
-            for qi in range(len(q_ids)):
-                mask = (ids != q_ids[qi]) & np.isin(
-                    vcells, list(probe_sets[qi])
-                )
-                cand_ids, cand = ids[mask], dots[mask, qi]
-                if not len(cand):
-                    continue
-                top = _topk_tiesafe(cand, cand_ids, k)
-                out_q.append(np.full(len(top), q_ids[qi]))
-                out_id.append(cand_ids[top])
-                out_d.append(cand[top])
-            if out_q:
-                yield pa.record_batch(
-                    [
-                        pa.array(np.concatenate(out_q)),
-                        pa.array(np.concatenate(out_id)),
-                        pa.array(np.concatenate(out_d)),
-                    ],
-                    names=["q_id", "neighbor_id", "dot"],
-                )
-
-    partials = vectors.select(id_col, emb_col, "cell").mapInArrow(
-        partial, _PARTIAL_SCHEMA
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "rank")
-    )

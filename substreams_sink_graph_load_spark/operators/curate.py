@@ -2,10 +2,11 @@
 
 The composition a pretraining data team actually runs, as ONE lazy
 DataFrame DAG: PII scrub → quality gate → exact dedup → language-mixture
-temperature resampling → deterministic sharding → materialized shards +
-manifest.  Each stage is the corresponding standalone registry operator
-(pii_scrub / quality_gopher_rules / dedup_exact / mix_temperature /
-shard_manifest) applied in sequence; this module owns the ORDER and the
+temperature resampling → deterministic shard assignment, plus a
+per-shard manifest (:func:`manifest_of`).  Each stage is the
+corresponding standalone registry operator (pii_scrub /
+quality_gopher_rules / dedup_exact / mix_temperature / shard_manifest)
+applied in sequence; this module owns the ORDER and the
 hand-offs (dedup runs on the scrubbed text; mixture thresholds are
 computed on the post-gate, post-dedup language counts, so upstream
 filtering can never skew the target mixture).
@@ -15,8 +16,8 @@ is: one scan (scrub + gate + hash in the codegen stage, cached for the
 dedup join's two consumers), one 16-byte-key dedup shuffle, one
 materialization of the surviving docs (an eager localCheckpoint — the
 mixture thresholds and every later consumer re-read survivors instead
-of re-running the scrub pipeline), a 5-row broadcast for the
-thresholds, and one partitioned write.
+of re-running the scrub pipeline), and a 5-row broadcast for the
+thresholds.
 
 Determinism: every decision keys on content hashes (md5) — reruns,
 repartitionings, and input reordering produce byte-identical shards and
@@ -26,8 +27,6 @@ or shard.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -165,74 +164,12 @@ def curate(
 def manifest_of(curated: DataFrame) -> DataFrame:
     """Per-shard manifest of a :func:`curate` result: doc count, word
     volume, and an order-insensitive ``bit_xor`` digest of the doc-id
-    hashes — recomputable from the written shards, so a loader can
-    verify an export without trusting the writer."""
+    hashes — recomputable from shards written with
+    ``partitionBy("shard")``, so a loader can verify an export without
+    trusting the writer."""
     return curated.groupBy("shard").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum("n_words").cast("long").alias("sum_words"),
         F.bit_xor(h60(F.col("doc_id").cast("string"))).alias("content_digest"),
     )
 
-
-def curate_to_parquet(
-    df: DataFrame,
-    out_dir: str,
-    **curate_kwargs,
-) -> DataFrame:
-    """Materialize the curated corpus as shard-partitioned parquet and
-    return the manifest (also written to ``<out_dir>/_manifest``).
-
-    The write is ``partitionBy(shard)`` — one directory per shard, so a
-    trainer (or :func:`pack_sequences`-style packer) streams exactly the
-    shards it owns, and the shard count is the file-size knob.  The
-    manifest is computed from the SAME DataFrame lineage before the
-    write, then verified against nothing here — re-derive it from the
-    written files with ``manifest_of(spark.read.parquet(out_dir))`` to
-    audit an export end-to-end (tests do exactly that).
-    """
-    curated = curate(df, **curate_kwargs)
-    curated.write.mode("overwrite").partitionBy("shard").parquet(out_dir)
-    spark = curated.sparkSession
-    written = spark.read.parquet(out_dir)
-    manifest = manifest_of(written)
-    manifest.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "_manifest")
-    )
-    return manifest
-
-
-def curate_to_token_shards(
-    df: DataFrame,
-    out_dir: str,
-    vocab_size: int = 32768,
-    dtype: str = "uint16",
-    **curate_kwargs,
-) -> DataFrame:
-    """The END of the pipeline: raw documents -> :func:`curate` (scrub ->
-    gate -> dedup -> mixture -> shard assignment) -> deterministic
-    tokenization -> packed trainer shards (``sinks/shards.py`` .bin/.idx),
-    one call.
-
-    Plan shape: curation is one Catalyst plan ending in the shard key;
-    the ONLY additional exchange is the writer's groupBy(shard) — the
-    tokenize column rides the existing scan (pure JVM codegen).  Returns
-    the writer's manifest (per-shard counts + sha256 of the bytes on
-    disk), also written to ``<out_dir>/_manifest`` like
-    :func:`curate_to_parquet` — so a trainer can audit the export by
-    re-hashing files against the manifest, and a re-run on the same
-    corpus is byte-identical (every stage is content-hash-deterministic;
-    no RNG anywhere in the path).
-    """
-    from ..sinks.shards import hash_tokenize, write_token_shards
-
-    curated = curate(df, **curate_kwargs)
-    tok = hash_tokenize(curated, vocab_size=vocab_size)
-    manifest = write_token_shards(
-        tok, out_dir, shard_col="shard", seq_col="doc_id", dtype=dtype
-    )
-    # repartition (NOT coalesce: coalesce(1) would collapse the write
-    # stage itself to one task, serializing every shard's serialization)
-    manifest.repartition(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "_manifest")
-    )
-    return manifest.sparkSession.read.parquet(os.path.join(out_dir, "_manifest"))

@@ -1117,8 +1117,7 @@ def winnow_remove(
     30.1s at sf10 for the old shape).  The one remaining corpus-sized
     motion is the docs⋈marks doc-keyed join, SHUFFLE_HASH-pinned
     because the marks side derives from a Python relation whose planner
-    stats are unreliable (the r9 broadcast-OOM lesson); a bucketed
-    doc_id layout elides it entirely.
+    stats are unreliable (the r9 broadcast-OOM lesson).
     """
     import pyarrow as pa
 

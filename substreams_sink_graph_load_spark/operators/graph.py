@@ -79,7 +79,7 @@ def pagerank_ppm(
     repartition the AQE coalescer cannot fold away — every iteration's
     edges-side join and the final degree aggregation then ride the
     cached partitioning.  Pass None when the edges already arrive
-    usefully partitioned (the bucketed layout), or for the general path.
+    usefully partitioned, or for the general path.
     """
     if not 0 < damping_pct < 100:
         raise ValueError("damping_pct must be in (1, 99)")
@@ -177,8 +177,8 @@ def _pagerank_ppm_symmetric(
     if copartition:
         e = e.repartition(copartition, F.col("e_src"))
     # degree as a window count over the src-partitioning the edges
-    # already have (bucketed layout) or were just pinned to — one
-    # exchange TOTAL for deg + co-location, vs groupBy + join-back
+    # already have or were just pinned to — one exchange TOTAL for deg +
+    # co-location, vs groupBy + join-back
     e = e.withColumn(
         "deg",
         F.count("*")
@@ -218,44 +218,3 @@ def _pagerank_ppm_symmetric(
     e.unpersist()
     return out
 
-
-def pagerank_iteration_probe(
-    edges: DataFrame,
-    damping_pct: int = 85,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """One full (non-constant-folded) pagerank iteration, mirroring
-    :func:`pagerank_ppm` expression-for-expression WITHOUT the persist
-    and terminal eager localCheckpoint — so plan auditors can count the
-    Exchanges of the ITERATED shape (the real operator checkpoints
-    eagerly, leaving only a scan in its final explain()).  Used by
-    scripts/bucketed_audit.py and tests/test_plan_shapes.py (the r10
-    bucketed A/B it served is in PLANS.md "r10: bucketed-edges A/B on
-    graph_pagerank"); never by the query path."""
-    base = (100 - damping_pct) * (PPM // 100)
-    deg = edges.groupBy(F.col(src).alias("node")).agg(
-        F.count("*").cast("long").alias("deg")
-    )
-    e = edges.join(deg, edges[src] == deg["node"]).select(
-        F.col(src).alias("e_src"), F.col(dst).alias("e_dst"), "deg"
-    )
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .distinct()
-    )
-    ranks = nodes.withColumn("rank_ppm", F.lit(PPM).cast("long"))
-    pre = e.join(ranks, e["e_src"] == ranks["node"]).select(
-        F.col("e_dst").alias("node"),
-        F.expr(f"(rank_ppm * {damping_pct}) div (100 * deg)").alias("c"),
-    )
-    contrib = pre.groupBy("node").agg(
-        F.sum("c").cast("long").alias("in_mass")
-    )
-    return nodes.join(contrib, "node", "left").select(
-        "node",
-        (F.lit(base) + F.coalesce(F.col("in_mass"), F.lit(0)))
-        .cast("long")
-        .alias("rank_ppm"),
-    )

@@ -21,7 +21,7 @@ codecs, each implemented from its public file-format spec:
   module; returns the raw PCM sample bytes.
 - ``video/x-msvideo`` / ``video/avi`` — RIFF AVI container walk
   (``movi`` ``00dc`` chunks) with each MJPEG frame decoded through the
-  from-spec JPEG path; ``sample_video_frames`` decodes only every n-th
+  from-spec JPEG path; ``avi_frame_sample_fused`` decodes only every n-th
   frame (the sampling contract that bounds codec cost on real video).
 - ``video/mp4`` — the CONTAINER layer only: ``parse_mp4_meta`` walks
   ISO-BMFF boxes (ISO 14496-12) for dimensions / sample count /
@@ -59,7 +59,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
@@ -75,15 +74,6 @@ FEATURE_SCHEMA = StructType(
         StructField("head_sum", LongType()),
     ]
 )
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("frame_idx", LongType()),
-        StructField("frame", BinaryType()),
-    ]
-)
-
 
 def attach_binary(
     df: DataFrame,
@@ -103,66 +93,6 @@ def attach_binary(
             F.md5(payload).alias("checksum"),
         ).alias("meta"),
     )
-
-
-def attach_png(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Render each row's UTF-8 text bytes as a REAL 1-row grayscale PNG
-    payload (w = byte length, h = 1) — the encode half of the real-codec
-    roundtrip.  Same output shape as ``attach_binary``; Arrow-batched
-    mapInPandas, 1:1 rows, no shuffle.  Rows with empty text are dropped
-    (a 0-wide PNG is invalid by spec)."""
-    import hashlib
-
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("mime", StringType()),
-            StructField("payload", BinaryType()),
-            StructField(
-                "meta",
-                StructType(
-                    [
-                        StructField("n_bytes", LongType()),
-                        StructField("checksum", StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads, metas = [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                raw = t.encode("utf-8")
-                png = encode_png(raw, len(raw), 1, 1)
-                ids.append(int(i))
-                payloads.append(png)
-                metas.append(
-                    {
-                        "n_bytes": len(png),
-                        "checksum": hashlib.md5(png).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "mime": "image/png",
-                    "payload": payloads,
-                    "meta": metas,
-                }
-            )
-
-    src = df.select(id_col, text_col).where(F.length(F.col(text_col)) > 0)
-    # size-gated fan-out before the Python codec stage — the narrow-scan
-    # mechanism and the invariance argument are documented at the
-    # attach_avi site (the family's costliest codec)
-    from .ann import fan_out_narrow
-
-    src = fan_out_narrow(src, min_bytes=2_000_000)
-    return src.mapInPandas(batches, schema)
 
 
 def _paeth(a: int, b: int, c: int) -> int:
@@ -835,138 +765,6 @@ def extract_features(df: DataFrame, fake: bool = True) -> DataFrame:
     return df.mapInPandas(batches, FEATURE_SCHEMA)
 
 
-RESIZE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("payload", BinaryType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
-
-WINDOW_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("win_idx", LongType()),
-        StructField("win", BinaryType()),
-        StructField("energy", LongType()),
-    ]
-)
-
-
-def resize_payload(
-    df: DataFrame, target_bytes: int = 64, fake: bool = True
-) -> DataFrame:
-    """Image-resize plumbing: decode -> resample to a fixed-size
-    representation -> re-emit as binary.  With real codecs this is
-    decode/PIL-thumbnail/encode; the deterministic stand-in resamples the
-    decoded BYTE stream to ``target_bytes`` by even-stride selection, so
-    output size, dtype, and batch shape match what a real resize emits.
-
-    Scale: mapInPandas over Arrow batches, 1:1 rows, partitioning
-    inherited — no shuffle; binary goes Python-side ONCE per batch (the
-    decode boundary is the documented Python-unavoidable step).
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, outs, sizes = [], [], []
-            for doc_id, payload, mime in zip(
-                pdf["doc_id"], pdf["payload"], pdf["mime"]
-            ):
-                raw = decode_payload(bytes(payload), mime, fake=fake)
-                if len(raw) <= target_bytes:
-                    small = raw
-                else:
-                    # even-stride resample: index i -> floor(i*len/target)
-                    small = bytes(
-                        raw[(i * len(raw)) // target_bytes]
-                        for i in range(target_bytes)
-                    )
-                ids.append(int(doc_id))
-                outs.append(small)
-                sizes.append(len(small))
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": outs, "n_bytes": sizes}
-            )
-
-    return df.mapInPandas(batches, RESIZE_SCHEMA)
-
-
-def audio_windows(
-    df: DataFrame,
-    window_bytes: int = 32,
-    hop_bytes: int = 16,
-    fake: bool = True,
-) -> DataFrame:
-    """Audio-style overlapping windows over the decoded byte stream (the
-    STFT-frame shape: window w, hop h -> windows overlap by w-h), each
-    with an integer energy (sum of byte values) — the feature a real
-    pipeline thresholds for silence trimming.
-
-    Output fans out 1->N like sample_frames; a payload of n bytes emits
-    ceil(max(n - w, 0)/h) + 1 windows (the trailing partial window is
-    kept, as torchaudio/librosa do with their padding modes).
-    """
-    if hop_bytes <= 0 or window_bytes <= 0:
-        raise ValueError("window_bytes and hop_bytes must be positive")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, wins, energies = [], [], [], []
-            for doc_id, payload, mime in zip(
-                pdf["doc_id"], pdf["payload"], pdf["mime"]
-            ):
-                raw = decode_payload(bytes(payload), mime, fake=fake)
-                starts = list(
-                    range(0, max(len(raw) - window_bytes, 0) + 1, hop_bytes)
-                ) or [0]
-                if starts[-1] + window_bytes < len(raw):
-                    starts.append(starts[-1] + hop_bytes)  # trailing partial
-                for wi, start in enumerate(starts):
-                    chunk = raw[start : start + window_bytes]
-                    ids.append(int(doc_id))
-                    idxs.append(wi)
-                    wins.append(chunk)
-                    energies.append(int(sum(chunk)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "win_idx": idxs,
-                    "win": wins,
-                    "energy": energies,
-                }
-            )
-
-    return df.mapInPandas(batches, WINDOW_SCHEMA)
-
-
-def sample_frames(
-    df: DataFrame, frame_size: int = 64, every_n: int = 4, fake: bool = True
-) -> DataFrame:
-    """Frame sampling for video-ish payloads: split the decoded byte stream
-    into fixed-size frames and keep every ``every_n``-th.  Output explodes
-    rows (one per kept frame) — mapInPandas handles the 1->N fan-out that a
-    scalar pandas UDF cannot."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for doc_id, payload, mime in zip(
-                pdf["doc_id"], pdf["payload"], pdf["mime"]
-            ):
-                raw = decode_payload(bytes(payload), mime, fake=fake)
-                n_frames = max(1, len(raw) // frame_size)
-                for i in range(0, n_frames, every_n):
-                    ids.append(int(doc_id))
-                    idxs.append(i)
-                    frames.append(raw[i * frame_size : (i + 1) * frame_size])
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame": frames}
-            )
-
-    return df.mapInPandas(batches, FRAME_SCHEMA)
-
-
 VIDEO_FRAME_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -976,80 +774,6 @@ VIDEO_FRAME_SCHEMA = StructType(
         StructField("pix_sum", LongType()),
     ]
 )
-
-
-def attach_avi(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_frames: int = 24,
-) -> DataFrame:
-    """Render each row's text as a REAL MJPEG AVI: frame *i* is an 8x8
-    constant-gray baseline JPEG whose pixel value is byte *i* of the
-    UTF-8 text (first ``max_frames`` bytes) — the encode half of the
-    lossless video roundtrip ``encode_const_jpeg`` documents.  Same
-    output shape as ``attach_binary``; Arrow-batched mapInPandas, 1:1
-    rows, no shuffle.  Rows with empty text are dropped (a 0-frame clip
-    carries nothing to verify)."""
-    import hashlib
-
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("mime", StringType()),
-            StructField("payload", BinaryType()),
-            StructField(
-                "meta",
-                StructType(
-                    [
-                        StructField("n_bytes", LongType()),
-                        StructField("checksum", StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads, metas = [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                raw = t.encode("utf-8")[:max_frames]
-                avi = encode_avi_mjpeg(
-                    [encode_const_jpeg(b) for b in raw], 8, 8
-                )
-                ids.append(int(i))
-                payloads.append(avi)
-                metas.append(
-                    {
-                        "n_bytes": len(avi),
-                        "checksum": hashlib.md5(avi).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "mime": "video/x-msvideo",
-                    "payload": payloads,
-                    "meta": metas,
-                }
-            )
-
-    src = df.select(id_col, text_col).where(F.length(F.col(text_col)) > 0)
-    # The per-frame JPEG encode here — and the from-spec decode in the
-    # chained sample_video_frames stage, which inherits this stage's
-    # partitioning — is by far the costliest per-row compute in the
-    # multimodal family, and a small-SF documents.parquet is 1-2 row
-    # groups, so at sf1 the whole 45s codec wall ran on 2 of 32 cores
-    # (r12; same narrow-scan mechanism as the PQ fits and the text
-    # scrub).  Size-gated fan-out: never fires at production scan
-    # widths, and below the gate the exchange isn't worth it.  Row
-    # placement is results-invariant — every output is a per-doc
-    # function of (doc_id, text).
-    from .ann import fan_out_narrow
-
-    src = fan_out_narrow(src, min_bytes=2_000_000)
-    return src.mapInPandas(batches, schema)
 
 
 def _mp4_box(typ: bytes, payload: bytes) -> bytes:
@@ -1263,76 +987,6 @@ def parse_mp3_meta(data: bytes) -> dict:
     return meta
 
 
-def attach_wav(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Render each row's UTF-8 text bytes as a REAL 8-bit mono PCM WAV
-    (stdlib ``wave`` writer; unsigned 8-bit samples ARE the raw bytes,
-    so encode->decode is lossless) — the audio counterpart of
-    ``attach_png``/``attach_avi``.  Same output shape as
-    ``attach_binary``; Arrow-batched mapInPandas, 1:1 rows, no shuffle.
-    Rows with empty text are dropped (zero-frame audio carries nothing
-    to verify)."""
-    import hashlib
-    import io
-    import wave
-
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("mime", StringType()),
-            StructField("payload", BinaryType()),
-            StructField(
-                "meta",
-                StructType(
-                    [
-                        StructField("n_bytes", LongType()),
-                        StructField("checksum", StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads, metas = [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                raw = t.encode("utf-8")
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as wf:
-                    wf.setnchannels(1)
-                    wf.setsampwidth(1)
-                    wf.setframerate(16000)
-                    wf.writeframes(raw)
-                wav = buf.getvalue()
-                ids.append(int(i))
-                payloads.append(wav)
-                metas.append(
-                    {
-                        "n_bytes": len(wav),
-                        "checksum": hashlib.md5(wav).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "mime": "audio/wav",
-                    "payload": payloads,
-                    "meta": metas,
-                }
-            )
-
-    src = df.select(id_col, text_col).where(F.length(F.col(text_col)) > 0)
-    # size-gated fan-out before the Python codec stage — the narrow-scan
-    # mechanism and the invariance argument are documented at the
-    # attach_avi site (the family's costliest codec)
-    from .ann import fan_out_narrow
-
-    src = fan_out_narrow(src, min_bytes=2_000_000)
-    return src.mapInPandas(batches, schema)
-
-
 PROBE_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -1343,117 +997,6 @@ PROBE_SCHEMA = StructType(
         StructField("codec", StringType()),
     ]
 )
-
-
-def attach_mp4(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Render each row as a REAL ISO-BMFF metadata skeleton whose
-    parameters derive deterministically from the text (n_samples =
-    byte count, duration 40 ms/sample, width keyed on the first byte)
-    — the fixture generator for the moov-probe path.  Same shape as
-    ``attach_binary``; mapInPandas, 1:1, no shuffle."""
-    import hashlib
-
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("mime", StringType()),
-            StructField("payload", BinaryType()),
-            StructField(
-                "meta",
-                StructType(
-                    [
-                        StructField("n_bytes", LongType()),
-                        StructField("checksum", StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads, metas = [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                raw = t.encode("utf-8")
-                n = len(raw)
-                mp4 = encode_mp4_stub(
-                    w=16 * ((raw[0] % 16) + 1),
-                    h=144,
-                    n_samples=n,
-                    duration_ms=40 * n,
-                )
-                ids.append(int(i))
-                payloads.append(mp4)
-                metas.append(
-                    {
-                        "n_bytes": len(mp4),
-                        "checksum": hashlib.md5(mp4).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "mime": "video/mp4",
-                    "payload": payloads,
-                    "meta": metas,
-                }
-            )
-
-    src = df.select(id_col, text_col).where(F.length(F.col(text_col)) > 0)
-    # size-gated fan-out before the Python codec stage — the narrow-scan
-    # mechanism and the invariance argument are documented at the
-    # attach_avi site (the family's costliest codec)
-    from .ann import fan_out_narrow
-
-    src = fan_out_narrow(src, min_bytes=2_000_000)
-    return src.mapInPandas(batches, schema)
-
-
-def probe_video_metadata(df: DataFrame) -> DataFrame:
-    """Container-metadata triage WITHOUT decoding media: per payload,
-    walk the MP4 ``moov`` (or the AVI header for RIFF payloads) and
-    emit dimensions / sample count / duration / codec.  At 100 TB this
-    probe-first shape is how a video pipeline prunes: filter on
-    metadata (resolution floors, duration bands, codec allowlists) and
-    pay codec cost only for survivors.  mapInPandas, 1:1 rows, no
-    shuffle."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ws, hs, ns, durs, codecs = [], [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                if raw[:4] == b"RIFF":
-                    w, h, frames = decode_avi_mjpeg(raw)
-                    m = {
-                        "width": w,
-                        "height": h,
-                        "n_samples": len(frames),
-                        "duration_ms": 0,
-                        "codec": "MJPG",
-                    }
-                else:
-                    m = parse_mp4_meta(raw)
-                ids.append(int(doc_id))
-                ws.append(m["width"])
-                hs.append(m["height"])
-                ns.append(m["n_samples"])
-                durs.append(m["duration_ms"])
-                codecs.append(m["codec"])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int64"),
-                    "height": pd.Series(hs, dtype="int64"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "duration_ms": pd.Series(durs, dtype="int64"),
-                    "codec": codecs,
-                }
-            )
-
-    return df.mapInPandas(batches, PROBE_SCHEMA)
 
 
 MP3_PROBE_SCHEMA = StructType(
@@ -1467,190 +1010,32 @@ MP3_PROBE_SCHEMA = StructType(
 )
 
 
-def attach_mp3(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_frames: int = 32,
-) -> DataFrame:
-    """Render each row as a REAL MPEG-1 Layer III stream whose
-    parameters derive from the text (bitrate index keyed on the first
-    byte, mono when it is odd, one frame per text byte capped at
-    ``max_frames``, the text itself as the ID3v2 tag payload) — the
-    fixture generator for the mp3 header probe.  mapInPandas, 1:1, no
-    shuffle; empty-text rows dropped."""
-    import hashlib
-
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("mime", StringType()),
-            StructField("payload", BinaryType()),
-            StructField(
-                "meta",
-                StructType(
-                    [
-                        StructField("n_bytes", LongType()),
-                        StructField("checksum", StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads, metas = [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                raw = t.encode("utf-8")
-                mp3 = encode_mp3_stub(
-                    n_frames=min(len(raw), max_frames),
-                    bitrate_idx=(raw[0] % 14) + 1,
-                    mono=bool(raw[0] % 2),
-                    tag=raw,
-                )
-                ids.append(int(i))
-                payloads.append(mp3)
-                metas.append(
-                    {
-                        "n_bytes": len(mp3),
-                        "checksum": hashlib.md5(mp3).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "mime": "audio/mpeg",
-                    "payload": payloads,
-                    "meta": metas,
-                }
-            )
-
-    src = df.select(id_col, text_col).where(F.length(F.col(text_col)) > 0)
-    # size-gated fan-out before the Python codec stage — the narrow-scan
-    # mechanism and the invariance argument are documented at the
-    # attach_avi site (the family's costliest codec)
-    from .ann import fan_out_narrow
-
-    src = fan_out_narrow(src, min_bytes=2_000_000)
-    return src.mapInPandas(batches, schema)
-
-
-def probe_mp3_metadata(df: DataFrame) -> DataFrame:
-    """Header-walk metadata triage for MP3 payloads: bitrate / sample
-    rate / channel mode from the first frame header, frame count from
-    the length walk — media payloads never read.  mapInPandas, 1:1
-    rows, no shuffle."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, brs, srs, chs, nfs = [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                m = parse_mp3_meta(bytes(payload))
-                ids.append(int(doc_id))
-                brs.append(m["bitrate_kbps"])
-                srs.append(m["sample_rate"])
-                chs.append(m["channels"])
-                nfs.append(m["n_frames"])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "bitrate_kbps": pd.Series(brs, dtype="int64"),
-                    "sample_rate": pd.Series(srs, dtype="int64"),
-                    "channels": pd.Series(chs, dtype="int64"),
-                    "n_frames": pd.Series(nfs, dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, MP3_PROBE_SCHEMA)
-
-
-def sample_video_frames(
-    df: DataFrame, every_n: int = 3, fake: bool = True
-) -> DataFrame:
-    """Container-aware video frame sampling: walk the RIFF AVI, keep
-    every ``every_n``-th MJPEG frame, decode each kept frame through the
-    from-spec JPEG path, and emit one numeric feature row per frame
-    (pixel count, first pixel, pixel sum) — the shape a real
-    frame-embedding pipeline feeds its vision encoder.  Decoding only
-    the KEPT frames is the point of sampling: at stride n the codec cost
-    is 1/n of the clip, which at 100 TB of video is the difference
-    between feasible and not.
-
-    ``fake=True`` keeps the byte-splitter stand-in over the raw payload
-    (64-byte pseudo-frames) for mimes without a real codec.  1->N
-    fan-out via mapInPandas; partitioning inherited, no shuffle."""
-    if every_n <= 0:
-        raise ValueError("every_n must be positive")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            ids, idxs, npix, first, sums = [], [], [], [], []
-
-            def emit(doc_id: int, i: int, px: bytes) -> None:
-                ids.append(doc_id)
-                idxs.append(i)
-                npix.append(len(px))
-                first.append(px[0] if px else -1)
-                # C-speed byte sum — a Python sum() over a decoded
-                # frame's w*h*channels pixel bytes was O(pixels) of
-                # interpreter work per frame (guide §4.2)
-                sums.append(
-                    int(np.frombuffer(px, dtype=np.uint8).sum())
-                    if px
-                    else 0
-                )
-
-            for doc_id, payload, mime in zip(
-                pdf["doc_id"], pdf["payload"], pdf["mime"]
-            ):
-                raw = bytes(payload)
-                if not fake:
-                    _, _, frames = decode_avi_mjpeg(raw)
-                    for i in range(0, len(frames), every_n):
-                        emit(int(doc_id), i, decode_jpeg(frames[i]))
-                else:
-                    n_frames = max(1, len(raw) // 64)
-                    for i in range(0, n_frames, every_n):
-                        emit(int(doc_id), i, raw[i * 64 : (i + 1) * 64])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "n_pix": pd.Series(npix, dtype="int64"),
-                    "pix_first": pd.Series(first, dtype="int64"),
-                    "pix_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, VIDEO_FRAME_SCHEMA)
-
 # ---------------------------------------------------------------------------
 # Fused encode -> probe pipelines (r13, guide §8 / §4.2)
 #
-# The chained form of each multimodal query ran its attach_* writer and its
-# probe/sample/feature reader as TWO Python stages, so every payload byte
-# crossed JVM<->Python twice (out of attach, back into the probe) just to
-# produce a few numeric columns — at sf1 the mp3 pair moved ~850 MB of
-# synthetic stream bytes through pandas object columns to emit 5 longs per
-# row.  The fused operators below run the SAME writer and the SAME
-# independent reader back to back inside one mapInArrow stage: both codec
-# halves still execute per row (the writer/walker cross-check the oracle
-# relies on is intact), but the payload never leaves the Python worker and
-# the attach-side meta struct (md5 checksum) that no fused query outputs is
-# dead-column-eliminated — the cross-operator pruning Catalyst cannot do
-# through opaque Python functions.  The chained operators stay for
-# composition and are pinned equivalent by tests/test_multimodal_fused.py.
+# Run as two Python stages (a writer emitting payloads, then a reader over
+# them), every payload byte would cross JVM<->Python twice just to produce
+# a few numeric columns — at sf1 the mp3 pair moved ~850 MB of synthetic
+# stream bytes through pandas object columns to emit 5 longs per row.  Each
+# operator below runs the writer and the independent reader back to back
+# inside one mapInArrow stage: both codec halves still execute per row (the
+# writer/walker cross-check the oracle relies on is intact), but the
+# payload never leaves the Python worker.  The DuckDB oracles of the
+# multimodal_* registry queries are the reference for these rows
+# (tests/test_oracle_parity.py).
 # ---------------------------------------------------------------------------
 
 
 def _fused_src(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Shared prologue of every fused pipeline: pruned 2-column scan,
-    empty-text drop, and the same size-gated fan-out the attach_* stages
-    use (narrow small-SF scans spread across cores; never fires at
-    production scan widths)."""
+    empty-text drop, and a size-gated fan-out.  The per-row codec work
+    (the per-frame JPEG encode+decode above all) is the costliest compute
+    in the multimodal family, and a small-SF documents.parquet is 1-2 row
+    groups, so without the fan-out the whole codec wall runs on 2 cores
+    (r12; the same narrow-scan mechanism as the PQ fits and the text
+    scrub).  The gate never fires at production scan widths, and row
+    placement is results-invariant: every output is a per-doc function of
+    (doc_id, text)."""
     from .ann import fan_out_narrow
 
     src = df.select(id_col, text_col).where(F.length(F.col(text_col)) > 0)
@@ -1663,10 +1048,11 @@ def mp3_probe_fused(
     text_col: str = "text",
     max_frames: int = 32,
 ) -> DataFrame:
-    """attach_mp3 -> probe_mp3_metadata in one Arrow stage: encode the
-    real MPEG-1 Layer III stream per row, then walk its frame headers
-    with the independent parser — identical output rows, zero payload
-    boundary crossings."""
+    """MP3 header probe in one Arrow stage: encode a real MPEG-1 Layer
+    III stream per row (bitrate index keyed on the first text byte, mono
+    when it is odd, one frame per text byte capped at ``max_frames``,
+    the text itself as the ID3v2 tag), then walk its frame headers with
+    the independent parser.  Empty-text rows are dropped."""
 
     def stage(batches):
         import pyarrow as pa
@@ -1711,9 +1097,11 @@ def mp3_probe_fused(
 def mp4_probe_fused(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """attach_mp4 -> probe_video_metadata in one Arrow stage: write the
-    real ISO-BMFF skeleton per row, then box-walk it with the
-    independent parser."""
+    """MP4 container probe in one Arrow stage: write a real ISO-BMFF
+    skeleton per row (n_samples = text byte count, 40 ms per sample,
+    width keyed on the first byte, height 144, codec ``avc1``), then
+    box-walk it with the independent parser.  Empty-text rows are
+    dropped."""
 
     def stage(batches):
         import pyarrow as pa
@@ -1758,9 +1146,10 @@ def mp4_probe_fused(
 def png_features_fused(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """attach_png -> extract_features(fake=False) in one Arrow stage:
-    encode the real PNG per row, decode it back through the from-spec
-    reader, emit the byte features."""
+    """PNG round trip in one Arrow stage: encode each row's UTF-8 text
+    bytes as a real 1-row grayscale PNG, decode it back through the
+    from-spec reader, emit the ``extract_features`` byte features.
+    Empty-text rows are dropped (a 0-wide PNG is invalid by spec)."""
 
     def stage(batches):
         import pyarrow as pa
@@ -1797,10 +1186,14 @@ def avi_frame_sample_fused(
     max_frames: int = 24,
     every_n: int = 3,
 ) -> DataFrame:
-    """attach_avi -> sample_video_frames(fake=False) in one Arrow stage:
-    write the real MJPEG AVI per row, walk the RIFF container with the
-    independent reader, and decode every ``every_n``-th frame through
-    the from-spec JPEG path.  1->N fan-out preserved."""
+    """Video frame sampling in one Arrow stage: write a real MJPEG AVI
+    per row (frame *i* is an 8x8 constant-gray JPEG whose value is text
+    byte *i*, first ``max_frames`` bytes), walk the RIFF container with
+    the independent reader, and decode every ``every_n``-th frame through
+    the from-spec JPEG path — decoding only the kept frames is what
+    makes sampling pay.  Emits one (frame_idx, n_pix, pix_first,
+    pix_sum) row per kept frame (1->N fan-out); empty-text rows are
+    dropped."""
     if every_n <= 0:
         raise ValueError("every_n must be positive")
 
@@ -1853,11 +1246,15 @@ def wav_windows_fused(
     window_bytes: int = 16,
     hop_bytes: int = 8,
 ) -> DataFrame:
-    """attach_wav -> audio_windows(fake=False) in one Arrow stage: write
-    the real 8-bit PCM WAV per row, decode it back through the stdlib
-    RIFF reader, emit the overlapping-window features.  The window's
-    BYTES never cross (the query only outputs win_idx / win_bytes /
-    energy); 1->N fan-out preserved."""
+    """Audio windows in one Arrow stage: write a real 8-bit mono PCM WAV
+    per row (unsigned 8-bit samples ARE the text bytes, so the round
+    trip is lossless), decode it back through the stdlib RIFF reader,
+    and emit overlapping windows (the STFT-frame shape: window w, hop h
+    -> windows overlap by w-h) with an integer energy (sum of byte
+    values).  A payload of n bytes emits ceil(max(n - w, 0)/h) + 1
+    windows: the trailing partial window is kept, as torchaudio/librosa
+    do with their padding modes.  The window's BYTES never cross (only
+    win_idx / win_bytes / energy); empty-text rows are dropped."""
     if hop_bytes <= 0 or window_bytes <= 0:
         raise ValueError("window_bytes and hop_bytes must be positive")
 

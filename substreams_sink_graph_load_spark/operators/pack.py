@@ -12,9 +12,8 @@ engines and partitionings.
 
 Why not one global window?  ``sum(n) over (order by doc_id)`` is correct
 but plans as a single-partition window — one task scans every row, the
-classic sequential bottleneck at 100 TB.  The fix is the same two-pass
-prefix-scan poi_chain_distributed uses (operators/poi.py), specialized
-to the integer-addition monoid:
+classic sequential bottleneck at 100 TB.  The fix is the classic
+two-pass prefix scan, specialized to the integer-addition monoid:
 
 1. group documents into fixed ``doc_id`` ranges (``gid = doc_id div G``
    — derived from the data, so the grouping is deterministic and

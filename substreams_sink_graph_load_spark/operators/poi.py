@@ -25,7 +25,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..stablehash.core import FastHasher
 from ..stablehash.poi import (
     ProofOfIndexing,
     chain_block_states,
@@ -445,10 +444,7 @@ def poi_chain(
     exceeded its bound, which routes straight to the shuffle path.
 
     Driver ceiling: the cross-block fold materializes 32 B/block on the
-    driver — exact and cheap to ~100M blocks (3.2 GB); beyond that use
-    :func:`poi_chain_distributed`, the prefix-scan variant with a
-    bounded driver footprint (n_groups rows), differential-tested
-    byte-for-byte against this path.
+    driver — exact and cheap to ~100M blocks (3.2 GB).
 
     Returns (block_num long, id string, digest string hex).
     """
@@ -471,105 +467,6 @@ def poi_chain(
         prev = digest
     return spark.createDataFrame(
         rows or [], "block_num long, id string, digest string"
-    )
-
-
-def poi_chain_distributed(
-    states: DataFrame,
-    chain_id: str,
-    start_poi: bytes | None = None,
-    blocks_per_group: int = 2_000_000,
-) -> DataFrame:
-    """Cluster-shape digest chain: the same ``poi2$`` stream as
-    :func:`poi_chain`, with NO per-block driver materialization.
-
-    ``poi_chain`` collects one 32-byte paused state per block and folds
-    the chain in a driver loop — exact and fine to ~100M blocks (3.2 GB),
-    a ceiling a long-lived chain ingest eventually hits.  This variant is
-    the distributed prefix-scan over the SAME monoid: because ``mixin``
-    is the associative+commutative FldMix add (the property
-    merge_block_states already relies on), the chained digest at block b
-    telescopes to ``state_b (+) ... (+) state_1 (+) start`` — a prefix
-    sum.  Classic two-pass scan:
-
-    1. group blocks into fixed ranges of ``blocks_per_group`` and reduce
-       each group to its monoid TOTAL (one 32-byte row per group — the
-       only driver collect, bounded by n_blocks/blocks_per_group);
-    2. the driver folds group totals in order into per-group EXCLUSIVE
-       offsets (each offset IS the digest of the previous group's last
-       block, by the telescope), broadcasts the tiny map, and a second
-       grouped pass re-derives every in-group digest locally — including
-       the reference's change-suppression against the previous digest,
-       whose group-boundary value is exactly the offset.
-
-    Differential-tested byte-for-byte against poi_chain at several group
-    widths (tests/test_poi_spark.py).  Input: (block_num long, state
-    binary) paused per-block states — the poi_block_states output.
-    Output: (block_num long, id string, digest string hex), suppressed.
-
-    Scale: two shuffles of a ~40 B/block relation (group totals + group
-    chain), each group a bounded pandas task (~80 MB at the default
-    width); driver holds n_groups*32 B — 100M blocks = 50 rows.
-    """
-    import pandas as pd  # noqa: F811 (task-side import parity)
-
-    spark = states.sparkSession
-    lo_row = states.agg(F.min("block_num").alias("lo")).first()
-    if lo_row is None or lo_row["lo"] is None:
-        return spark.createDataFrame([], "block_num long, id string, digest string")
-    lo = int(lo_row["lo"])
-    g = states.select(
-        "block_num",
-        "state",
-        F.expr(f"(block_num - {lo}) div {int(blocks_per_group)}").alias("gid"),
-    )
-
-    def _group_total(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = FastHasher.from_bytes(bytes(pdf["state"].iloc[0]))
-        for raw_state in pdf["state"].iloc[1:]:
-            acc.mixin(FastHasher.from_bytes(bytes(raw_state)))
-        return pd.DataFrame(
-            {"gid": [int(pdf["gid"].iloc[0])], "total": [acc.to_bytes()]}
-        )
-
-    totals = (
-        g.groupBy("gid")
-        .applyInPandas(_group_total, "gid long, total binary")
-        .collect()
-    )
-    offsets: dict[int, bytes | None] = {}
-    acc: bytes | None = start_poi
-    for r in sorted(totals, key=lambda r: r["gid"]):
-        offsets[int(r["gid"])] = acc
-        h = FastHasher.from_bytes(bytes(r["total"]))
-        if acc:
-            h.mixin(FastHasher.from_bytes(acc))
-        acc = h.to_bytes()
-    offsets_bc = spark.sparkContext.broadcast(offsets)
-
-    def _group_chain(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("block_num", kind="stable")
-        prev = offsets_bc.value[int(pdf["gid"].iloc[0])]
-        blocks, digests = [], []
-        for block, raw_state in zip(pdf["block_num"], pdf["state"]):
-            h = FastHasher.from_bytes(bytes(raw_state))
-            if prev:
-                h.mixin(FastHasher.from_bytes(prev))
-            digest = h.to_bytes()
-            if digest != prev:
-                blocks.append(int(block))
-                digests.append(digest.hex())
-            prev = digest
-        return pd.DataFrame(
-            {
-                "block_num": pd.Series(blocks, dtype="int64"),
-                "id": [chain_id] * len(blocks),
-                "digest": digests,
-            }
-        )
-
-    return g.groupBy("gid").applyInPandas(
-        _group_chain, "block_num long, id string, digest string"
     )
 
 

@@ -18,7 +18,7 @@ Spark shapes (all reused from the cluster/ann modules):
 - fit: per-subspace Lloyd's over ``F.slice`` projections — mergeable
   K x dsub partials per round, data never shuffles (cluster.kmeans_fit).
 - encode: broadcast codebooks ride the closure; one vectorized argmin
-  per Arrow batch; the codes table writes once, scans forever.
+  per Arrow batch.
 - search: per-batch partial top-k (k rows per query per batch crossing
   the shuffle, never the corpus) + one small global window — the
   topk_matmul shape with LUT sums in place of BLAS dots.
@@ -298,58 +298,6 @@ def pq_search(
     )
 
 
-def build_pq_index(
-    corpus: DataFrame,
-    index_dir: str,
-    m: int = 8,
-    ks: int = 256,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> None:
-    """Persist codebooks + codes: the build-once-probe-many layout.
-
-    ``codebooks.parquet`` holds (sub, code, centroid); ``codes/`` holds
-    the quantized corpus.  Rebuilding from the same corpus is
-    bit-reproducible (deterministic seeds, no RNG).
-    """
-    books = pq_fit(corpus, m=m, ks=ks, iters=iters, id_col=id_col, emb_col=emb_col)
-    spark = corpus.sparkSession
-    rows = [
-        (s, c, [float(x) for x in books[s, c]])
-        for s in range(books.shape[0])
-        for c in range(books.shape[1])
-    ]
-    spark.createDataFrame(
-        rows, "sub int, code int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/codebooks")
-    pq_encode(corpus, books, id_col=id_col, emb_col=emb_col).write.mode(
-        "overwrite"
-    ).parquet(f"{index_dir}/codes")
-
-
-def pq_index_search(
-    spark,
-    index_dir: str,
-    queries: list[tuple[int, list[float]]],
-    k: int = 5,
-) -> DataFrame:
-    """Top-k ADC search against a persisted PQ index."""
-    rows = (
-        spark.read.parquet(f"{index_dir}/codebooks")
-        .orderBy("sub", "code")
-        .collect()
-    )
-    m = 1 + max(r["sub"] for r in rows)
-    ks = 1 + max(r["code"] for r in rows)
-    dsub = len(rows[0]["centroid"])
-    books = np.zeros((m, ks, dsub), dtype=np.float64)
-    for r in rows:
-        books[r["sub"], r["code"]] = r["centroid"]
-    codes = spark.read.parquet(f"{index_dir}/codes")
-    return pq_search(codes, books, queries, k=k)
-
-
 # ---------------------------------------------------------------------------
 # IVF-PQ: coarse cells + product-quantized residuals (Jégou et al. §V)
 # ---------------------------------------------------------------------------
@@ -457,9 +405,7 @@ def ivfpq_encode(
     residuals: DataFrame, codebooks: np.ndarray
 ) -> DataFrame:
     """Quantize residuals to per-subspace codes, carrying the cell:
-    ``(vec_id, cell, codes)`` — the row an IVF-PQ index persists
-    (PARTITIONED BY cell in the on-disk layout, so probes prune at the
-    partition level exactly like operators/ann.build_ivf_index)."""
+    ``(vec_id, cell, codes)``."""
     books = np.asarray(codebooks, dtype=np.float64)
     m, ks, dsub = books.shape
 
@@ -590,84 +536,3 @@ def ivfpq_search(
         .select("q_id", "neighbor_id", "rank")
     )
 
-
-def build_ivfpq_index(
-    corpus: DataFrame,
-    index_dir: str,
-    n_cells: int = 16,
-    m: int = 8,
-    ks: int = 256,
-    cell_iters: int = 3,
-    pq_iters: int = 3,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> None:
-    """Persist an IVF-PQ index: ``centroids/`` (cell, centroid),
-    ``codebooks/`` (sub, code, centroid), and ``codes/`` PARTITIONED BY
-    cell — the build-once-probe-many layout where a search's probe
-    filter becomes PartitionFilters and the unprobed cells' files are
-    never read.  At m uint8 codes per vector this is the layout that
-    keeps a 100 TB embedding corpus searchable from a table a fraction
-    of a percent of its size.  Deterministic rebuilds (lowest-id seeds,
-    no RNG)."""
-    cents, books = ivfpq_fit(
-        corpus,
-        n_cells=n_cells,
-        m=m,
-        ks=ks,
-        cell_iters=cell_iters,
-        pq_iters=pq_iters,
-        id_col=id_col,
-        emb_col=emb_col,
-    )
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cell int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    spark.createDataFrame(
-        [
-            (s, c, [float(x) for x in books[s, c]])
-            for s in range(books.shape[0])
-            for c in range(books.shape[1])
-        ],
-        "sub int, code int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/codebooks")
-    (
-        ivfpq_encode(
-            ivfpq_residuals(corpus, cents, id_col=id_col, emb_col=emb_col),
-            books,
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{index_dir}/codes")
-    )
-
-
-def ivfpq_index_search(
-    spark,
-    index_dir: str,
-    queries: list[tuple[int, list[float]]],
-    k: int = 5,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Top-k search against a persisted IVF-PQ index.  The probe filter
-    inside ``ivfpq_search`` lands on the cell-partitioned codes scan as
-    PartitionFilters — unprobed cells cost nothing."""
-    crows = (
-        spark.read.parquet(f"{index_dir}/centroids").orderBy("cell").collect()
-    )
-    cents = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    brows = (
-        spark.read.parquet(f"{index_dir}/codebooks")
-        .orderBy("sub", "code")
-        .collect()
-    )
-    m = 1 + max(r["sub"] for r in brows)
-    ks = 1 + max(r["code"] for r in brows)
-    dsub = len(brows[0]["centroid"])
-    books = np.zeros((m, ks, dsub), dtype=np.float64)
-    for r in brows:
-        books[r["sub"], r["code"]] = r["centroid"]
-    codes = spark.read.parquet(f"{index_dir}/codes")
-    return ivfpq_search(codes, cents, books, queries, k=k, nprobe=nprobe)

@@ -48,66 +48,6 @@ def _q(name: str, oracle: str | None = None):
     return deco
 
 
-# SHOW TBLPROPERTIES results per (db, table) — one catalog roundtrip per
-# session, not one per query.  Value: (sf_dir stamp, src fingerprint).
-_BUCKETED_SF: dict[tuple[str, str], tuple[str, str]] = {}
-
-
-def _bucketed(spark: SparkSession, sf_dir: str, name: str) -> DataFrame | None:
-    """The bucketed catalog table for ``name`` if the session opted in
-    (``SPARK_GRAFT_BUCKETED_DB``) AND the layout was built from the
-    requested ``sf_dir`` — else None (fall through to parquet).  A layout
-    built from a DIFFERENT sf_dir raises instead of silently serving
-    wrong-scale rows, validated against the provenance property
-    ``registry_layout`` stamps at write time (r8 advice item); a layout
-    with no stamp predates r9 — rebuild it."""
-    db = os.environ.get("SPARK_GRAFT_BUCKETED_DB")
-    if not db or not spark.catalog.tableExists(f"{db}.{name}"):
-        return None
-    key = (db, name)
-    if key not in _BUCKETED_SF:
-        from .bucketing import SF_DIR_PROP, SRC_FP_PROP
-
-        props = {
-            r["key"]: r["value"]
-            for r in spark.sql(f"SHOW TBLPROPERTIES {db}.{name}").collect()
-        }
-        _BUCKETED_SF[key] = (
-            props.get(SF_DIR_PROP, ""),
-            props.get(SRC_FP_PROP, ""),
-        )
-    src, fp = _BUCKETED_SF[key]
-    if not src:
-        raise ValueError(
-            f"bucketed table {db}.{name} carries no source-sf_dir stamp "
-            "(layout predates provenance stamping) — rebuild it with "
-            "plans.bucketing.registry_layout"
-        )
-    if os.path.normpath(src) != os.path.normpath(sf_dir):
-        raise ValueError(
-            f"bucketed table {db}.{name} was built from {src!r} but this "
-            f"run requests {sf_dir!r} — unset SPARK_GRAFT_BUCKETED_DB or "
-            "rebuild the layout at the requested scale"
-        )
-    # content fingerprint (r11 advice item 5): the path stamp cannot see
-    # source parquet REGENERATED in place — same sf_dir, new rows — which
-    # would leave a derived member (pagerank_edges, the IVF-PQ index)
-    # silently serving stale snapshot data.  Layouts stamped before r12
-    # carry no fingerprint; the path check above still guards scale.
-    if fp:
-        from .bucketing import check_src_fingerprint
-
-        mismatch = check_src_fingerprint(fp, sf_dir)
-        if mismatch is not None:
-            raise ValueError(
-                f"bucketed table {db}.{name} is STALE — its source parquet "
-                f"changed since the layout was built ({mismatch}); rebuild "
-                "with plans.bucketing.registry_layout or unset "
-                "SPARK_GRAFT_BUCKETED_DB"
-            )
-    return spark.table(f"{db}.{name}")
-
-
 # Per-session scan-relation catalog (r13, verdict item 4 "catalog
 # roundtrips"): ``spark.read.parquet`` costs ~80 ms of DRIVER time per
 # call (file listing + footer schema inference + Py4J), and every query
@@ -129,18 +69,8 @@ def _scan_catalog_invalidate() -> None:
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Registry table loader.  Default: the sf_dir parquet.  Opt-in: with
-    ``SPARK_GRAFT_BUCKETED_DB`` set and the table present there, serve
-    the bucketed catalog table instead (plans/bucketing.registry_layout)
-    — same rows, but every join/window/agg keyed on the bucket column
-    rides the write-time partitioning with no Exchange.  The env-var
-    gate keeps the driver's correctness runs on the plain layout unless
-    a session explicitly builds and requests the bucketed one; a layout
-    built from a different sf_dir than requested raises (see
-    ``_bucketed``)."""
-    b = _bucketed(spark, sf_dir, name)
-    if b is not None:
-        return b
+    """Registry table loader: the sf_dir parquet, memoized in the scan
+    catalog above."""
     key = (id(spark.sparkContext), os.path.normpath(sf_dir), name)
     df = _SCAN_CATALOG.get(key)
     if df is None:
@@ -172,12 +102,6 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_events_nanos_flag_scoped, which collects a nanos fixture after
     the restore.  A co-hosted workload that *wants* the nanos error keeps
     getting it."""
-    # bucketed-layout opt-in (see _t): the bucketed events table was
-    # written FROM this function's output, so it is already normalized —
-    # serve it directly, no vintage probe needed
-    b = _bucketed(spark, sf_dir, "events")
-    if b is not None:
-        return b
     # same scan catalog as _t (the vintage probe is analysis-time work —
     # the docstring's flag-scoping argument is exactly why the NORMALIZED
     # frame is safe to memoize: its plan no longer depends on the flag)
@@ -2042,7 +1966,7 @@ def join_range(spark, sf_dir):
 
 
 # --- multimodal family: ASCII-corpus oracle assumption -------------------
-# The Spark fixture generators (attach_binary/png/avi/wav/mp4/mp3) derive
+# The Spark fixture generators (attach_binary and the *_fused writers) derive
 # payload parameters from text BYTES (`text.encode("utf-8")[i]`, strlen in
 # bytes), while the DuckDB oracles state them via `ascii(substr(text, i, 1))`
 # — the i-th CODE POINT.  The two agree only because the driver corpus (and
@@ -2102,12 +2026,10 @@ def multimodal_png_roundtrip(spark, sf_dir):
     points, Spark indexes bytes: valid under the enforced ASCII-corpus
     assumption — see the section comment above multimodal_features.)
 
-    Scale: ONE Arrow stage (r13 fusion of attach_png ->
-    extract_features): both codec halves run back to back per row inside
+    Scale: ONE Arrow stage (r13 fusion of the PNG writer and the
+    feature reader): both codec halves run back to back per row inside
     the same Python worker, so the PNG bytes never cross JVM<->Python at
-    all and the attach-side md5 this query never outputs is eliminated —
-    the cross-operator pruning Catalyst cannot do through opaque Python.
-    1:1 rows, partitioning inherited, no shuffle."""
+    all.  1:1 rows, partitioning inherited, no shuffle."""
     from ..operators.multimodal import png_features_fused
 
     d = _t(spark, sf_dir, "documents")
@@ -2140,8 +2062,8 @@ def multimodal_avi_frame_sample(spark, sf_dir):
     any corruption in the container writer, the walker, or either JPEG
     half breaks the driver hash.
 
-    Scale: ONE Arrow stage (r13 fusion of attach_avi ->
-    sample_video_frames): the container writer, the RIFF walker, and the
+    Scale: ONE Arrow stage (r13 fusion of the AVI writer and the frame
+    sampler): the container writer, the RIFF walker, and the
     per-kept-frame JPEG decode run back to back per row, so the AVI
     bytes never cross JVM<->Python; sampling still decodes only the kept
     1/3 of frames — the codec-cost contract that makes video feasible at
@@ -2179,23 +2101,22 @@ def multimodal_wav_windows(spark, sf_dir):
     """REAL audio decode as a hash-oracled registry query, completing
     the modality triple (PNG r8, MJPEG-AVI r8-late, now WAV): every
     doc's UTF-8 bytes are rendered as an actual 8-bit mono PCM WAV
-    (attach_wav — unsigned 8-bit samples ARE the raw bytes, so the
-    stdlib wave encode/decode pair is lossless), then audio_windows
-    decodes through the real RIFF path (fake=False) and emits the
-    STFT-frame shape: window 16 / hop 8 overlapping windows with
+    (unsigned 8-bit samples ARE the raw bytes, so the stdlib wave
+    encode/decode pair is lossless), decodes it back through the real
+    RIFF path and emits the STFT-frame shape: window 16 / hop 8
+    overlapping windows with
     integer energies (the silence-trim signal).  Losslessness lets the
     DuckDB oracle state every window's start, length, and energy
     directly on the text — the window-start formula (incl. the trailing
-    partial window librosa-style padding keeps) is property-matched
-    against the Python operator for every length.
+    partial window librosa-style padding keeps) is checked against the
+    oracle on every document length in the table.
 
-    Scale: ONE Arrow stage (r13 fusion of attach_wav -> audio_windows):
-    the stdlib wave writer and reader run back to back per row, so
-    neither the WAV payload nor the window bytes ever cross JVM<->Python
-    (the query only outputs win_idx / win_bytes / energy — the window
-    binary the chained form shipped back was dead weight).  Declared
-    1->N fan-out, partitioning inherited — no shuffle; pruned 2-column
-    scan."""
+    Scale: ONE Arrow stage (r13 fusion of the WAV writer, reader and
+    windowing): the stdlib wave writer and reader run back to back per
+    row, so neither the WAV payload nor the window bytes ever cross
+    JVM<->Python (the query only outputs win_idx / win_bytes / energy).
+    Declared 1->N fan-out, partitioning inherited — no shuffle; pruned
+    2-column scan."""
     from ..operators.multimodal import wav_windows_fused
 
     d = _t(spark, sf_dir, "documents")
@@ -2218,23 +2139,23 @@ def multimodal_wav_windows(spark, sf_dir):
 )
 def multimodal_mp4_probe(spark, sf_dir):
     """Container-metadata triage as a hash-oracled query: each doc
-    becomes a REAL ISO-BMFF (MP4) metadata skeleton (attach_mp4 —
+    becomes a REAL ISO-BMFF (MP4) metadata skeleton (encode_mp4_stub —
     ftyp + moov/mvhd/trak/tkhd/mdia/stbl written from the public
     ISO 14496-12 box layouts, parameters derived from the text), then
-    probe_video_metadata walks the boxes and emits dimensions, sample
+    parse_mp4_meta walks the boxes and emits dimensions, sample
     count, duration, and codec WITHOUT touching media data.  This
     probe-first shape is the correct 100 TB video operation: filter on
     moov metadata (resolution floors, duration bands, codec
     allowlists), decode only survivors.  The writer and walker are
     independent codepaths over the same spec, so the oracle stating the
     parameters straight from the text catches a corruption in either.
-    (attach_mp4 keys the width on raw[0], the first UTF-8 BYTE; the
+    (mp4_probe_fused keys the width on raw[0], the first UTF-8 BYTE; the
     oracle's ascii(substr(text,1,1)) is the first CODE POINT — equal
     under the enforced ASCII-corpus assumption, see the section comment
     above multimodal_features.)
 
-    Scale: ONE Arrow stage (r13 fusion of attach_mp4 ->
-    probe_video_metadata): writer and box-walker run back to back per
+    Scale: ONE Arrow stage (r13 fusion of writer and box-walker): the
+    two run back to back per
     row, so the ISO-BMFF bytes never cross JVM<->Python.  1:1 rows, no
     shuffle; pruned 2-column scan."""
     from ..operators.multimodal import mp4_probe_fused
@@ -2259,25 +2180,24 @@ def multimodal_mp4_probe(spark, sf_dir):
 def multimodal_mp3_probe(spark, sf_dir):
     """MP3 header-walk triage as a hash-oracled query, the audio
     counterpart of the mp4 moov probe: each doc becomes a REAL MPEG-1
-    Layer III stream (attach_mp3 — ID3v2.3 tag with syncsafe size +
+    Layer III stream (encode_mp3_stub — ID3v2.3 tag with syncsafe size +
     per-byte frames at 48 kHz, from the public ISO 11172-3 header
-    layout), then probe_mp3_metadata skips the tag, reads bitrate /
+    layout), then parse_mp3_meta skips the tag, reads bitrate /
     sample rate / channel mode from the first header, and counts frames
     by walking the computed frame lengths — payload bytes never read.
     Writer and walker are independent codepaths over the same spec; the
     oracle stating the parameters from the text (bitrate via the public
     Layer III table as a SQL array literal) catches corruption in
-    either.  (attach_mp3 keys bitrate/channels on the first UTF-8 BYTE
+    either.  (mp3_probe_fused keys bitrate/channels on the first UTF-8 BYTE
     vs the oracle's first code point — equal under the enforced
     ASCII-corpus assumption, see above multimodal_features.)  Frame decode (hybrid filterbank/huffman) stays behind the
     documented stub boundary — triage is the 100 TB operation.
 
-    Scale: ONE Arrow stage (r13 fusion of attach_mp3 ->
-    probe_mp3_metadata): writer and header-walker run back to back per
-    row, so the ~17 KB/row synthetic stream never crosses JVM<->Python
-    (the chained form moved ~850 MB of payload through pandas object
-    columns at sf1 to emit 5 longs per row).  1:1 rows, no shuffle;
-    pruned 2-column scan."""
+    Scale: ONE Arrow stage (r13 fusion of writer and header-walker): the
+    two run back to back per row, so the ~17 KB/row synthetic stream
+    never crosses JVM<->Python (a two-stage form moved ~850 MB of payload
+    through pandas object columns at sf1 to emit 5 longs per row).  1:1
+    rows, no shuffle; pruned 2-column scan."""
     from ..operators.multimodal import mp3_probe_fused
 
     d = _t(spark, sf_dir, "documents")
@@ -5193,7 +5113,7 @@ def dedup_substring_remove(spark, sf_dir):
     reassembly over every word row never happens — the forced-
     projection sf10 probe read 16.5s for that shape (see PLANS.md r10);
     the only corpus-sized motion left is the SHUFFLE_HASH-pinned
-    docs⋈marks doc-keyed join, elidable by the bucketed layout.
+    docs⋈marks doc-keyed join.
     """
     import pyarrow as pa
 
@@ -5374,51 +5294,20 @@ def ann_ivf_pq_topk(spark, sf_dir):
     Scale: the PQ fit is mergeable-partials Lloyd's (one job per round,
     nothing shuffles), encode/search are broadcast-closure mapInPandas
     (seed centroids are kilobytes riding the closure), the probe filter
-    runs BEFORE any Python (PartitionFilters against a cell-partitioned
-    codes table in the persisted layout), #batches · min(L, batch) ·
+    runs BEFORE any Python, #batches · min(L, batch) ·
     #queries rows cross the shuffle, and every driver collect is capped
     (256 seeds, 64 queries).  As with ann_pq_topk: the registry's
     noise-corpus L (∝ n) makes shuffle/rerank volume corpus-proportional
     — the oracle-exactness price on structureless data; production
     corpora with cluster structure keep L fixed (O(#queries · L) volume)
     under the recall contract test_pq pins."""
-    import numpy as np
-
     from ..operators.ann import exact_rerank, sample_queries
     from ..operators.pq import ivfpq_search
 
     e = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    # served-index dispatch (r11 verdict item 2): the fit is ~60% of the
-    # cold sweep wall (18.2s of 30.9s at sf1, phase-measured) and a
-    # deployment pays it ONCE at layout build — when the bucketed layout
-    # carries the fitted index (plans/bucketing.registry_layout), load
-    # centroids+codebooks (kilobytes, exact float64 parquet round-trips)
-    # and serve the cell-PARTITIONED codes table, whose probe filter
-    # lands as PartitionFilters so unprobed cells' files are never read.
-    # Provenance/scale checks ride _bucketed; the self-contained inline
-    # fit stays the default so the oracle contract holds anywhere.
-    codes = _bucketed(spark, sf_dir, "annivfpq_codes")
-    if codes is not None:
-        crows = (
-            _bucketed(spark, sf_dir, "annivfpq_centroids")
-            .orderBy("cell")
-            .collect()
-        )
-        cents = np.array([list(r["centroid"]) for r in crows], dtype=np.float64)
-        brows = (
-            _bucketed(spark, sf_dir, "annivfpq_codebooks")
-            .orderBy("sub", "code")
-            .collect()
-        )
-        m = 1 + max(r["sub"] for r in brows)
-        ks = 1 + max(r["code"] for r in brows)
-        books = np.zeros((m, ks, len(brows[0]["centroid"])), dtype=np.float64)
-        for r in brows:
-            books[r["sub"], r["code"]] = r["centroid"]
-    else:
-        cents, books, codes = _ivfpq_fit_registry(e)
+    cents, books, codes = _ivfpq_fit_registry(e)
     queries = sample_queries(e, 100, limit=64)
     n = e.count()
     shortlist = ivfpq_search(
@@ -5429,12 +5318,9 @@ def ann_ivf_pq_topk(spark, sf_dir):
 
 def _ivfpq_fit_registry(e: DataFrame):
     """The registry ``ann_ivf_pq_topk`` index fit — seeds, residual-PQ
-    codebooks, codes — shared VERBATIM by the inline query path and the
-    served-layout builder (plans/bucketing.registry_layout), so hash
-    parity between the two paths holds by construction: same
-    deterministic seed rule (vec_id%50, capped 256), same Lloyd
-    parameters (m=16, ks=64, iters=2), no RNG anywhere.  Returns
-    ``(cents ndarray, books ndarray, codes DataFrame)``."""
+    codebooks, codes: deterministic seed rule (vec_id%50, capped 256),
+    fixed Lloyd parameters (m=16, ks=64, iters=2), no RNG anywhere.
+    Returns ``(cents ndarray, books ndarray, codes DataFrame)``."""
     import numpy as np
 
     from ..operators.pq import ivfpq_encode, ivfpq_residuals, pq_fit
@@ -5916,27 +5802,11 @@ def _pagerank_oracle(iterations: int = 5) -> str:
     """
 
 
-def pagerank_edges(spark, sf_dir, allow_bucketed: bool = True):
+def pagerank_edges(spark, sf_dir):
     """The long-encoded bidirectional customer-supplier edge relation
     graph_pagerank iterates over (distinct orders x lineitem pairs;
     customers even ``ck*2``, suppliers odd ``sk*2+1`` so the whole
-    iterative phase shuffles 8-byte keys).
-
-    Served from the bucketed layout when the session opted in
-    (``SPARK_GRAFT_BUCKETED_DB`` + ``registry_layout`` built it): the
-    table is bucketed AND in-bucket-sorted by ``src``, so the degree
-    aggregation and every iteration's edges-side join ride the
-    write-time partitioning — 5 -> 3 exchanges per iteration, measured
-    0.82x sf1 -> 0.77x sf10 with hash parity (PLANS.md "r10:
-    bucketed-edges A/B on graph_pagerank").  Default: derived from the
-    sf_dir parquet — same rows, the layout changes partitioning only.
-    ``allow_bucketed=False`` forces the parquet derivation — the layout
-    WRITER uses it so building a fresh layout never reads the table it
-    is about to overwrite."""
-    if allow_bucketed:
-        b = _bucketed(spark, sf_dir, "pagerank_edges")
-        if b is not None:
-            return b
+    iterative phase shuffles 8-byte keys)."""
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     l = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     # dedup on the INTEGER pair, label afterwards: the distinct's hash
@@ -5976,26 +5846,20 @@ def graph_pagerank(spark, sf_dir):
     :func:`pagerank_edges` (long-encoded node keys; the oracle's string
     labels are reconstructed in one projection at the very end —
     measured: the string-keyed variant spent the bench's single largest
-    line here), which serves the bucketed-by-src layout when the session
-    opted in (5 -> 3 exchanges/iteration, 0.77x at sf10)."""
+    line here)."""
     from ..operators.graph import pagerank_ppm
 
     # symmetric=True: pagerank_edges emits both directions, so every node
     # is a src AND a dst — the operator drops the nodes relation and the
     # per-iteration left join (bit-identical integer ranks, see
     # operators/graph.py; r12 profile: 39 jobs/84 stages -> ~half).
-    # copartition pins the edge partitioning at the session's shuffle
-    # width on the inline path only — the bucketed layout already
-    # delivers src-clustered buckets and must not pay a new exchange.
-    served = _bucketed(spark, sf_dir, "pagerank_edges") is not None
+    # copartition pins the edge partitioning at the session's shuffle width.
     pr = pagerank_ppm(
         pagerank_edges(spark, sf_dir),
         iterations=5,
         damping_pct=85,
         symmetric=True,
-        copartition=None
-        if served
-        else int(spark.conf.get("spark.sql.shuffle.partitions")),
+        copartition=int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
     return pr.select(
         F.when(
@@ -7423,8 +7287,7 @@ def embedding_drift_by_source(spark, sf_dir):
     the 64 per-dim rows is what keeps the hash oracle exact).
 
     Scale: the id join co-partitions two data-scaled tables (sort-merge
-    on the integer id; at 100 TB both sides bucket by id and the join
-    is exchange-free — plans/bucketing.py); the dim explode is
+    on the integer id); the dim explode is
     scan-stage and collapses map-side into |sources| x d partial rows
     per task, so the shuffle carries partials, never vectors.  The
     global centroid re-aggregates the persisted per-source partials
@@ -8024,8 +7887,8 @@ def sequence_pack_chunks(spark, sf_dir):
 
     Scale: the oracle's global running sum is a single-partition window
     — the sequential bottleneck this plan exists to avoid.  The Spark
-    side is the two-pass integer prefix scan (operators/pack.py, the
-    poi_chain_distributed shape): per-group totals (the only collect,
+    side is the two-pass integer prefix scan (operators/pack.py):
+    per-group totals (the only collect,
     n_docs/100k rows), broadcast exclusive offsets, per-group PARALLEL
     windows, then a linear chunk fan-out (total_tokens/512 + n_docs
     rows) into one partial-agg shuffle keyed on chunk_id.  The layout is

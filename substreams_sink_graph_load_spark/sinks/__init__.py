@@ -1,15 +1,7 @@
 """Sinks: Postgres bulk injection + the surrounding DDL lifecycle
-(the reference's inject-csv / handoff / index commands, SURVEY §3.3),
-plus trainer-native shard export (shards.py: packed token .bin/.idx and
-WebDataset tars).
+(the reference's inject-csv / handoff / index commands, SURVEY §3.3).
 """
 
-from .shards import (
-    hash_tokenize,
-    read_token_shard,
-    write_token_shards,
-    write_webdataset_shards,
-)
 from .postgres import (
     build_copy_sql,
     force_not_null_columns,
@@ -40,8 +32,4 @@ __all__ = [
     "extract_index_sql",
     "handoff_sql",
     "list_entities",
-    "hash_tokenize",
-    "read_token_shard",
-    "write_token_shards",
-    "write_webdataset_shards",
 ]

@@ -2,7 +2,6 @@ from .jsonl import (
     CHANGE_JSON_SCHEMA,
     read_change_jsonl,
     typed_extract,
-    parse_bundle_ranges,
     check_contiguity,
 )
 
@@ -10,6 +9,5 @@ __all__ = [
     "CHANGE_JSON_SCHEMA",
     "read_change_jsonl",
     "typed_extract",
-    "parse_bundle_ranges",
     "check_contiguity",
 ]

@@ -214,17 +214,6 @@ def typed_extract(
     )
 
 
-def parse_bundle_ranges(df: DataFrame) -> DataFrame:
-    """Parse ``NNNNNNNNNN-NNNNNNNNNN`` block ranges out of ``_file`` paths
-    (ref csvprocessor/processor.go:340-351)."""
-    base = F.element_at(F.split(F.col("_file"), "/"), -1)
-    return df.withColumn(
-        "bundle_start", F.regexp_extract(base, r"(\d{10})-(\d{10})", 1).cast("long")
-    ).withColumn(
-        "bundle_end", F.regexp_extract(base, r"(\d{10})-(\d{10})", 2).cast("long")
-    )
-
-
 def check_contiguity(
     filenames: list[str],
     stop_block: int | None = None,

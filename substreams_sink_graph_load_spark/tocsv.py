@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schema.entities import EntityDesc, parse_schema_file
-from .sources.jsonl import check_contiguity, parse_bundle_ranges, read_change_jsonl, typed_extract
+from .sources.jsonl import check_contiguity, read_change_jsonl, typed_extract
 from .operators.scd2 import immutable_rows, scd2_versions
 from .operators.pg_csv import csv_header, render_entity_csv
 from .operators.bundles import bundle_start_col, write_bundled_csv

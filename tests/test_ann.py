@@ -5,8 +5,6 @@ are compared, and dots are checked to 1e-9 relative)."""
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from substreams_sink_graph_load_spark.operators.ann import (
     sample_queries,
     topk_matmul,
@@ -43,67 +41,6 @@ def test_matmul_topk_partial_merge(spark):
     out = topk_matmul(df, [(0, rows[0][1])], k=3).collect()
     assert [r["rank"] for r in out] == [1, 2, 3]
     assert all(r["neighbor_id"] != 0 for r in out)  # self excluded
-
-
-def test_ivf_index_build_and_search(spark, sf_dir, emb, tmp_path):
-    """Persisted IVF index: search results must equal a driver-side numpy
-    re-computation restricted to each query's probed cells (same
-    tie-breaks), and the probe scan must prune at the partition level."""
-    import contextlib
-    import io
-
-    import numpy as np
-
-    from substreams_sink_graph_load_spark.operators.ann import (
-        build_ivf_index,
-        ivf_search,
-    )
-
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(emb, idx, n_cells=4, iters=2)
-    rows = emb.select("vec_id", "embedding").collect()
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    crows = spark.read.parquet(f"{idx}/centroids").orderBy("cell").collect()
-    cent = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    # reference assignment: nearest centroid by squared L2, lowest id wins
-    d2 = ((mat[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-    cell_of = d2.argmin(axis=1)
-
-    queries = [
-        (int(ids[i]), [float(x) for x in mat[i]]) for i in range(0, 10, 3)
-    ]
-    k, nprobe = 3, 2
-    got = {
-        (r["q_id"], r["rank"]): r["neighbor_id"]
-        for r in ivf_search(spark, idx, queries, k=k, nprobe=nprobe).collect()
-    }
-
-    want = {}
-    for q_id, q_emb in queries:
-        qv = np.asarray(q_emb)
-        cscore = cent @ qv
-        probe = sorted(
-            range(len(cent)), key=lambda c: (-cscore[c], c)
-        )[:nprobe]
-        mask = np.isin(cell_of, probe) & (ids != q_id)
-        cand_ids, cand = ids[mask], mat[mask] @ qv
-        order = sorted(
-            range(len(cand_ids)), key=lambda i: (-cand[i], cand_ids[i])
-        )[:k]
-        for rank, i in enumerate(order, 1):
-            want[(q_id, rank)] = cand_ids[i]
-    assert got == want
-
-    # partition pruning: the vectors scan must carry a cell filter
-    probe_df = spark.read.parquet(f"{idx}/vectors").where(
-        F.col("cell").isin([0, 1])
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        probe_df.explain("formatted")
-    assert "PartitionFilters" in buf.getvalue()
-    assert probe_df.count() > 0
 
 
 def test_topk_tiesafe_keeps_lowest_ids_on_ties(spark):

@@ -1,6 +1,6 @@
 """Multimodal column plumbing: binary payloads, mapInPandas batch contract,
-real PNG/WAV decode + the stub boundary for other mimes, frame sampling
-fan-out."""
+the from-spec codecs (PNG, JPEG, WAV, AVI, MP4/MP3 probes) and the stub
+boundary for other mimes."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from substreams_sink_graph_load_spark.operators.multimodal import (
     decode_png,
     decode_wav,
     extract_features,
-    sample_frames,
 )
 
 
@@ -174,70 +173,6 @@ def test_extract_features(payloads):
     assert rows[1]["first_byte"] == ord("h")
     assert rows[1]["head_sum"] == sum(b"hello world"[:16])
     assert rows[3]["first_byte"] == -1  # empty payload sentinel
-
-
-def test_sample_frames_fanout(payloads):
-    frames = sample_frames(payloads, frame_size=64, every_n=2).collect()
-    by_doc = {}
-    for r in frames:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    # 300 bytes -> 4 frames of 64 (last partial), every 2nd kept -> idx 0, 2
-    assert sorted(r["frame_idx"] for r in by_doc[2]) == [0, 2]
-    assert bytes(by_doc[2][0]["frame"]) == b"x" * 64
-    # short doc -> single frame 0
-    assert [r["frame_idx"] for r in by_doc[1]] == [0]
-
-
-def test_resize_payload_shape(payloads):
-    from substreams_sink_graph_load_spark.operators.multimodal import (
-        resize_payload,
-    )
-
-    rows = {r["doc_id"]: r for r in resize_payload(payloads, 64).collect()}
-    assert rows[1]["n_bytes"] == 11  # smaller than target: pass-through
-    assert bytes(rows[1]["payload"]) == b"hello world"
-    assert rows[2]["n_bytes"] == 64  # 300 bytes resampled down
-    assert bytes(rows[2]["payload"]) == b"x" * 64  # uniform source
-    assert rows[3]["n_bytes"] == 0  # empty stays empty
-
-    # deterministic: same input -> same bytes
-    again = {
-        r["doc_id"]: bytes(r["payload"])
-        for r in resize_payload(payloads, 64).collect()
-    }
-    assert again == {k: bytes(v["payload"]) for k, v in rows.items()}
-
-
-def test_audio_windows_overlap_and_energy(payloads):
-    from substreams_sink_graph_load_spark.operators.multimodal import (
-        audio_windows,
-    )
-
-    rows = audio_windows(payloads, window_bytes=8, hop_bytes=4).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    # doc 1: 11 bytes, w=8 h=4 -> starts 0 and 4 (trailing partial kept)
-    d1 = sorted(by_doc[1], key=lambda r: r["win_idx"])
-    assert [r["win_idx"] for r in d1] == [0, 1]
-    assert bytes(d1[0]["win"]) == b"hello wo"
-    assert bytes(d1[1]["win"]) == b"o world"  # 7-byte trailing window
-    assert d1[0]["energy"] == sum(b"hello wo")
-    # overlap: consecutive windows share w-h bytes
-    assert bytes(d1[0]["win"])[4:] == bytes(d1[1]["win"])[:4]
-    # doc 2: 300 bytes -> (300-8)//4 + 1 = 74 windows
-    assert len(by_doc[2]) == 74
-    # doc 3: empty payload -> one empty window with zero energy
-    assert len(by_doc[3]) == 1 and by_doc[3][0]["energy"] == 0
-
-
-def test_audio_windows_validates_params(payloads):
-    from substreams_sink_graph_load_spark.operators.multimodal import (
-        audio_windows,
-    )
-
-    with pytest.raises(ValueError):
-        audio_windows(payloads, window_bytes=8, hop_bytes=0).collect()
 
 
 # ---------------------------------------------------------------------------
@@ -626,37 +561,18 @@ def test_decode_avi_rejects_malformed():
         )
 
 
-def test_sample_video_frames_real_through_spark(spark):
-    from substreams_sink_graph_load_spark.operators.multimodal import (
-        attach_avi,
-        sample_video_frames,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "abcdefg"), (2, "Z"), (3, "")],  # 7 frames / 1 frame / dropped
-        "doc_id long, text string",
-    )
-    rows = sample_video_frames(
-        attach_avi(df, "doc_id", "text", max_frames=24), every_n=3, fake=False
-    ).collect()
-    got = {(r["doc_id"], r["frame_idx"]): (r["n_pix"], r["pix_first"], r["pix_sum"]) for r in rows}
-    want = {
-        (1, 0): (64, ord("a"), 64 * ord("a")),
-        (1, 3): (64, ord("d"), 64 * ord("d")),
-        (1, 6): (64, ord("g"), 64 * ord("g")),
-        (2, 0): (64, ord("Z"), 64 * ord("Z")),
-    }
-    assert got == want
-
-
 def test_extract_features_real_avi(spark):
     from substreams_sink_graph_load_spark.operators.multimodal import (
-        attach_avi,
-        extract_features,
+        encode_avi_mjpeg,
+        encode_const_jpeg,
     )
 
-    df = spark.createDataFrame([(9, "hi")], "doc_id long, text string")
-    row = extract_features(attach_avi(df), fake=False).collect()[0]
+    avi = encode_avi_mjpeg([encode_const_jpeg(b) for b in b"hi"], 8, 8)
+    df = spark.createDataFrame(
+        [(9, "video/x-msvideo", bytearray(avi), (len(avi), "z"))],
+        "doc_id long, mime string, payload binary, meta struct<n_bytes:long,checksum:string>",
+    )
+    row = extract_features(df, fake=False).collect()[0]
     # full decode: 2 frames x 64 px; first byte 'h'; head = 16 x 'h'
     assert row["mime"] == "video/x-msvideo"
     assert row["n_bytes"] == 128
@@ -689,32 +605,6 @@ def test_avi_container_property_roundtrip():
     prop()
 
 
-def test_attach_wav_real_windows_through_spark(spark):
-    from substreams_sink_graph_load_spark.operators.multimodal import (
-        attach_wav,
-        audio_windows,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "abcdefghijklmnopqrstu"), (2, "")],  # 21 bytes / dropped
-        "doc_id long, text string",
-    )
-    rows = audio_windows(
-        attach_wav(df), window_bytes=16, hop_bytes=8, fake=False
-    ).collect()
-    got = {
-        (r["doc_id"], r["win_idx"]): (bytes(r["win"]), r["energy"])
-        for r in rows
-    }
-    raw = b"abcdefghijklmnopqrstu"
-    # n=21, w=16, h=8: starts [0, 8] (trailing partial window kept)
-    want = {
-        (1, 0): (raw[0:16], sum(raw[0:16])),
-        (1, 1): (raw[8:21], sum(raw[8:21])),
-    }
-    assert got == want
-
-
 def test_mp4_probe_roundtrip_and_malformed():
     from substreams_sink_graph_load_spark.operators.multimodal import (
         encode_mp4_stub,
@@ -733,32 +623,6 @@ def test_mp4_probe_roundtrip_and_malformed():
         parse_mp4_meta(b"\xff\xff\xff\xff" + mp4[4:])
     with pytest.raises(ValueError, match="moov"):
         parse_mp4_meta(mp4[: mp4.index(b"moov") - 4])
-
-
-def test_probe_video_metadata_both_containers(spark):
-    """One probe over a mixed batch: an MP4 moov skeleton AND a real
-    MJPEG AVI — the dispatch a mixed-corpus triage pass needs."""
-    from substreams_sink_graph_load_spark.operators.multimodal import (
-        attach_mp4,
-        encode_avi_mjpeg,
-        encode_const_jpeg,
-        probe_video_metadata,
-    )
-
-    mp4_rows = attach_mp4(
-        spark.createDataFrame([(1, "abc")], "doc_id long, text string")
-    )
-    avi = encode_avi_mjpeg([encode_const_jpeg(5), encode_const_jpeg(6)], 8, 8)
-    avi_rows = spark.createDataFrame(
-        [(2, "video/x-msvideo", bytearray(avi), (len(avi), "z"))],
-        "doc_id long, mime string, payload binary, meta struct<n_bytes:long,checksum:string>",
-    )
-    got = {
-        r["doc_id"]: (r["width"], r["height"], r["n_samples"], r["codec"])
-        for r in probe_video_metadata(mp4_rows.unionByName(avi_rows)).collect()
-    }
-    assert got[1] == (16 * ((ord("a") % 16) + 1), 144, 3, "avc1")
-    assert got[2] == (8, 8, 2, "MJPG")
 
 
 def test_mp3_probe_roundtrip_and_malformed():
@@ -786,29 +650,6 @@ def test_mp3_probe_roundtrip_and_malformed():
         parse_mp3_meta(encode_mp3_stub(0, 5, True, tag=b"x"))
     with pytest.raises(ValueError, match="reserved"):
         parse_mp3_meta(bytes([0xFF, 0xFB, 0xF4, 0x40]))  # bitrate idx 15
-
-
-def test_probe_mp3_metadata_through_spark(spark):
-    from substreams_sink_graph_load_spark.operators.multimodal import (
-        attach_mp3,
-        probe_mp3_metadata,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "a" * 50), (2, "B")],  # 'a' odd -> mono; 'B' even -> stereo
-        "doc_id long, text string",
-    )
-    got = {
-        r["doc_id"]: (
-            r["bitrate_kbps"], r["sample_rate"], r["channels"], r["n_frames"]
-        )
-        for r in probe_mp3_metadata(attach_mp3(df)).collect()
-    }
-    assert got[1] == (
-        [32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320][ord("a") % 14],
-        48000, 1, 32,  # 50 bytes capped at 32 frames
-    )
-    assert got[2][2:] == (2, 1)
 
 
 def test_mp4_mp3_probe_property_roundtrip():

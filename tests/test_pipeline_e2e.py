@@ -281,3 +281,45 @@ def test_seq_stable_across_file_splits(spark, tmp_path):
             assert r["seq"] == r["block_num"] + 1, (r["block_num"], r["seq"])
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_tocsv_missing_middle_bundle_is_fatal(spark, fixture_dirs):
+    """A bundle file deleted from the middle of an entity's listing
+    breaks contiguity (processor.go:109-152): loud error, nothing read."""
+    src, dest, schema_file = fixture_dirs
+    os.remove(os.path.join(src, "account", "0000001000-0000001999.jsonl"))
+    with pytest.raises(ValueError, match="broken file contiguity"):
+        tocsv(spark, src, dest, "account", schema_file,
+              stop_block=3000, bundle_size=1000)
+
+
+def test_tocsv_unranged_file_name_is_fatal(spark, fixture_dirs):
+    """Every file in the entity directory must carry an
+    NNNNNNNNNN-NNNNNNNNNN block range in its name."""
+    src, dest, schema_file = fixture_dirs
+    with open(os.path.join(src, "account", "notes.jsonl"), "w") as fh:
+        fh.write("")
+    with pytest.raises(ValueError, match="fail reading block range"):
+        tocsv(spark, src, dest, "account", schema_file,
+              stop_block=3000, bundle_size=1000)
+
+
+def test_check_contiguity_coverage_and_cutoff():
+    """The listing must reach stop_block; files starting at or after it
+    are cut off before the contiguity walk."""
+    from substreams_sink_graph_load_spark.sources.jsonl import check_contiguity
+
+    files = [
+        "/x/0000000000-0000000999.jsonl",
+        "/x/0000001000-0000001999.jsonl",
+        "/x/0000002000-0000002999.jsonl",
+    ]
+    # listing order does not matter; the file at the stop block is cut
+    assert check_contiguity(files[::-1], 2000, require_coverage=True) == files[:2]
+    assert check_contiguity(files, 3000, require_coverage=True) == files
+    with pytest.raises(ValueError, match="entities do not cover the full range"):
+        check_contiguity(files, 3001, require_coverage=True)
+    with pytest.raises(ValueError, match="entities do not cover the full range"):
+        check_contiguity(files[:1], 1500, require_coverage=True)
+    # without require_coverage a short listing is accepted as-is
+    assert check_contiguity(files[:1], 1500) == files[:1]

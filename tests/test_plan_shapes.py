@@ -369,87 +369,6 @@ def test_substring_remove_no_word_relation(spark, sf_dir):
     assert "ShuffledHashJoin" in plan
 
 
-def test_pagerank_bucketed_edges_elide_iteration_exchanges(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """The bucketed-edges serving path (r10 A/B: 0.82x sf1 -> 0.77x
-    sf10): with the derived edge relation bucketed + sorted by ``src``,
-    one full pagerank iteration plans with 3 Exchanges instead of the
-    plain layout's 5 — the degree aggregation and the per-iteration
-    edge-side join ride the write-time partitioning.  Broadcast is
-    disabled (at 100 TB the rank side does not fit an executor) so the
-    probe shows the co-located plan, not a small-SF broadcast artifact.
-    ``spark.sql.shuffle.partitions`` is pinned to the bucket count for
-    the probe — the deployment recipe pairs them (OPERATIONS.md); with a
-    mismatched session value the rank side's shuffle produces a
-    different partitioning and Spark re-shuffles one join side (+1
-    Exchange), which is a sizing artifact, not the layout's shape.
-    Results are asserted bit-identical across layouts."""
-    from substreams_sink_graph_load_spark.operators.graph import (
-        pagerank_iteration_probe,
-    )
-    from substreams_sink_graph_load_spark.plans.bucketing import (
-        SF_DIR_PROP,
-        write_bucketed,
-    )
-    from substreams_sink_graph_load_spark.plans.queries import pagerank_edges
-
-    monkeypatch.delenv("SPARK_GRAFT_BUCKETED_DB", raising=False)
-    derived = pagerank_edges(spark, sf_dir, allow_bucketed=False)
-    spark.sql("DROP DATABASE IF EXISTS prshape CASCADE")
-    spark.sql(f"CREATE DATABASE prshape LOCATION '{tmp_path}'")
-    # the A/B's apples-to-apples: both variants read MATERIALIZED edge
-    # bytes; only the layout differs (plain parquet vs bucketed+sorted)
-    derived.write.parquet(f"{tmp_path}/edges_plain")
-    plain = spark.read.parquet(f"{tmp_path}/edges_plain")
-    write_bucketed(derived, "prshape.pagerank_edges", 4, "src")
-    spark.sql(
-        f"ALTER TABLE prshape.pagerank_edges SET TBLPROPERTIES "
-        f"('{SF_DIR_PROP}' = '{sf_dir}')"
-    )
-    conf = {
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.shuffle.partitions": "4",
-    }
-    saved = {k: spark.conf.get(k, None) for k in conf}
-    try:
-        for k, v in conf.items():
-            spark.conf.set(k, v)
-        plain_probe = pagerank_iteration_probe(plain)
-        plain_ex = len(
-            re.findall(r"\(\d+\) Exchange\b", plan_of_df(plain_probe))
-        )
-        plain_rows = sorted(map(tuple, plain_probe.collect()))
-
-        monkeypatch.setenv("SPARK_GRAFT_BUCKETED_DB", "prshape")
-        from substreams_sink_graph_load_spark.plans import queries as Q
-
-        Q._BUCKETED_SF.clear()
-        served = pagerank_edges(spark, sf_dir)
-        buck_probe = pagerank_iteration_probe(served)
-        buck_ex = len(
-            re.findall(r"\(\d+\) Exchange\b", plan_of_df(buck_probe))
-        )
-        buck_rows = sorted(map(tuple, buck_probe.collect()))
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-        spark.sql("DROP DATABASE IF EXISTS prshape CASCADE")
-        # drop the cached provenance for the now-dropped database too —
-        # a later test recreating a 'prshape' DB from a different sf_dir
-        # must re-read TBLPROPERTIES, not trust this test's entry
-        from substreams_sink_graph_load_spark.plans import queries as Q
-
-        Q._BUCKETED_SF.clear()
-    assert buck_rows == plain_rows
-    assert plain_ex == 5, plain_ex
-    assert buck_ex == 3, buck_ex
-
-
 def test_similarity_topk_no_cartesian(spark, sf_dir):
     """r12 verdict item 2: similarity_topk computes the exact all-pairs
     top-k WITHOUT materializing the n x 64 cross product — blocked

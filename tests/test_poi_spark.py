@@ -389,74 +389,3 @@ def test_discover_runs_driver_bound(spark, tmp_path):
     assert discover_runs(raw, max_runs=5) is None
     full = discover_runs(raw)
     assert full is not None and len(full) >= 30
-
-
-def test_distributed_chain_matches_driver_chain(spark):
-    """poi_chain_distributed is the prefix-scan twin of poi_chain: byte-
-    identical suppressed digest stream at every group width, with and
-    without a start POI."""
-    from substreams_sink_graph_load_spark.operators.poi import (
-        poi_chain_distributed,
-    )
-
-    raw = spark.createDataFrame(EVENTS, "block_num long, seq long, value string")
-    states = poi_block_states(raw).select("block_num", "state")
-    want = sorted(
-        (r["block_num"], r["id"], r["digest"])
-        for r in poi_chain(spark, raw, chain_id="test-chain").collect()
-    )
-    for width in (1, 2, 3, 10**6):
-        got = sorted(
-            (r["block_num"], r["id"], r["digest"])
-            for r in poi_chain_distributed(
-                states, "test-chain", blocks_per_group=width
-            ).collect()
-        )
-        assert got == want, f"blocks_per_group={width}"
-    # start POI seeds the first group's offset exactly like the driver loop
-    start = bytes(range(32))
-    want_seeded = sorted(
-        (r["block_num"], r["id"], r["digest"])
-        for r in poi_chain(
-            spark, raw, chain_id="c2", start_poi=start
-        ).collect()
-    )
-    got_seeded = sorted(
-        (r["block_num"], r["id"], r["digest"])
-        for r in poi_chain_distributed(
-            states, "c2", start_poi=start, blocks_per_group=2
-        ).collect()
-    )
-    assert got_seeded == want_seeded
-
-
-def test_distributed_chain_empty_input(spark):
-    from substreams_sink_graph_load_spark.operators.poi import (
-        poi_chain_distributed,
-    )
-
-    empty = spark.createDataFrame([], "block_num long, state binary")
-    assert poi_chain_distributed(empty, "c").count() == 0
-
-
-def test_distributed_chain_suppression_across_group_boundary(spark):
-    """An empty block (state == identity) repeats the previous digest and
-    must be suppressed even when the repeat lands in the NEXT group."""
-    from substreams_sink_graph_load_spark.operators.poi import (
-        poi_chain_distributed,
-    )
-    from substreams_sink_graph_load_spark.stablehash.core import FastHasher
-
-    raw = spark.createDataFrame(EVENTS, "block_num long, seq long, value string")
-    states = [
-        (r["block_num"], bytes(r["state"]))
-        for r in poi_block_states(raw).collect()
-    ]
-    # append an identity state at block 8 (empty block): digest unchanged
-    states.append((8, FastHasher().to_bytes()))
-    sdf = spark.createDataFrame(states, "block_num long, state binary")
-    # width 2 puts block 8 alone at a group boundary (blocks 1,3 | 7,8 with lo=1 -> gid 0,1,3,3... width 4: 1,3 gid0; 7,8 gid1)
-    for width in (1, 4):
-        rows = poi_chain_distributed(sdf, "c", blocks_per_group=width).collect()
-        assert 8 not in {r["block_num"] for r in rows}, f"width={width}"
-        assert {r["block_num"] for r in rows} == {1, 3, 7}

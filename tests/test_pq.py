@@ -1,5 +1,5 @@
 """Product quantization: exactness on a losslessly-quantizable corpus,
-reproducible builds, compression shape, and persisted-index parity."""
+reproducible builds, compression shape, and recall floors."""
 
 import numpy as np
 import pytest
@@ -7,10 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from substreams_sink_graph_load_spark.operators.pq import (
-    build_pq_index,
     pq_encode,
     pq_fit,
-    pq_index_search,
     pq_search,
 )
 
@@ -80,25 +78,6 @@ def test_pq_codes_shape_and_reproducibility(spark, lossless_corpus):
 def test_pq_dim_not_divisible_raises(spark, lossless_corpus):
     with pytest.raises(ValueError, match="not divisible"):
         pq_fit(lossless_corpus, m=3, ks=KS, iters=1)
-
-
-def test_pq_index_roundtrip(spark, lossless_corpus, tmp_path):
-    idx = str(tmp_path / "pq_index")
-    build_pq_index(lossless_corpus, idx, m=M, ks=KS, iters=8)
-    queries = [
-        (r["vec_id"], list(r["embedding"]))
-        for r in lossless_corpus.where(F.col("vec_id") % 50 == 0).collect()
-    ]
-    books = pq_fit(lossless_corpus, m=M, ks=KS, iters=8)
-    codes = pq_encode(lossless_corpus, books)
-    direct = {
-        tuple(r) for r in pq_search(codes, books, queries, k=5).collect()
-    }
-    via_index = {
-        tuple(r)
-        for r in pq_index_search(spark, idx, queries, k=5).collect()
-    }
-    assert via_index == direct
 
 
 def test_pq_recall_on_real_embeddings(spark, sf_dir):
@@ -216,52 +195,6 @@ def test_ivfpq_probe_prunes_cells(spark, sf_dir):
             np.argmax(cents @ q_mat[r["q_id"]])
         )  # probe ranking is max-dot, ties to lowest cell
         assert cell_of[r["neighbor_id"]] == best_cell
-
-
-def test_ivfpq_index_roundtrip_and_pruning(spark, lossless_corpus, tmp_path):
-    """Persisted-index parity with the direct search, plus the layout
-    contract: the codes scan under a probe filter carries
-    PartitionFilters (unprobed cells' files are never read)."""
-    import contextlib
-    import io
-
-    from substreams_sink_graph_load_spark.operators.pq import (
-        build_ivfpq_index,
-        ivfpq_index_search,
-    )
-
-    idx = str(tmp_path / "ivfpq_index")
-    build_ivfpq_index(
-        lossless_corpus, idx, n_cells=2, m=M, ks=KS, cell_iters=2, pq_iters=4
-    )
-    queries = [
-        (r["vec_id"], list(r["embedding"]))
-        for r in lossless_corpus.where(F.col("vec_id") % 50 == 0).collect()
-    ]
-    cents, books = ivfpq_fit(
-        lossless_corpus, n_cells=2, m=M, ks=KS, cell_iters=2, pq_iters=4
-    )
-    codes = ivfpq_encode(ivfpq_residuals(lossless_corpus, cents), books)
-    direct = {
-        tuple(r)
-        for r in ivfpq_search(
-            codes, cents, books, queries, k=5, nprobe=2
-        ).collect()
-    }
-    via_index = {
-        tuple(r)
-        for r in ivfpq_index_search(
-            spark, idx, queries, k=5, nprobe=2
-        ).collect()
-    }
-    assert via_index == direct
-
-    probe_df = spark.read.parquet(f"{idx}/codes").where(F.col("cell") == 0)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        probe_df.explain("formatted")
-    assert "PartitionFilters" in buf.getvalue()
-    assert probe_df.count() > 0
 
 
 def test_registry_shortlist_margin_holds(spark, sf_dir):
