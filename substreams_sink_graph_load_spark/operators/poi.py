@@ -18,44 +18,21 @@ constant I is the monoid identity.
 
 from __future__ import annotations
 
-import json
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..stablehash.poi import (
-    ProofOfIndexing,
     chain_block_states,
     fold_runs_batched,
     merge_block_states,
     pause_block_state,
 )
 
-OP_DELETE = 3
-
 _STATE_SCHEMA = "block_num long, state binary, n_events long"
 _RUNS_SCHEMA = "block_num long, min_seq long, max_seq long, n long"
 _RUN_STATES_SCHEMA = _RUNS_SCHEMA + ", state binary"
-
-
-def _fold_events(block: int, events: list[tuple[int, str]]) -> bytes:
-    """Per-event reference fold (one ProofOfIndexing, sequential writes).
-
-    The hot path is the batched fold (stablehash.poi.fold_blocks_batched,
-    numpy XXH3 kernels); this scalar twin is the semantic reference the
-    batched path is differentially tested against (test_poi_spark)."""
-    events.sort()
-    poi = ProofOfIndexing(block)
-    for _, line in events:
-        ch = json.loads(line)["entity_change"]
-        op = ch.get("operation")
-        if op == OP_DELETE or op == "OPERATION_DELETE":
-            poi.remove_entity(ch["entity"], ch["id"])
-        else:
-            poi.set_entity(ch["entity"], ch["id"], ch.get("fields") or [])
-    return poi.pause(None)
 
 
 def poi_block_states(raw: DataFrame, num_partitions: int | None = None) -> DataFrame:

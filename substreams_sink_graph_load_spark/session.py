@@ -75,7 +75,8 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             f"{_parent}{os.pathsep}{_pp}" if _pp else _parent
         )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default: the cores this process may run on (its CPU affinity)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))

@@ -3,7 +3,8 @@
 ``handoff`` commands plus the deployment-schema lookup, as SQL generators.
 
 These commands are orchestration, not dataflow: the engine emits the exact
-SQL; execution goes through any Postgres client (psycopg when available).
+SQL; execution goes through any Postgres client (``postgres.run_sql`` uses
+psql).
 Keeping them generator-pure makes every statement unit-testable without a
 server — the same split the reference uses (its commands are thin wrappers
 over SQL strings, e.g. drop-indexes.go:69-96).

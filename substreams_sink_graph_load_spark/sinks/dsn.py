@@ -7,7 +7,7 @@ the envsubst grammar the reference links — expand BEFORE URL parsing, so
 secrets live in the environment and never in command lines or shell
 history.  The parsed DSN renders to the libpq keyword/value form
 ``host=... port=... user=... dbname=... <sorted options> [password=...]``
-that both psycopg and the psql CLI accept.
+that libpq (and so the psql CLI) accepts.
 """
 
 from __future__ import annotations

@@ -9,14 +9,10 @@ parallelism and placement: files distribute over executors with
 ``foreachPartition``, each partition holding one pooled connection
 (inject_csv.go:78 uses 2-3; one per task here).
 
-Two wire backends, picked per task at runtime:
-
-* ``psycopg`` when importable — one pooled connection per partition,
-  ``cursor.copy()`` streaming (the reference's pgx CopyFrom analogue);
-* the ``psql`` CLI otherwise — ``psql <conninfo> -c 'COPY ... FROM STDIN'``
-  with the file on stdin.  libpq does the exact same protocol either way,
-  so the integration test exercises the identical COPY statement and CSV
-  bytes that production psycopg would send.
+The wire client is the ``psql`` CLI: each task pipes its files' ``\\copy``
+meta-commands into one ``psql <conninfo>`` process.  libpq speaks the same
+COPY protocol as the reference's pgx ``CopyFrom``, so the live test
+exercises the exact COPY statement and CSV bytes production sends.
 
 Replicated reference quirk (verified against a live server in
 tests/test_postgres_live.py): absent nullable fields render as the literal
@@ -107,8 +103,8 @@ def validate_csv_header(path: str, desc: EntityDesc) -> list[str]:
 def run_sql(dsn: str, sql: str) -> list[tuple[str, ...]]:
     """Execute one SQL statement; rows come back as tuples of strings.
 
-    psycopg when available, else the ``psql`` CLI with tuple-only unaligned
-    output.  Orchestration path (DDL from :mod:`.ddl`, count checks) — not a
+    Runs through the ``psql`` CLI with tuple-only unaligned output.
+    Orchestration path (DDL from :mod:`.ddl`, count checks) — not a
     data path, so CLI string parsing is fine.
 
     DSNs accept ``${ENV}`` substitution and the ``postgresql://`` URL form
@@ -117,18 +113,8 @@ def run_sql(dsn: str, sql: str) -> list[tuple[str, ...]]:
     from .dsn import expand_dsn
 
     dsn = expand_dsn(dsn)
-    try:
-        import psycopg
-    except ImportError:
-        psycopg = None
-    if psycopg is not None:
-        with psycopg.connect(dsn) as conn, conn.cursor() as cur:
-            cur.execute(sql)
-            if cur.description is None:
-                return []
-            return [tuple("" if v is None else str(v) for v in r) for r in cur.fetchall()]
     if shutil.which("psql") is None:  # pragma: no cover - environment-specific
-        raise NotImplementedError("neither psycopg nor psql available")
+        raise NotImplementedError("psql not on PATH")
     out = subprocess.run(
         ["psql", dsn, "-v", "ON_ERROR_STOP=1", "-X", "-q", "-At", "-F", "\x1f", "-c", sql],
         check=True, capture_output=True, text=True,
@@ -139,9 +125,9 @@ def run_sql(dsn: str, sql: str) -> list[tuple[str, ...]]:
 def _psql_copy_many(dsn: str, copy_sql: str, paths: Sequence[str]) -> None:
     """COPY many files over ONE psql process/connection: each file becomes
     a client-side ``\\copy`` meta-command on stdin.  One subprocess + one
-    connection per task, like the psycopg path and the reference's libpq
-    loop — a process spawn per file dominated the measured injection rate
-    at bundle-file granularity (PLANS.md "r9: COPY sink measured against
+    connection per task, like the reference's libpq loop — a process
+    spawn per file dominated the measured injection rate at bundle-file
+    granularity (PLANS.md "r9: COPY sink measured against
     the reference's one performance claim": 1000-row bundles made COPY
     *slower* than batched INSERT until this).
 
@@ -176,14 +162,14 @@ def inject_csv_files(
     pg_schema: str,
     table: str,
     desc: EntityDesc,
-    pool_conns: int = 3,
 ):
     """Distribute COPY-per-file over executors.
 
-    Each task opens one connection and streams its files through
-    ``copy_expert`` — the partition-wise analogue of running N inject
-    processes (reference README.md:83-87 parallelizes per entity; we
-    parallelize per file batch as well).
+    Each of (at most) three tasks — the reference pools 2-3 connections
+    (inject_csv.go:78) — COPYs its files over one ``psql`` connection in
+    one transaction (:func:`_psql_copy_many`): the partition-wise analogue
+    of running N inject processes (reference README.md:83-87 parallelizes
+    per entity; we parallelize per file batch as well).
     """
     if not files:
         return 0
@@ -197,29 +183,14 @@ def inject_csv_files(
     copy_sql = build_copy_sql(pg_schema, table, columns, fnn)
 
     def load_partition(paths):
-        try:
-            import psycopg
-        except ImportError:
-            psycopg = None
-        n = 0
-        if psycopg is not None:  # pragma: no cover - psycopg not in CI image
-            with psycopg.connect(dsn) as conn:
-                for p in paths:
-                    with conn.cursor() as cur, open(p, "rb") as fh:
-                        with cur.copy(copy_sql) as cp:
-                            while chunk := fh.read(1 << 20):
-                                cp.write(chunk)
-                    n += 1
-                conn.commit()
-            return [n]
         if shutil.which("psql") is None:  # pragma: no cover
             raise NotImplementedError(
-                "psycopg not installed and psql not on PATH; install either "
-                "to inject, or run the generated COPY statements manually"
+                "psql not on PATH; install it to inject, or run the "
+                "generated COPY statements manually"
             )
         paths = list(paths)
         _psql_copy_many(dsn, copy_sql, paths)
         return [len(paths)]
 
-    rdd = spark.sparkContext.parallelize(list(files), min(pool_conns, len(files)))
+    rdd = spark.sparkContext.parallelize(list(files), min(3, len(files)))
     return sum(rdd.mapPartitions(load_partition).collect())

@@ -45,7 +45,6 @@ import base64
 from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # proto3 wire types: 0=VARINT, 1=I64, 2=LEN, 5=I32 (3/4 are legacy groups)
@@ -310,113 +309,10 @@ PROTO_PARSED_SCHEMA = T.StructType(
 )
 
 
-_JSON_UDF_NAME = "entity_changes_json"
-_JSON_UDF_CLASS = "sparkgraft.EntityChangesJsonUdf"
-_JSON_UDF_JAR = "entity-changes-json-udf.jar"
-
-# from_json target for the Java UDF's output: identical member names to
-# PROTO_PARSED_SCHEMA's change payload, so the lifted structs need no
-# reshaping at all.
-_CHANGES_JSON_ARRAY = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("entity", T.StringType()),
-            T.StructField("id", T.StringType()),
-            T.StructField("operation", T.IntegerType()),
-            T.StructField(
-                "fields",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("name", T.StringType()),
-                            T.StructField(
-                                "new_value",
-                                T.StructType(
-                                    [T.StructField("Typed", _TYPED_PY)]
-                                ),
-                            ),
-                        ]
-                    )
-                ),
-            ),
-        ]
-    )
-)
-
-
-def jvm_udf_decode_available(spark) -> bool:
-    """Build/register the runtime-compiled Java wire-decoder UDF; True
-    when ``entity_changes_json(BINARY)`` is callable in this session.
-    Gated on a JDK like the XXH3 UDF — no spark-protobuf jar needed."""
-    import os as _os
-
-    from ..functions.jvm_build import ensure_java_udf
-
-    src = _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-        "functions", "java", "EntityChangesJsonUdf.java",
-    )
-    try:
-        return ensure_java_udf(
-            spark, _JSON_UDF_NAME, _JSON_UDF_CLASS, T.StringType(), src,
-            _JSON_UDF_JAR,
-        )
-    except Exception:
-        return False
-
-
-def parse_change_protobuf_javaudf(raw: DataFrame) -> DataFrame:
-    """JVM-side decode via the runtime-compiled wire-decoder UDF
-    (functions/java/EntityChangesJsonUdf.java): payload -> JSON string
-    (JVM) -> ``from_json`` (JVM) -> posexplode — no Python worker in the
-    data path and NO spark-protobuf jar dependency, so this route runs
-    in any session with a JDK (the sandbox included), not just clusters
-    that ship the connector jar.  Same output schema as the Python
-    codec (PROTO_PARSED_SCHEMA); caller must have registered the UDF
-    via :func:`jvm_udf_decode_available`.
-
-    The intermediate JSON costs one string materialization per payload —
-    the price of riding ``registerJavaFunction`` instead of a native
-    Catalyst expression — but both hops are JVM-side and the shape is
-    identical to the JSONL scan path the engine already optimizes."""
-    has_file = "_file" in raw.columns
-    has_seq = "seq" in raw.columns
-    parsed = raw.select(
-        F.col("block_num").cast("long"),
-        (F.col("_file") if has_file else F.lit(None).cast("string")).alias("_file"),
-        (F.col("seq") if has_seq else F.col("block_num")).cast("long").alias("seq"),
-        F.from_json(
-            F.expr(f"{_JSON_UDF_NAME}(payload)"), _CHANGES_JSON_ARRAY
-        ).alias("_cs"),
-    )
-    ex = parsed.select(
-        "block_num", "_file", "seq", F.posexplode("_cs").alias("_pos", "_c")
-    )
-    c = F.col("_c")
-    return ex.select(
-        "block_num",
-        c["entity"].alias("entity"),
-        c["id"].alias("id"),
-        c["operation"].alias("operation"),
-        c["fields"].alias("fields"),
-        "_file",
-        (F.col("_pos") + 1).cast("int").alias("_line_no"),
-        "seq",
-    )
-
-
-def parse_change_protobuf(raw: DataFrame, method: str = "auto") -> DataFrame:
+def parse_change_protobuf(raw: DataFrame) -> DataFrame:
     """Decode ``(block_num, payload[, _file, seq])`` wire rows into the same
     row shape :func:`..sources.jsonl.parse_change_lines` produces, one row
     per entity change.
-
-    ``method``: ``"javaudf"`` is the PRODUCTION DEFAULT ROUTE — the
-    runtime-compiled wire-decoder UDF (:func:`parse_change_protobuf_javaudf`,
-    JDK-gated, no connector jar needed, differential-tested bit-for-bit
-    against the Python codec incl. the truncation error contract);
-    ``"python"`` is the Arrow-batched wire codec below.  ``"auto"``
-    (default) = javaudf when a JDK is present, else the Python codec, so
-    a bare session still works.
 
     ``seq`` orders changes globally; absent, ``block_num`` is used (wire
     payloads are one-per-block, already totally ordered by block).  Change
@@ -424,18 +320,6 @@ def parse_change_protobuf(raw: DataFrame, method: str = "auto") -> DataFrame:
     reference's ``for _, change := range entityChanges.EntityChanges``
     (sinker.go:242).
     """
-    if method not in ("auto", "javaudf", "python"):
-        raise ValueError(f"unknown protobuf decode method {method!r}")
-    if method == "javaudf" or (
-        method == "auto" and jvm_udf_decode_available(raw.sparkSession)
-    ):
-        if method == "javaudf" and not jvm_udf_decode_available(
-            raw.sparkSession
-        ):
-            raise RuntimeError(
-                "javaudf decode requested but no JDK available to build it"
-            )
-        return parse_change_protobuf_javaudf(raw)
     has_file = "_file" in raw.columns
     has_seq = "seq" in raw.columns
 

@@ -10,7 +10,9 @@ library keeps the cursor).  The transport here is a growing local JSONL
   resumes exactly where it stopped (T5),
 - each microbatch is the half-open line range [start, end),
 - the source is replayable from any committed offset (gRPC reconnect +
-  cursor replay in the reference).
+  cursor replay in the reference),
+- a line without an integer ``block_num`` fails the read, naming the file
+  and the line cursor (the reference fails at the payload unmarshal).
 
 A production deployment swaps ``_read_lines`` for a gRPC client; nothing
 else changes.
@@ -48,13 +50,16 @@ WIRE_SCHEMA = StructType(
 )
 
 
-def _block_of(line: str) -> int:
+def _block_of(line: str, path: str, seq: int) -> int:
     """Extract ``block_num`` from a wire line.
 
     The bundler writes it as the object's last member
     (``..., "block_num": N}`` — types.go:3-9 field order), so a tail slice
     beats a full ``json.loads`` by ~8x in this per-line Python hot path;
     any line not matching the fast shape falls back to real JSON parsing.
+    A line without an integer ``block_num`` raises ``ValueError`` naming
+    the file and its line cursor (``seq``): the reference fails at the
+    unmarshal of a corrupt payload.
     """
     idx = line.rfind('"block_num"')
     if idx != -1:
@@ -66,9 +71,15 @@ def _block_of(line: str) -> int:
             except ValueError:
                 pass
     try:
-        return int(json.loads(line).get("block_num", -1))
-    except (json.JSONDecodeError, TypeError, ValueError, AttributeError):
-        return -1
+        block = json.loads(line)["block_num"]
+    except (json.JSONDecodeError, TypeError, KeyError):
+        block = None
+    if type(block) is not int:
+        raise ValueError(
+            f"wire line without an integer block_num in {path} at line "
+            f"cursor (seq) {seq}: {line[:80]!r}"
+        )
+    return block
 
 
 class _LineRange(InputPartition):
@@ -114,7 +125,7 @@ class EntityChangesStreamReader(DataSourceStreamReader):
         # task measured ~2x faster than 10k at sf0.1 (fewer Python
         # data-source worker round trips); still 36 tasks for a 354 MB
         # backlog, so local[32] stays saturated
-        self.batch_lines = int(options.get("maxlinesperbatch", 50_000))
+        self.batch_lines = 50_000
         self._scan_key: tuple | None = None
         self._line_starts = None  # np.ndarray: byte offset of each line
         self._file_size = 0
@@ -214,13 +225,13 @@ class EntityChangesStreamReader(DataSourceStreamReader):
         missed = pc.or_kleene(pc.is_null(hits), pc.equal(hits, ""))
         if pc.any(missed).as_py():
             # fast pattern missed (reordered members / junk line): exact
-            # per-line fallback, same semantics as before
+            # per-line fallback, which raises on a line with no block
             blocks = pa.array(
                 [
-                    _block_of(v.decode("utf-8", "replace"))
+                    _block_of(v.decode("utf-8", "replace"), partition.path, s)
                     if (m.is_valid and m.as_py())
                     else int(b.as_py())
-                    for b, v, m in zip(hits, lines, missed)
+                    for b, v, m, s in zip(hits, lines, missed, seqs)
                 ],
                 type=pa.int64(),
             )

@@ -277,9 +277,9 @@ def fold_runs_batched(
 
     for key, block, offset, evs in runs:
         # Sort (seq, payload) exactly like the scalar twin's events.sort()
-        # (operators/poi.py:_fold_events): with duplicate seqs a seq-only
-        # stable sort would address events by arrival order and diverge
-        # from the reference digest.  Dict-mode callers (tests) get a
+        # (the per-event oracle fold in tests/test_poi_spark.py): with
+        # duplicate seqs a seq-only stable sort would address events by
+        # arrival order and diverge from the reference digest.  Dict-mode callers (tests) get a
         # canonical JSON rendering as the equivalent tiebreak.
         evs.sort(
             key=lambda t: (

@@ -10,15 +10,9 @@ The ``xxhash`` C wheel is not available in this environment, hence the pure
 port.  POI inputs are tiny (field encodings, 24-byte mixer states), so the
 short-input paths dominate; fine for the UDF batch path.
 
-The JVM-side implementation this docstring used to promise now ships:
-``functions/jvm_xxh3.ensure_jvm_xxh3`` compiles and registers
-``functions/java/XXH3_128Udf.java`` as the SQL function
-``xxh3_128_seed(BINARY, BIGINT) -> BINARY(16)`` whenever a JDK is
-present (differential-tested bit-for-bit against this port in
-tests/test_jvm_xxh3.py; ~0.9M hashes/s/core vs ~66k for the scalar
-Python path).  This module remains the always-available fallback and
-the trust anchor: it, not the JVM port, reproduces the reference's
-golden vectors directly.
+The POI hot path hashes through the numpy kernels in ``xxh3_batch.py``
+(differential-tested against this port); this module is the scalar trust
+anchor that reproduces the reference's golden vectors directly.
 """
 
 from __future__ import annotations

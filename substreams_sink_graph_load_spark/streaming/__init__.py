@@ -1,8 +1,5 @@
-"""Structured Streaming wrapper — the reference's ``graphload run`` role
-(SURVEY §2.10, §3.1) re-expressed as readStream -> foreachBatch incremental
-SCD-2 with cross-batch open-version state.
+"""The reference's ``graphload run`` role (SURVEY §2.10, §3.1): wire-stream
+ingest into per-entity JSONL bundles + ``poi2$`` (:mod:`.ingest`) and the
+CLI's progress heartbeat (:mod:`.stats`).  ``tocsv`` is a batch replay, as
+in the reference.
 """
-
-from .run import StreamingSink, run_stream
-
-__all__ = ["StreamingSink", "run_stream"]

@@ -3,9 +3,9 @@
 per-entity bundled JSONL files, compute the POI chain over the SAME
 interleaved order, and write ``last_block.txt``.
 
-Shape: the wire stream (custom DataSource or any (block_num, seq, value)
-stream) stages to a parquet log per microbatch (cheap append, cursor
-checkpointed by Spark); finalize() then cuts the bundle files in one batch
+Shape: the wire stream (the custom ``entity_changes`` DataSource) stages
+to a parquet log per microbatch (cheap append, cursor checkpointed by
+Spark); finalize() then cuts the bundle files in one batch
 job — entity routing is ONE repartition on (entity, bundle_start) feeding a
 single two-level ``partitionBy`` text write (every entity x bundle lands in
 its own directory in one pass; no per-entity rescans), POI is the §2.5
@@ -260,9 +260,11 @@ def demux_jsonl(
                 f"[{first_block}, {stop_block}); truncate or filter upstream"
             )
 
+    # typed explicitly: an empty wire gives an empty map, which Spark
+    # would otherwise type map<void,void> and refuse to index by string
     mapping = F.create_map(
         *[F.lit(x) for kv in sorted(norm_map.items()) for x in kv]
-    )
+    ).cast("map<string,string>")
     staged = os.path.join(dest_dir, "_staged_demux")
     (
         raw.select(
@@ -352,48 +354,41 @@ def run_ingest(
     dest_dir: str,
     entities: list[str],
     stop_block: int,
-    wire_path: str | None = None,
-    stream_df: DataFrame | None = None,
+    wire_path: str,
     bundle_size: int = 1000,
     chain_id: str | None = None,
     start_poi: bytes | None = None,
     workdir: str | None = None,
-    enforce_order: bool = True,
     first_block: int = 0,
 ) -> dict[str, list[str]]:
     """Full ``run`` parity: wire stream -> per-entity JSONL bundles
     (+ optional poi2$ CSV chain over the interleaved order) +
     ``last_block.txt``.
 
-    Source: either ``wire_path`` (consumed via the custom
-    ``entity_changes`` DataSource, cursor-checkpointed) or a prepared
-    ``stream_df`` with (block_num, seq, value).
+    Source: ``wire_path``, consumed via the custom ``entity_changes``
+    DataSource (cursor-checkpointed).
 
-    ``enforce_order`` reproduces the reference's source contract: block
-    numbers must be non-decreasing in cursor order — an undo/reorg signal
-    (a block below the high-water mark) is fatal (ref sinker.go:291-293
-    errors on any undo; the sink demands final-blocks-only).
+    The reference's source contract is enforced: block numbers must be
+    non-decreasing in cursor order — an undo/reorg signal (a block below
+    the high-water mark) is fatal (ref sinker.go:291-293 errors on any
+    undo; the sink demands final-blocks-only).
 
     ``first_block`` is the sinker start block: bundle enumeration starts at
     its aligned bundle (the reference's bundlers boot at the start block,
     not 0).
     """
+    from ..operators.poi import discover_runs
     from ..sources.stream_source import EntityChangesDataSource
 
     workdir = workdir or os.path.join(dest_dir, "_work_ingest")
     ingest = WireIngest(spark, workdir, stop_block)
 
-    if stream_df is None:
-        if wire_path is None:
-            raise ValueError("need wire_path or stream_df")
-        spark.dataSource.register(EntityChangesDataSource)
-        stream_df = (
-            spark.readStream.format("entity_changes")
-            .option("path", wire_path)
-            .load()
-        )
+    spark.dataSource.register(EntityChangesDataSource)
     query = (
-        stream_df.writeStream.foreachBatch(ingest.process_batch)
+        spark.readStream.format("entity_changes")
+        .option("path", wire_path)
+        .load()
+        .writeStream.foreachBatch(ingest.process_batch)
         .option("checkpointLocation", os.path.join(workdir, "checkpoint"))
         .trigger(availableNow=True)
         .start()
@@ -401,21 +396,13 @@ def run_ingest(
     query.awaitTermination()
 
     staged = ingest.staged_df()
-    last: int | None = None
     # One narrow (block_num, seq) pass serves BOTH the order check and
     # the POI fold's run offsets — at cluster scale that deletes a full
     # log-key shuffle+window (the former standalone order check)
-    runs = None
-    if enforce_order or chain_id is not None:
-        from ..operators.poi import discover_runs
-
-        runs = discover_runs(staged)
-    if enforce_order:
-        ok = False
-        if runs is not None:
-            ok, last = check_final_blocks_from_runs(runs)
-        if not ok:
-            last = check_final_blocks_only(staged)
+    runs = discover_runs(staged)
+    ok, last = (False, None) if runs is None else check_final_blocks_from_runs(runs)
+    if not ok:
+        last = check_final_blocks_only(staged)
     # The sinker start block: blocks below first_block belong to an
     # earlier run's bundles, so drop them HERE, deliberately and
     # documented — demux_jsonl itself treats any out-of-range row as a
@@ -433,10 +420,9 @@ def run_ingest(
         # The staged log is written in cursor order (micro-batch appends),
         # so the shuffle-free POI fold applies; it validates the
         # assumption and falls back to the shuffle path on any mismatch.
-        # Discovery ALWAYS ran above when chain_id is set, so runs=None
-        # here means it exceeded its bound — tell the fold so it goes
-        # straight to the shuffle path instead of re-scanning to rediscover
-        # the same overflow.
+        # runs=None means discovery exceeded its bound — tell the fold so
+        # it goes straight to the shuffle path instead of re-scanning to
+        # rediscover the same overflow.
         files["poi2$"] = poi_tocsv(
             spark, staged, dest_dir, chain_id, stop_block,
             bundle_size=bundle_size, start_poi=start_poi,
@@ -444,10 +430,7 @@ def run_ingest(
             runs=runs if runs is not None else RUNS_UNAVAILABLE,
         )
 
-    # the order check already computed the global max; only re-scan when
-    # it was skipped (enforce_order=False)
-    if last is None:
-        last = staged.agg(F.max("block_num")).collect()[0][0]
+    # the order check computed the global max (None on an empty log)
     with open(os.path.join(dest_dir, "last_block.txt"), "w") as fh:
         fh.write(f"{last or 0}:\n")
     return files

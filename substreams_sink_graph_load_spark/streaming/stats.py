@@ -58,11 +58,6 @@ class ProgressReporter:
         )
 
     # -- sampling ----------------------------------------------------------
-    def attach(self, query) -> None:
-        """Track a query explicitly (exact counts even if it finishes
-        between polls)."""
-        self._queries[query.id] = query
-
     def _sample_streams(self) -> None:
         try:
             for q in self._spark.streams.active:

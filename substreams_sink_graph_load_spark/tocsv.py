@@ -36,7 +36,6 @@ def tocsv(
     schema_file: str,
     stop_block: int,
     bundle_size: int = 1000,
-    check_files: bool = True,
     strict: bool = False,
 ) -> list[str]:
     """Transform one entity's JSONL change-log into bundled CSV files.
@@ -60,13 +59,10 @@ def tocsv(
     all_files = sorted(_glob.glob(os.path.join(src_dir, entity, "*.jsonl")))
     if not all_files:
         raise ValueError(f"cannot find any entity file under {src_dir}/{entity}")
-    if check_files:
-        # coverage is mandatory like the reference (processor.go:145-146):
-        # an input listing short of stop_block errors instead of silently
-        # emitting end-of-log flush rows the reference would never write
-        files = check_contiguity(all_files, stop_block, require_coverage=True)
-    else:
-        files = all_files
+    # coverage is mandatory like the reference (processor.go:145-146): an
+    # input listing short of stop_block errors instead of silently emitting
+    # end-of-log flush rows the reference would never write
+    files = check_contiguity(all_files, stop_block, require_coverage=True)
     raw = read_change_jsonl(spark, files)
     if strict:
         # a line that fails from_json yields a null block_num; the loose
@@ -134,7 +130,6 @@ def tocsv_all(
     schema_file: str,
     stop_block: int,
     bundle_size: int = 1000,
-    max_parallel: int = 4,
 ) -> dict[str, list[str]]:
     """Every schema entity in one Spark application.
 
@@ -142,7 +137,7 @@ def tocsv_all(
     (README.md:42-45); here entities are concurrent jobs in one shared
     session (Spark job submission is thread-safe) — scheduler slots fill
     across entities during each job's narrow stages and driver-side file
-    renames.
+    renames.  At most four entity jobs run at once.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -158,9 +153,9 @@ def tocsv_all(
             stop_block=stop_block, bundle_size=bundle_size,
         )
 
-    if max_parallel <= 1 or len(entities) <= 1:
+    if len(entities) <= 1:
         return dict(one(e) for e in entities)
-    with ThreadPoolExecutor(max_workers=min(max_parallel, len(entities))) as ex:
+    with ThreadPoolExecutor(max_workers=min(4, len(entities))) as ex:
         return dict(ex.map(one, entities))
 
 

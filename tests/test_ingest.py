@@ -205,27 +205,94 @@ def test_undo_detected_across_chunk_boundary(spark):
 
 def test_stream_reader_junk_line_fallback(tmp_path):
     """A line the fast RE2 pattern can't parse falls back to the exact
-    Python extractor: reordered members still parse, junk yields -1."""
+    Python extractor: reordered members still parse; a line without an
+    integer block_num raises, naming the file and its line cursor."""
     from substreams_sink_graph_load_spark.sources.stream_source import (
         EntityChangesStreamReader,
     )
 
-    wire = tmp_path / "wire.jsonl"
-    wire.write_text(
+    def read(body):
+        wire = tmp_path / "wire.jsonl"
+        wire.write_text(body)
+        r = EntityChangesStreamReader({"path": str(wire)})
+        end = r.latestOffset()
+        rows = []
+        for p in r.partitions({"line": 0}, end):
+            for batch in r.read(p):
+                rows.extend(zip(*[c.to_pylist() for c in batch.columns]))
+        return end, rows
+
+    end, rows = read(
         '{"entity_change": {}, "block_num": 5}\n'
         '{"block_num": 6, "entity_change": {}}\n'  # reordered members
-        "not json at all\n"
         "\n"  # empty line: skipped, but seq advances
         '{"entity_change": {}, "block_num": 7}\n'
     )
-    r = EntityChangesStreamReader({"path": str(wire)})
-    assert r.latestOffset() == {"line": 5}
-    parts = r.partitions({"line": 0}, {"line": 5})
-    rows = []
-    for p in parts:
-        for batch in r.read(p):
-            rows.extend(zip(*[c.to_pylist() for c in batch.columns]))
-    assert [(b, s) for b, s, _v in rows] == [(5, 0), (6, 1), (-1, 2), (7, 4)]
+    assert end == {"line": 4}
+    assert [(b, s) for b, s, _v in rows] == [(5, 0), (6, 1), (7, 3)]
+
+    for junk in ("not json at all", '{"block_num": "6"}', '{"entity_change": {}}'):
+        with pytest.raises(ValueError, match=r"cursor \(seq\) 2\b") as exc:
+            read(
+                '{"entity_change": {}, "block_num": 5}\n'
+                '{"block_num": 6, "entity_change": {}}\n'
+                f"{junk}\n"
+                '{"entity_change": {}, "block_num": 7}\n'
+            )
+        assert str(tmp_path / "wire.jsonl") in str(exc.value)
+
+
+def _account_line(block):
+    return json.dumps({"entity_change": {"entity": "Account", "id": "x",
+                                         "operation": 1, "fields": []},
+                       "block_num": block})
+
+
+@pytest.mark.parametrize("chain_id", [None, "chain-x"])
+@pytest.mark.parametrize("seq", [0, 2], ids=["first", "middle"])
+def test_run_ingest_rejects_corrupt_line(spark, tmp_path, seq, chain_id):
+    """`run` fails at a corrupt wire line like the reference's unmarshal,
+    with the line cursor in the message — it is never read as block -1
+    (silently filtered as the first line, or reported as an undo)."""
+    lines = [_account_line(b) for b in (10, 20, 30)]
+    lines.insert(seq, "not json at all")
+    wire = tmp_path / "wire.jsonl"
+    wire.write_text("\n".join(lines) + "\n")
+    with pytest.raises(Exception, match=rf"cursor \(seq\) {seq}\b") as exc:
+        run_ingest(
+            spark, str(tmp_path / "out"), entities=["account"],
+            stop_block=1000, wire_path=str(wire), bundle_size=1000,
+            chain_id=chain_id,
+        )
+    assert "high-water mark" not in str(exc.value)
+
+
+def test_run_ingest_empty_wire(spark, tmp_path):
+    """An empty wire still cuts every entity's (empty) bundles, a
+    header-only poi2$ file per bundle, and ``last_block.txt`` = ``0:``."""
+    wire = tmp_path / "wire.jsonl"
+    wire.write_text("")
+    out = tmp_path / "out"
+    files = run_ingest(
+        spark, str(out), entities=["account", "transfer"], stop_block=3000,
+        wire_path=str(wire), bundle_size=1000, chain_id="chain-empty",
+    )
+    bundles = ["0000000000-0000000999", "0000001000-0000001999",
+               "0000002000-0000002999"]
+    assert sorted(files) == ["account", "poi2$", "transfer"]
+    for ent in ("account", "transfer"):
+        assert [os.path.relpath(f, out) for f in files[ent]] == [
+            f"{ent}/{b}.jsonl" for b in bundles
+        ]
+        assert all(os.path.getsize(f) == 0 for f in files[ent])
+    assert [os.path.relpath(f, out) for f in files["poi2$"]] == [
+        f"poi2$/{b}.csv" for b in bundles
+    ]
+    for f in files["poi2$"]:
+        with open(f, "rb") as fh:
+            assert fh.read() == b"id,block_range,digest\n"
+    with open(out / "last_block.txt") as fh:
+        assert fh.read() == "0:\n"
 
 
 def _raw_df(spark, rows):

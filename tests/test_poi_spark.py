@@ -8,6 +8,21 @@ from substreams_sink_graph_load_spark.stablehash.core import FastHasher, fldmix_
 from substreams_sink_graph_load_spark.stablehash.poi import ProofOfIndexing
 
 
+def _fold_events(block: int, events: list[tuple[int, str]]) -> bytes:
+    """Per-event reference fold (one ProofOfIndexing, sequential writes):
+    the scalar twin the batched fold (stablehash.poi.fold_blocks_batched,
+    numpy XXH3 kernels) is differentially tested against."""
+    events.sort()
+    poi = ProofOfIndexing(block)
+    for _, line in events:
+        ch = json.loads(line)["entity_change"]
+        if ch.get("operation") in (3, "OPERATION_DELETE"):
+            poi.remove_entity(ch["entity"], ch["id"])
+        else:
+            poi.set_entity(ch["entity"], ch["id"], ch.get("fields") or [])
+    return poi.pause(None)
+
+
 def _line(block, entity, id_, op, fields):
     return json.dumps(
         {
@@ -128,7 +143,6 @@ def test_batched_fold_matches_scalar_reference():
     import json
     import random
 
-    from substreams_sink_graph_load_spark.operators.poi import _fold_events
     from substreams_sink_graph_load_spark.stablehash.poi import (
         fold_blocks_batched,
     )
@@ -198,7 +212,6 @@ def test_batched_fold_duplicate_seqs_match_scalar():
     the event addressing (golden anchor: poi/poi_test.go:12-29)."""
     import json
 
-    from substreams_sink_graph_load_spark.operators.poi import _fold_events
     from substreams_sink_graph_load_spark.stablehash.poi import (
         fold_blocks_batched,
     )

@@ -6,8 +6,8 @@ our CSV bytes match the reference writer, and THIS module proves a real
 Postgres server parses those bytes — int4range literals, bytea hex, array
 literals, FORCE_NOT_NULL semantics — by spinning up a throwaway cluster
 (initdb + pg_ctl, unix socket, trust auth).  Skipped when server binaries
-are absent.  Runs the sink's psql CLI backend; libpq speaks the same COPY
-protocol psycopg would.
+are absent.  Runs the sink's psql CLI client; libpq speaks the same COPY
+protocol as the reference's pgx.
 """
 
 from __future__ import annotations

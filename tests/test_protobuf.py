@@ -10,7 +10,6 @@ import base64
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from substreams_sink_graph_load_spark.schema.entities import parse_schema
 from substreams_sink_graph_load_spark.sources.jsonl import (
@@ -137,74 +136,15 @@ def test_proto_roundtrip_query_oracle(spark, sf_dir):
     assert s.equals(o.astype(s.dtypes.to_dict()))
 
 
-def test_auto_method_matches_python_codec(spark):
-    """method='auto' lands on the runtime-compiled Java UDF where a JDK
-    exists, else on the Python codec, with identical rows either way; an
-    unknown method is rejected."""
-    from substreams_sink_graph_load_spark.sources.protobuf import (
-        parse_change_protobuf,
-    )
-
-    wire = spark.createDataFrame(
-        [(7, bytearray(encode_entity_changes(CHANGES)), 1)],
-        "block_num long, payload binary, seq long",
-    )
-    auto = parse_change_protobuf(wire, method="auto").collect()
-    py = parse_change_protobuf(wire, method="python").collect()
-    assert auto == py and len(auto) == len(CHANGES)
-    with pytest.raises(ValueError, match="unknown protobuf decode method"):
-        parse_change_protobuf(wire, method="jvm")
-
-
-def test_javaudf_decode_matches_python_codec(spark):
-    """Differential for the runtime-compiled JVM wire decoder: identical
-    rows to the Python codec on the full edge fixture — unicode + JSON
-    metacharacters, negative Int32, explicit zero values, bytes, arrays
-    (incl. empty), an empty change, and spliced unknown fields."""
-    from substreams_sink_graph_load_spark.sources.protobuf import (
-        jvm_udf_decode_available,
-        parse_change_protobuf,
-    )
-
-    if not jvm_udf_decode_available(spark):
-        pytest.skip("no JDK to build the decoder UDF")
-    edge = [dict(CHANGES[0])]
-    edge[0] = dict(edge[0])
-    edge[0]["fields"] = CHANGES[0]["fields"] + [
-        {"name": 'q"\\\n', "new_value": {"Typed": {"String_": "\t\r\x01"}}},
-        {"name": "zero", "new_value": {"Typed": {"Int32": 0}}},
-        {"name": "noval"},
-    ]
-    body = encode_entity_changes(edge + CHANGES[1:])
-    noisy = _enc_tag(99, 0) + _enc_varint(12345) + _enc_len(100, b"future") + body
-    wire = spark.createDataFrame(
-        [(7, bytearray(noisy), 1), (8, bytearray(b""), 2)],
-        "block_num long, payload binary, seq long",
-    )
-    j = parse_change_protobuf(wire, method="javaudf").collect()
-    p = parse_change_protobuf(wire, method="python").collect()
-    assert j == p and len(j) == len(edge) + len(CHANGES) - 1
-
-
-def test_javaudf_truncated_payload_fails_loudly(spark):
-    """Error-contract differential for the JVM wire decoder (r6 advice):
-    a length varint above 2^31 or past the enclosing message must raise
-    ("truncated length-delimited field", same contract as the Python
-    codec), never wrap negative, walk the cursor backwards, and loop an
-    executor forever."""
-    from substreams_sink_graph_load_spark.sources.protobuf import (
-        jvm_udf_decode_available,
-        parse_change_protobuf,
-    )
-
-    if not jvm_udf_decode_available(spark):
-        pytest.skip("no JDK to build the decoder UDF")
-
+def test_truncated_payload_fails_through_spark(spark):
+    """The decode error contract through Spark: a length varint above 2^31
+    or past the enclosing message must raise ("truncated"), never wrap
+    negative, walk the cursor backwards, or loop an executor forever."""
     ok = encode_entity_changes(CHANGES)
     bad_payloads = [
         # top-level change length claims bytes past end-of-buffer
         _enc_tag(5, 2) + _enc_varint(100) + b"abc",
-        # length varint > 2^31: (int) cast used to truncate negative
+        # length varint > 2^31
         _enc_tag(5, 2) + _enc_varint(2**32 + 7) + b"abc",
         # nested: field length inside a change overruns the change body
         _enc_tag(5, 2)
@@ -218,80 +158,11 @@ def test_javaudf_truncated_payload_fails_loudly(spark):
             [(1, bytearray(ok), 1), (2, bytearray(bad), 2)],
             "block_num long, payload binary, seq long",
         )
-        # executor-side errors surface as PySpark-captured exceptions on
-        # both routes; the contract under test is the shared message
+        # executor-side errors surface as PySpark-captured exceptions
         with pytest.raises(Exception, match="truncated"):
-            parse_change_protobuf(wire, method="python").collect()
-        with pytest.raises(Exception, match="truncated"):
-            parse_change_protobuf(wire, method="javaudf").collect()
-    # the well-formed payload alone still decodes on both routes
+            parse_change_protobuf(wire).collect()
+    # the well-formed payload alone still decodes
     wire = spark.createDataFrame(
         [(1, bytearray(ok), 1)], "block_num long, payload binary, seq long"
     )
-    assert (
-        parse_change_protobuf(wire, method="javaudf").collect()
-        == parse_change_protobuf(wire, method="python").collect()
-    )
-
-
-def test_javaudf_randomized_differential(spark):
-    """Seeded fuzz over the full message shape space: 200 random changes
-    (every oneof kind, unicode/control-char strings, nested arrays,
-    empty members) through encode -> Java-UDF decode vs Python codec."""
-    import random
-    import string as _string
-
-    from substreams_sink_graph_load_spark.sources.protobuf import (
-        jvm_udf_decode_available,
-        parse_change_protobuf,
-    )
-
-    if not jvm_udf_decode_available(spark):
-        pytest.skip("no JDK to build the decoder UDF")
-    rng = random.Random(0xC0FFEE)
-    alphabet = _string.ascii_letters + _string.digits + '"\\/\t\n\r ,:{}[]' + "åß✓\x01\x1f"
-
-    def rand_text(max_len=12):
-        return "".join(rng.choice(alphabet) for _ in range(rng.randrange(max_len)))
-
-    def rand_scalar():
-        kind = rng.randrange(6)
-        if kind == 0:
-            return {"Int32": rng.randint(-(2**31), 2**31 - 1)}
-        if kind == 1:
-            return {"Bigint": str(rng.randint(-10**30, 10**30))}
-        if kind == 2:
-            return {"Bigdecimal": f"{rng.randint(-999, 999)}.{rng.randrange(10**6)}"}
-        if kind == 3:
-            return {"String_": rand_text()}
-        if kind == 4:
-            return {"Bytes": base64.b64encode(bytes(rng.randrange(256) for _ in range(rng.randrange(8)))).decode()}
-        return {"Boolean": rng.random() < 0.5}
-
-    def rand_typed():
-        if rng.random() < 0.2:
-            return {"Array": {"value": [
-                {"Typed": rand_scalar()} for _ in range(rng.randrange(4))
-            ]}}
-        return rand_scalar()
-
-    def rand_change():
-        return {
-            "entity": rand_text(8),
-            "id": rand_text(8),
-            "operation": rng.randrange(5),
-            "fields": [
-                {"name": rand_text(8), "new_value": {"Typed": rand_typed()}}
-                for _ in range(rng.randrange(5))
-            ],
-        }
-
-    payloads = [
-        (i, bytearray(encode_entity_changes([rand_change() for _ in range(rng.randrange(1, 4))])), i)
-        for i in range(80)
-    ]
-    wire = spark.createDataFrame(payloads, "block_num long, payload binary, seq long")
-    key = lambda r: (r["block_num"], r["_line_no"])
-    j = sorted(parse_change_protobuf(wire, method="javaudf").collect(), key=key)
-    p = sorted(parse_change_protobuf(wire, method="python").collect(), key=key)
-    assert j == p and len(j) > 100
+    assert len(parse_change_protobuf(wire).collect()) == len(CHANGES)

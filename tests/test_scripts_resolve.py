@@ -1,9 +1,11 @@
-"""Every package import in ``scripts/*.py`` and ``__spark_entry__.py``
-names something the package still defines.
+"""Every package import in ``scripts/*.py``, ``bench.py``,
+``__spark_entry__.py`` and ``perfbench/*.py`` names something the package
+still defines, and so does every layer function ``perfbench/spans.py``
+wraps (``PIPELINE_SPANS``).
 
 Resolved statically from the source files (no import, no Spark): a
-deletion in the package that orphans a script fails here instead of at
-the script's next run.
+deletion in the package that orphans a script or a benchmark span fails
+here instead of at the script's next run.
 """
 
 from __future__ import annotations
@@ -15,7 +17,22 @@ import pytest
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = "substreams_sink_graph_load_spark"
-SOURCES = sorted((ROOT / "scripts").glob("*.py")) + [ROOT / "__spark_entry__.py"]
+SOURCES = (
+    sorted((ROOT / "scripts").glob("*.py"))
+    + [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    + sorted((ROOT / "perfbench").glob("*.py"))
+)
+
+
+def _pipeline_spans() -> list[tuple[str, str, str]]:
+    """``PIPELINE_SPANS`` read as a literal from perfbench/spans.py."""
+    for node in ast.parse((ROOT / "perfbench" / "spans.py").read_text()).body:
+        if isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "PIPELINE_SPANS"
+            for t in node.targets
+        ):
+            return ast.literal_eval(node.value)
+    raise AssertionError("perfbench/spans.py defines no PIPELINE_SPANS")
 
 
 def _module_file(dotted: str) -> pathlib.Path | None:
@@ -67,4 +84,29 @@ def test_package_imports_resolve(path):
         elif name is not None and name not in _top_level_names(mod_file):
             if _module_file(f"{module}.{name}") is None:
                 missing.append(f"line {lineno}: {module} has no {name}")
-    assert not missing, f"{path.name}: " + "; ".join(missing)
+    assert not missing, f"{path.relative_to(ROOT)}: " + "; ".join(missing)
+
+
+SPANS = _pipeline_spans()
+
+
+@pytest.mark.parametrize("module,attr,span", SPANS, ids=[s[2] for s in SPANS])
+def test_pipeline_span_resolves(module, attr, span):
+    """``perfbench/run.py --trace 1`` wraps ``<module>.<attr>`` (attr may be
+    ``Class.method``); each must still be defined at its module's top
+    level."""
+    mod_file = _module_file(f"{PKG}.{module}")
+    assert mod_file is not None, f"{span}: no module {PKG}.{module}"
+    body = ast.parse(mod_file.read_text()).body
+    head, _, method = attr.partition(".")
+    if not method:
+        assert head in _top_level_names(mod_file), f"{span}: {module} has no {head}"
+        return
+    cls = next(
+        (n for n in body if isinstance(n, ast.ClassDef) and n.name == head), None
+    )
+    assert cls is not None, f"{span}: {module} has no class {head}"
+    assert any(
+        isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)) and n.name == method
+        for n in cls.body
+    ), f"{span}: {module}.{head} has no method {method}"
