@@ -14,9 +14,9 @@ A reference user maps each command 1:1:
     python -m substreams_sink_graph_load_spark create-index <ddl-file>
 
 SQL-emitting commands print their statements (pipe to psql); data commands
-run Spark jobs.  No gRPC endpoint exists in this environment, so ``run``
-consumes the wire-file stand-in via the custom streaming DataSource — the
-cursor/resume/bundling behavior is the real path (sources/stream_source.py).
+run Spark jobs.  ``run`` reads a wire JSONL file, the stand-in for the
+reference's gRPC stream, in one batch (streaming/ingest.py); it resumes by
+``--start-block`` + ``--start-poi``, as the reference does.
 """
 
 from __future__ import annotations
@@ -49,7 +49,8 @@ def main(argv: list[str] | None = None) -> int:
     sp.add_argument("--start-poi", default=None,
                     help="hex POI digest of the last block before --start-block")
     sp.add_argument("--working-dir", default=None,
-                    help="local staging directory (default: temp dir)")
+                    help="staging directory, overwritten by each run "
+                         "(default: <dest>/_work_ingest)")
 
     sp = sub.add_parser("tocsv", help="bundled JSONL -> versioned CSV bundles")
     sp.add_argument("src"), sp.add_argument("dest"), sp.add_argument("entity")

@@ -54,6 +54,27 @@ def expected_bundles(first_block: int, stop_block: int, bundle_size: int) -> lis
     return [bundle_filename(s, e) for s, e in boundaries(first_block, stop_block, bundle_size)]
 
 
+def header_rows(
+    spark: SparkSession,
+    header: str,
+    first_block: int,
+    stop_block: int,
+    bundle_size: int,
+    order_cols: list[str],
+) -> DataFrame:
+    """One ``header`` row per bundle of :func:`boundaries`, shaped like
+    write_bundled_lines' data rows with ``_hdr`` = 0.  The bundle starts
+    come from ``spark.range``, so no Python worker starts."""
+    return spark.range(
+        first_block - first_block % bundle_size, stop_block, bundle_size
+    ).select(
+        F.col("id").alias("bundle_start"),
+        F.lit(0).alias("_hdr"),
+        *[F.lit(0).cast("long").alias(c) for c in order_cols],
+        F.lit(header).alias("line"),
+    )
+
+
 def write_bundled_lines(
     spark: SparkSession,
     lines: DataFrame,
@@ -82,9 +103,9 @@ def write_bundled_lines(
     if header is not None:
         # Header sorts before data via the _hdr flag; one header row per
         # expected bundle also materializes empty bundles.
-        hdr_rows = spark.createDataFrame(
-            [(int(s), header) for s, _ in bounds], "bundle_start long, line string"
-        ).select("bundle_start", F.lit(0).alias("_hdr"), *[F.lit(0).cast("long").alias(c) for c in order_cols], "line")
+        hdr_rows = header_rows(
+            spark, header, first_block, stop_block, bundle_size, order_cols
+        )
         data_rows = hdr_rows.unionByName(data_rows)
 
     staged = os.path.join(dest_dir, "_staged")

@@ -311,9 +311,9 @@ def poi_block_states_sorted(
     runs: list[tuple[int, int, int, int]] | None = None,
 ) -> list[tuple[int, bytes, int]] | None:
     """SHUFFLE-FREE per-block paused POI states for physically seq-sorted
-    logs (the ``run`` stage's staged parquet: micro-batches append in
-    cursor order, so every scan split holds contiguous slices of the
-    global (block, seq) order).
+    logs (the ``run`` stage's staged parquet: each write task stages one
+    wire split in cursor order, so every scan split holds contiguous
+    slices of the global (block, seq) order).
 
     Two scans, zero shuffles of the log:
 
@@ -436,15 +436,25 @@ def poi_chain(
             for r in poi_block_states(raw).collect()
         ]
     chained = chain_block_states(states, start=start_poi)
-    rows = []
+    blocks, digests = [], []
     prev = start_poi
     for block, digest in chained:
         if digest != prev:
-            rows.append((block, chain_id, digest.hex()))
+            blocks.append(block)
+            digests.append(digest.hex())
         prev = digest
-    return spark.createDataFrame(
-        rows or [], "block_num long, id string, digest string"
+    # an Arrow table becomes a JVM local relation: no Python RDD, no
+    # worker start (a pandas frame takes the Python path when empty)
+    import pyarrow as pa
+
+    table = pa.table(
+        {
+            "block_num": pa.array(blocks, pa.int64()),
+            "id": pa.array([chain_id] * len(blocks), pa.string()),
+            "digest": pa.array(digests, pa.string()),
+        }
     )
+    return spark.createDataFrame(table, "block_num long, id string, digest string")
 
 
 def poi_entity_versions(chain: DataFrame) -> DataFrame:

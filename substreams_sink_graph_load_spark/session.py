@@ -19,12 +19,12 @@ def ship_package(spark: SparkSession) -> None:
     """Make this package importable on Spark Python workers regardless of
     the caller's cwd.
 
-    Custom Python data sources and pandas-UDF closures are cloudpickled by
-    name; the worker re-imports the package to unpickle them.  A driver
-    that merely sys.path-inserted the repo leaves workers blind to it, so
-    ship a zip via ``addPyFile`` once per SparkContext.  Library users get
-    this automatically through ``get_spark``; callers who built their own
-    session can call it directly.
+    Pandas-UDF closures are cloudpickled by name; the worker re-imports
+    the package to unpickle them.  A driver that merely sys.path-inserted
+    the repo leaves workers blind to it, so ship a zip via ``addPyFile``
+    once per SparkContext.  Library users get this automatically through
+    ``get_spark``; callers who built their own session can call it
+    directly.
     """
     key = id(spark.sparkContext)
     if key in _SHIPPED:
@@ -63,18 +63,6 @@ def get_spark(
     - UTC session timezone: deterministic timestamp semantics across engines
       (the DuckDB oracle is timezone-naive).
     """
-    # Python data source PLANNER workers (create_data_source /
-    # python_streaming_source_runner) unpickle source classes by module
-    # name but do not see addPyFile paths (only task workers do) — they
-    # inherit PYTHONPATH from the JVM, which inherits it from us.  Must
-    # happen before the JVM launches; on a real cluster the same is done
-    # with --py-files / spark.executorEnv.PYTHONPATH.
-    _parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    _pp = os.environ.get("PYTHONPATH", "")
-    if _parent not in _pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            f"{_parent}{os.pathsep}{_pp}" if _pp else _parent
-        )
     # default: the cores this process may run on (its CPU affinity)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")

@@ -113,8 +113,7 @@ def read_change_jsonl(spark: SparkSession, path: str | list[str]) -> DataFrame:
 
 def parse_change_lines(raw: DataFrame) -> DataFrame:
     """Parse (value, _file) text rows into typed change rows with a stable
-    per-file line order.  Shared by the batch scan and the streaming
-    ``foreachBatch`` path (each microbatch is a plain batch DataFrame here).
+    per-file line order (the body of :func:`read_change_jsonl`).
     """
     # _bstart (_metadata.file_block_start) anchors the ordering when one
     # file spans multiple scan splits: monotonically_increasing_id is only

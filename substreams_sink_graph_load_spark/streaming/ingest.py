@@ -1,17 +1,19 @@
-"""Wire-stream ingest: the reference's ``graphload run`` JSONL stage
+"""Wire ingest: the reference's ``graphload run`` JSONL stage
 (SURVEY §3.1) — demultiplex an interleaved entity-change stream into
 per-entity bundled JSONL files, compute the POI chain over the SAME
 interleaved order, and write ``last_block.txt``.
 
-Shape: the wire stream (the custom ``entity_changes`` DataSource) stages
-to a parquet log per microbatch (cheap append, cursor checkpointed by
-Spark); finalize() then cuts the bundle files in one batch
-job — entity routing is ONE repartition on (entity, bundle_start) feeding a
-single two-level ``partitionBy`` text write (every entity x bundle lands in
-its own directory in one pass; no per-entity rescans), POI is the §2.5
-parallel fold.  The reference materializes bundles as the stream crosses
-boundaries; the observable contract (file set, names, contents, order,
-empty bundles, poi2$ rows, last_block marker) is identical.
+Shape: the wire file is complete when ``run`` starts, so it is read as one
+batch on Spark's JVM text source (:func:`read_wire`, exact line cursor
+``seq``, no Python worker) and staged once to a parquet log; then demux
+cuts the bundle files in one batch job — entity routing is ONE repartition
+on (entity, bundle_start) feeding a single two-level ``partitionBy`` text
+write (every entity x bundle lands in its own directory in one pass; no
+per-entity rescans), and POI is the §2.5 parallel fold.  The reference
+materializes bundles as the stream crosses boundaries; the observable
+contract (file set, names, contents, order, empty bundles, poi2$ rows,
+last_block marker) is identical.  Resume is the reference's one path:
+``--start-block`` + ``--start-poi`` (run.go:76-99).
 """
 
 from __future__ import annotations
@@ -27,9 +29,68 @@ from pyspark.sql import functions as F
 from ..operators.bundles import boundaries, bundle_filename, bundle_start_col
 from ..schema.normalize import normalize_field
 
+# last member of the wire object (types.go:3-9 field order); lines that
+# miss it (reordered members, junk) fall back to a real JSON parse
+_BLOCK_RE = r'"block_num"\s*:\s*(-?\d+)\s*\}\s*$'
+
+
+def read_wire(spark: SparkSession, wire_path: str) -> DataFrame:
+    """The wire file as ``(block_num, seq, value)`` rows, read in one batch
+    on the JVM text source.
+
+    ``seq`` is the exact global line cursor: blank lines count toward it
+    and are then dropped.  It needs no sort and no shuffle of the log: the
+    text source emits each split's lines in byte order, so a split's
+    ``monotonically_increasing_id`` values are consecutive, and one small
+    job collects each split's (count, min id) to turn them into prefix
+    offsets keyed by ``_metadata.file_block_start``.  ``lineSep="\\n"``
+    keeps a CRLF line's ``\\r`` in ``value``.  A missing path fails the
+    read; a line without an integer ``block_num`` fails the job, naming the
+    file and its cursor (the reference fails at the payload unmarshal).
+    """
+    lines = spark.read.text(wire_path, lineSep="\n").select(
+        "value",
+        F.col("_metadata.file_path").alias("_file"),
+        F.col("_metadata.file_block_start").alias("_bstart"),
+        F.monotonically_increasing_id().alias("_mid"),
+    )
+    splits = sorted(
+        lines.groupBy("_file", "_bstart")
+        .agg(F.count("*").alias("n"), F.min("_mid").alias("mid0"))
+        .collect(),
+        key=lambda r: r["_bstart"],
+    )
+    if len({r["_file"] for r in splits}) > 1:
+        raise ValueError(f"wire path {wire_path} names more than one file")
+    shift, off = [], 0
+    for r in splits:
+        shift += [F.lit(r["_bstart"]), F.lit(off - r["mid0"])]
+        off += r["n"]
+    seq = F.col("_mid") + F.create_map(*shift).cast("map<bigint,bigint>")[
+        F.col("_bstart")
+    ]
+    fast = F.regexp_extract("value", _BLOCK_RE, 1)
+    block = F.when(fast != "", fast.cast("long")).otherwise(
+        F.from_json("value", "block_num bigint")["block_num"]
+    )
+    corrupt = F.raise_error(
+        F.concat(
+            F.lit(f"wire line without an integer block_num in {wire_path} "
+                  "at line cursor (seq) "),
+            F.col("seq").cast("string"),
+            F.lit(": "),
+            F.substring("value", 1, 80),
+        )
+    )
+    return (
+        lines.select("value", seq.alias("seq"))
+        .where(F.col("value") != "")
+        .select(F.coalesce(block, corrupt).alias("block_num"), "seq", "value")
+    )
+
 
 class WireIngest:
-    """foreachBatch stager + finalizer for the wire stream."""
+    """Stages the wire rows once, as a parquet log under ``workdir``."""
 
     def __init__(self, spark: SparkSession, workdir: str, stop_block: int):
         self.spark = spark
@@ -43,14 +104,15 @@ class WireIngest:
         # write (JVM get_json_object in the same task that writes the
         # row) — every downstream pass (router validation, demux write)
         # then reads a pruned parquet column instead of re-parsing 100%
-        # of the line bytes per pass
+        # of the line bytes per pass.  Overwrite: a rerun into the same
+        # workdir restages instead of doubling the log.
         (
             batch_df.where(F.col("block_num") < self.stop_block)
             .withColumn(
                 "entity_raw",
                 F.get_json_object("value", "$.entity_change.entity"),
             )
-            .write.mode("append")
+            .write.mode("overwrite")
             .parquet(self.staged)
         )
 
@@ -361,39 +423,28 @@ def run_ingest(
     workdir: str | None = None,
     first_block: int = 0,
 ) -> dict[str, list[str]]:
-    """Full ``run`` parity: wire stream -> per-entity JSONL bundles
+    """Full ``run`` parity: wire file -> per-entity JSONL bundles
     (+ optional poi2$ CSV chain over the interleaved order) +
     ``last_block.txt``.
 
-    Source: ``wire_path``, consumed via the custom ``entity_changes``
-    DataSource (cursor-checkpointed).
+    Source: ``wire_path``, read in one batch by :func:`read_wire` and
+    staged once under ``workdir`` (overwritten by a rerun).
 
     The reference's source contract is enforced: block numbers must be
     non-decreasing in cursor order — an undo/reorg signal (a block below
     the high-water mark) is fatal (ref sinker.go:291-293 errors on any
     undo; the sink demands final-blocks-only).
 
-    ``first_block`` is the sinker start block: bundle enumeration starts at
-    its aligned bundle (the reference's bundlers boot at the start block,
-    not 0).
+    ``first_block`` is the sinker start block and ``start_poi`` the digest
+    of the block before it — the reference's resume pair (run.go:76-99).
+    Bundle enumeration starts at its aligned bundle, and demux and POI
+    both see only blocks at or after it.
     """
     from ..operators.poi import discover_runs
-    from ..sources.stream_source import EntityChangesDataSource
 
     workdir = workdir or os.path.join(dest_dir, "_work_ingest")
     ingest = WireIngest(spark, workdir, stop_block)
-
-    spark.dataSource.register(EntityChangesDataSource)
-    query = (
-        spark.readStream.format("entity_changes")
-        .option("path", wire_path)
-        .load()
-        .writeStream.foreachBatch(ingest.process_batch)
-        .option("checkpointLocation", os.path.join(workdir, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    ingest.process_batch(read_wire(spark, wire_path), 0)
 
     staged = ingest.staged_df()
     # One narrow (block_num, seq) pass serves BOTH the order check and
@@ -404,30 +455,31 @@ def run_ingest(
     if not ok:
         last = check_final_blocks_only(staged)
     # The sinker start block: blocks below first_block belong to an
-    # earlier run's bundles, so drop them HERE, deliberately and
+    # earlier run's bundles and chain, so drop them HERE, deliberately and
     # documented — demux_jsonl itself treats any out-of-range row as a
     # hard error rather than silently discarding it with its staging dir.
+    resumed = staged.where(F.col("block_num") >= first_block)
     files = demux_jsonl(
-        spark,
-        staged.where(F.col("block_num") >= first_block),
-        dest_dir, entities, stop_block, bundle_size,
+        spark, resumed, dest_dir, entities, stop_block, bundle_size,
         first_block=first_block,
     )
 
     if chain_id is not None:
         from ..operators.poi import RUNS_UNAVAILABLE, poi_tocsv
 
-        # The staged log is written in cursor order (micro-batch appends),
-        # so the shuffle-free POI fold applies; it validates the
+        # The staged log is written in cursor order (each task stages one
+        # wire split), so the shuffle-free POI fold applies; it validates the
         # assumption and falls back to the shuffle path on any mismatch.
-        # runs=None means discovery exceeded its bound — tell the fold so
-        # it goes straight to the shuffle path instead of re-scanning to
-        # rediscover the same overflow.
+        # Each run holds one block, so the resumed rows' runs are the
+        # runs at or after first_block.  runs=None means discovery
+        # exceeded its bound — tell the fold so it goes straight to the
+        # shuffle path instead of re-scanning to rediscover the overflow.
         files["poi2$"] = poi_tocsv(
-            spark, staged, dest_dir, chain_id, stop_block,
+            spark, resumed, dest_dir, chain_id, stop_block,
             bundle_size=bundle_size, start_poi=start_poi,
             first_block=first_block, assume_sorted=True,
-            runs=runs if runs is not None else RUNS_UNAVAILABLE,
+            runs=RUNS_UNAVAILABLE if runs is None
+            else [r for r in runs if r[0] >= first_block],
         )
 
     # the order check computed the global max (None on an empty log)

@@ -6,14 +6,11 @@ throughput line on a 15 s cadence from every long-running stage —
 ``bundler/stats.go`` (entities, bundles written).  The Spark engine leans
 on the Spark UI for task-level detail; this module adds the same
 at-a-glance heartbeat to ``run`` / ``tocsv`` so a terminal user sees
-liveness and rate without opening the UI.
+liveness and task progress without opening the UI.
 
 Driver-side only, pull-based, zero cost to the job itself: a daemon
-thread samples (a) every active streaming query's ``recentProgress``
-(deduplicated by ``(runId, batchId)``, so cumulative event counts are
-exact as long as the poll interval outpaces ~100 batches — far beyond
-the bundled-file triggers used here) and (b) the status tracker's
-active-stage task counts for batch jobs.
+thread samples the status tracker's active-stage task counts.  Every
+command runs batch jobs, so there is no event count to report.
 """
 
 from __future__ import annotations
@@ -46,37 +43,11 @@ class ProgressReporter:
         self._out = out if out is not None else sys.stderr
         self._halt = threading.Event()
         self._t0 = time.monotonic()
-        self._seen: set[tuple[str, int]] = set()
-        # handles outlive streams.active (a finished query drops off the
-        # active list but its recentProgress stays readable) — remember
-        # every query we ever saw so stop() counts the tail batches
-        self._queries: dict[str, object] = {}
-        self._events = 0
-        self._batches = 0
         self._thread = threading.Thread(
             target=self._run, name=f"progress-{label}", daemon=True
         )
 
     # -- sampling ----------------------------------------------------------
-    def _sample_streams(self) -> None:
-        try:
-            for q in self._spark.streams.active:
-                self._queries[q.id] = q
-        except Exception:
-            pass
-        for q in list(self._queries.values()):
-            try:
-                progresses = q.recentProgress
-            except Exception:
-                continue
-            for p in progresses:
-                key = (p["runId"], int(p["batchId"]))
-                if key in self._seen:
-                    continue
-                self._seen.add(key)
-                self._events += int(p.get("numInputRows", 0) or 0)
-                self._batches += 1
-
     def _sample_stages(self) -> str:
         try:
             tracker = self._spark.sparkContext.statusTracker()
@@ -91,16 +62,10 @@ class ProgressReporter:
 
     def _line(self) -> str:
         elapsed = time.monotonic() - self._t0
-        rate = self._events / elapsed if elapsed > 0 else 0.0
-        return (
-            f"[{self._label}] +{elapsed:.0f}s events={self._events}"
-            f" ({rate:,.0f}/s) batches={self._batches}"
-            f"{self._sample_stages()}"
-        )
+        return f"[{self._label}] +{elapsed:.0f}s{self._sample_stages()}"
 
     def _run(self) -> None:
         while not self._halt.wait(self._interval):
-            self._sample_streams()
             print(self._line(), file=self._out, flush=True)
 
     # -- lifecycle ---------------------------------------------------------
@@ -113,13 +78,10 @@ class ProgressReporter:
         ``last_block=``) append to the line."""
         self._halt.set()
         self._thread.join(timeout=self._interval + 5)
-        self._sample_streams()
         extras = "".join(f" {k}={v}" for k, v in final.items())
         elapsed = time.monotonic() - self._t0
-        rate = self._events / elapsed if elapsed > 0 else 0.0
         print(
-            f"[{self._label}] done in {elapsed:.1f}s events={self._events}"
-            f" ({rate:,.0f}/s) batches={self._batches}{extras}",
+            f"[{self._label}] done in {elapsed:.1f}s{extras}",
             file=self._out,
             flush=True,
         )

@@ -1,7 +1,8 @@
-"""Full `run` parity: interleaved wire stream -> custom DataSource ->
+"""Full `run` parity: interleaved wire file -> one batch read ->
 demuxed per-entity JSONL bundles (+ poi2$ chain + last_block.txt) ->
 tocsv -> CSVs identical to the batch pipeline over hand-laid JSONL."""
 
+import csv
 import json
 import os
 
@@ -9,7 +10,7 @@ import pytest
 
 from test_pipeline_e2e import ACCOUNT_EVENTS, TRANSFER_EVENTS, SDL, read_csv
 
-from substreams_sink_graph_load_spark.streaming.ingest import run_ingest
+from substreams_sink_graph_load_spark.streaming.ingest import read_wire, run_ingest
 from substreams_sink_graph_load_spark.tocsv import tocsv
 
 
@@ -83,51 +84,76 @@ def test_run_ingest_end_to_end(spark, wire, tmp_path):
         assert fh.read() == "2500:\n"
 
 
-def test_wire_datasource_resume(spark, wire, tmp_path):
-    """Cursor semantics: a second run with the same checkpoint consumes only
-    appended lines (gRPC reconnect-with-cursor behavior)."""
-    from pyspark.sql import functions as F
+def _poi_rows(poi_dir):
+    """Every poi2$ row as (id, block_range, digest), header dropped."""
+    rows = []
+    for fn in sorted(os.listdir(poi_dir)):
+        with open(os.path.join(poi_dir, fn), newline="") as fh:
+            rows.extend(tuple(r) for r in list(csv.reader(fh))[1:])
+    return rows
 
-    from substreams_sink_graph_load_spark.sources.stream_source import (
-        EntityChangesDataSource,
-    )
 
+def _range_start(block_range):
+    return int(block_range[1:].split(",")[0])
+
+
+def _tree_bytes(root):
+    out = {}
+    for d, _dirs, files in os.walk(root):
+        for fn in files:
+            p = os.path.join(d, fn)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+def test_run_ingest_resume_by_flags(spark, wire, tmp_path):
+    """The reference's one resume path (run.go:76-99): a run to block
+    2000, then a run with first_block=2000 and start_poi = the digest at
+    block 1999, over the WHOLE wire, gives the full run's bundle from 2000
+    on and the full run's poi2$ rows starting at or after 2000."""
     wire_path, _ = wire
-    spark.dataSource.register(EntityChangesDataSource)
-    ckpt = str(tmp_path / "ckpt")
-    out_dir = str(tmp_path / "out")
+    kw = dict(entities=["account", "transfer"], wire_path=wire_path,
+              bundle_size=1000, chain_id="chain-r")
+    full, part, resumed = (str(tmp_path / d) for d in ("full", "part", "resumed"))
+    run_ingest(spark, full, stop_block=3000, **kw)
+    run_ingest(spark, part, stop_block=2000, **kw)
+    (open_row,) = [r for r in _poi_rows(os.path.join(part, "poi2$"))
+                   if r[1].endswith(",)")]
+    start_poi = bytes.fromhex(open_row[2][2:])
+    files = run_ingest(spark, resumed, stop_block=3000, first_block=2000,
+                       start_poi=start_poi, **kw)
+    assert [os.path.basename(f) for f in files["account"]] == [
+        "0000002000-0000002999.jsonl"
+    ]
+    for ent in ("account", "transfer"):
+        name = os.path.join(ent, "0000002000-0000002999.jsonl")
+        with open(os.path.join(full, name), "rb") as a, \
+                open(os.path.join(resumed, name), "rb") as b:
+            assert a.read() == b.read()
+    want = [r for r in _poi_rows(os.path.join(full, "poi2$"))
+            if _range_start(r[1]) >= 2000]
+    assert want  # the wire changes the digest after block 2000
+    assert _poi_rows(os.path.join(resumed, "poi2$")) == want
 
-    def drain():
-        q = (
-            spark.readStream.format("entity_changes")
-            .option("path", wire_path)
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
-    drain()
-    n1 = spark.read.parquet(out_dir).count()
-    with open(wire_path) as fh:
-        total = sum(1 for _ in fh)
-    assert n1 == total
-    # append two lines; only those arrive on resume
-    with open(wire_path, "a") as fh:
-        for b in (2600, 2700):
-            fh.write(json.dumps({"entity_change": {"entity": "Account", "id": "zz",
-                                                   "operation": 2, "fields": []},
-                                 "block_num": b}) + "\n")
-    drain()
-    df = spark.read.parquet(out_dir)
-    assert df.count() == total + 2
-    assert df.where(F.col("block_num") == 2700).count() == 1
-    # seq equals the global line cursor: strictly increasing, gap-free
-    seqs = sorted(r["seq"] for r in df.select("seq").collect())
-    assert seqs == list(range(total + 2))
+def test_run_ingest_rerun_same_workdir(spark, wire, tmp_path):
+    """Staging overwrites its directory: a second run_ingest into the same
+    dest and workdir gives byte-identical bundles, poi2$ and
+    last_block.txt instead of a doubled log."""
+    wire_path, _ = wire
+    dest = str(tmp_path / "out")
+
+    def run():
+        run_ingest(spark, dest, entities=["account", "transfer"],
+                   stop_block=3000, wire_path=wire_path, bundle_size=1000,
+                   chain_id="chain-rerun")
+        return {k: v for k, v in _tree_bytes(dest).items()
+                if not k.startswith("_work_ingest")}
+
+    first = run()
+    assert "last_block.txt" in first and any(k.startswith("poi2$") for k in first)
+    assert run() == first
 
 
 def test_run_ingest_rejects_out_of_order(spark, tmp_path):
@@ -203,43 +229,104 @@ def test_undo_detected_across_chunk_boundary(spark):
     check_final_blocks_only(ok, chunk_width=2)
 
 
-def test_stream_reader_junk_line_fallback(tmp_path):
-    """A line the fast RE2 pattern can't parse falls back to the exact
-    Python extractor: reordered members still parse; a line without an
-    integer block_num raises, naming the file and its line cursor."""
-    from substreams_sink_graph_load_spark.sources.stream_source import (
-        EntityChangesStreamReader,
-    )
+def test_read_wire_junk_lines(spark, tmp_path):
+    """The batch wire read: reordered members still parse through the JSON
+    fallback, an empty line advances the cursor, and a line without an
+    integer block_num fails naming the file and its line cursor."""
+    ok = '{"entity_change": {}, "block_num": 5}\n'
+    reordered = '{"block_num": 6, "entity_change": {}}\n'
+    last = '{"entity_change": {}, "block_num": 7}\n'
 
-    def read(body):
-        wire = tmp_path / "wire.jsonl"
+    def read(name, body):
+        wire = tmp_path / name
         wire.write_text(body)
-        r = EntityChangesStreamReader({"path": str(wire)})
-        end = r.latestOffset()
-        rows = []
-        for p in r.partitions({"line": 0}, end):
-            for batch in r.read(p):
-                rows.extend(zip(*[c.to_pylist() for c in batch.columns]))
-        return end, rows
+        return read_wire(spark, str(wire)).orderBy("seq").collect()
 
-    end, rows = read(
-        '{"entity_change": {}, "block_num": 5}\n'
-        '{"block_num": 6, "entity_change": {}}\n'  # reordered members
-        "\n"  # empty line: skipped, but seq advances
-        '{"entity_change": {}, "block_num": 7}\n'
+    rows = read("wire.jsonl", ok + reordered + "\n" + last)
+    assert [(r["block_num"], r["seq"]) for r in rows] == [(5, 0), (6, 1), (7, 3)]
+
+    for i, junk in enumerate(
+        ("not json at all", '{"block_num": "6"}', '{"entity_change": {}}')
+    ):
+        with pytest.raises(Exception, match=r"cursor \(seq\) 2\b") as exc:
+            read(f"junk{i}.jsonl", ok + reordered + junk + "\n" + last)
+        assert str(tmp_path / f"junk{i}.jsonl") in str(exc.value)
+
+
+def test_read_wire_cursor_across_splits(spark, tmp_path):
+    """seq stays the exact line cursor when the wire spans many scan
+    splits: per-split prefix offsets, blank lines counted then dropped."""
+    lines = [_account_line(b) if b % 7 else "" for b in range(1, 301)]
+    wire = tmp_path / "wire.jsonl"
+    wire.write_text("\n".join(lines) + "\n")
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "2048")
+    try:
+        df = read_wire(spark, str(wire))
+        assert df.rdd.getNumPartitions() > 5
+        got = [(r["seq"], r["block_num"], r["value"])
+               for r in df.orderBy("seq").collect()]
+    finally:
+        spark.conf.set(key, prior)
+    assert got == [(i, i + 1, v) for i, v in enumerate(lines) if v]
+
+
+def test_run_ingest_keeps_crlf_and_rejects_bad_wire_path(spark, tmp_path):
+    """A CRLF line keeps its \\r byte in the bundle (the reference splits
+    on \\n only), an empty line between events is dropped, and a missing
+    wire path or a directory of files fails instead of reading as an
+    empty wire or as one interleaved cursor."""
+    wire = tmp_path / "wire.jsonl"
+    wire.write_bytes(
+        (_account_line(10) + "\r\n\n" + _account_line(20) + "\n").encode()
     )
-    assert end == {"line": 4}
-    assert [(b, s) for b, s, _v in rows] == [(5, 0), (6, 1), (7, 3)]
+    out = tmp_path / "out"
+    files = run_ingest(spark, str(out), entities=["account"], stop_block=1000,
+                       wire_path=str(wire), bundle_size=1000)
+    with open(files["account"][0], "rb") as fh:
+        assert fh.read() == (
+            _account_line(10) + "\r\n" + _account_line(20) + "\n"
+        ).encode()
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        run_ingest(spark, str(tmp_path / "out2"), entities=["account"],
+                   stop_block=1000, wire_path=str(tmp_path / "absent.jsonl"),
+                   bundle_size=1000)
+    two = tmp_path / "two"
+    two.mkdir()
+    for name in ("a.jsonl", "b.jsonl"):
+        (two / name).write_text(_account_line(10) + "\n")
+    with pytest.raises(ValueError, match="more than one file"):
+        run_ingest(spark, str(tmp_path / "out3"), entities=["account"],
+                   stop_block=1000, wire_path=str(two), bundle_size=1000)
 
-    for junk in ("not json at all", '{"block_num": "6"}', '{"entity_change": {}}'):
-        with pytest.raises(ValueError, match=r"cursor \(seq\) 2\b") as exc:
-            read(
-                '{"entity_change": {}, "block_num": 5}\n'
-                '{"block_num": 6, "entity_change": {}}\n'
-                f"{junk}\n"
-                '{"entity_change": {}, "block_num": 7}\n'
-            )
-        assert str(tmp_path / "wire.jsonl") in str(exc.value)
+
+def test_run_side_tables_start_no_python_worker(spark, wire):
+    """The executed plans of the wire read, of write_bundled_lines' header
+    rows and of poi_chain's result hold no Python node: Python workers
+    start only for the POI hash fold (and the psql COPY tasks)."""
+    from substreams_sink_graph_load_spark.operators.bundles import header_rows
+    from substreams_sink_graph_load_spark.operators.poi import poi_chain
+
+    wire_path, _ = wire
+    staged = read_wire(spark, wire_path)
+    frames = {
+        "wire read": staged,
+        "header rows": header_rows(
+            spark, "id,block_range,digest", 0, 3000, 1000, ["_order_block"]
+        ),
+        "poi_chain": poi_chain(spark, staged, "chain-plan"),
+        "empty poi_chain": poi_chain(spark, staged.limit(0), "chain-plan"),
+    }
+    for name, df in frames.items():
+        qe = df._jdf.queryExecution()
+        text = qe.executedPlan().toString() + qe.toRdd().toDebugString()
+        for node in ("BatchEvalPython", "ArrowEvalPython", "PythonDataSource",
+                     "MapInPandas", "MapInArrow", "PythonRDD"):
+            assert node not in text, f"{name}: {node} in\n{text}"
+    assert header_rows(spark, "h", 1500, 3000, 1000, []).collect() == [
+        (1000, 0, "h"), (2000, 0, "h")
+    ]
 
 
 def _account_line(block):
