@@ -8,7 +8,7 @@ from .pg_csv import (
     csv_header,
     render_entity_csv,
 )
-from .scd2 import state_at_block, validate_changes
+from .scd2 import state_at_block
 from .bundles import write_bundled_csv, write_bundled_lines
 from .ann import sample_queries, topk_matmul
 from .dedup import (
@@ -40,7 +40,6 @@ __all__ = [
     "csv_quote",
     "csv_header",
     "render_entity_csv",
-    "validate_changes",
     "state_at_block",
     "write_bundled_csv",
     "write_bundled_lines",

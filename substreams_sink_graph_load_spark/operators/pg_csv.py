@@ -98,46 +98,33 @@ def _null_default(f: Field) -> str | None:
         FieldType.BIGINT: "0",
         FieldType.BIGDECIMAL: "0",
         FieldType.INT: "0",
-        FieldType.FLOAT: "0",
         FieldType.BOOLEAN: "false",
     }[f.type]
 
 
 def render_field(f: Field, col: Column) -> Column:
-    """Render one typed column (engine carrier types) to its CSV string."""
+    """Render one typed column (engine carrier types) to its CSV string.
+    ID, String, BigInt and BigDecimal are carried as strings."""
     t = f.type
     if f.array:
         if t == FieldType.BYTES:
-            body = pg_array(col, lambda e: bytea_hex(e), escape=False)
-        elif t in (FieldType.ID, FieldType.STRING):
-            body = pg_array(col, lambda e: strip_nul(e))
-        elif t in (FieldType.BIGINT, FieldType.BIGDECIMAL):
-            body = pg_array(col, lambda e: strip_nul(e))
-        elif t == FieldType.INT:
+            body = pg_array(col, bytea_hex, escape=False)
+        elif t in (FieldType.INT, FieldType.BOOLEAN):
             body = pg_array(col, lambda e: e.cast("string"))
-        elif t == FieldType.BOOLEAN:
-            body = pg_array(col, lambda e: e.cast("string"))
-        else:  # FLOAT — unsupported by the reference (writer.go:285-310)
-            body = pg_array(col, lambda e: e.cast("string"))
-    elif t in (FieldType.ID, FieldType.STRING):
-        body = strip_nul(col)
+        else:
+            body = pg_array(col, strip_nul)
     elif t == FieldType.BYTES:
         body = bytea_hex(col)
-    elif t in (FieldType.BIGINT, FieldType.BIGDECIMAL):
-        body = strip_nul(col)
     elif t == FieldType.INT:
         body = col.cast("int").cast("string")
     elif t == FieldType.BOOLEAN:
         body = col.cast("string")  # Spark renders true/false like Go %t
-    else:  # FLOAT
-        body = col.cast("string")
-    default = _null_default(f)
-    return F.coalesce(body, F.lit(default))
+    else:
+        body = strip_nul(col)
+    return F.coalesce(body, F.lit(_null_default(f)))
 
 
-def render_entity_csv(
-    df: DataFrame, desc: EntityDesc, strict: bool = False
-) -> DataFrame:
+def render_entity_csv(df: DataFrame, desc: EntityDesc) -> DataFrame:
     """Project a typed versioned DataFrame to a single ``line`` string column
     in the exact graph-node CSV layout: ``id, block_range|block$, <fields
     alphabetical>`` (writer.go:142-156).
@@ -146,22 +133,18 @@ def render_entity_csv(
     ``block_range_start``/``block_range_end`` (mutable) plus typed fields.
     All rendering is JVM-side expressions -> stays in whole-stage codegen.
 
-    ``strict=True`` reproduces the reference's fatal path for Float fields:
-    the writer's Float case is commented out (writer.go:285-296), so a
-    Float column hits the ``default: panic("invalid field type")`` branch
-    (writer.go:308-310).  Plain mode renders the value (documented
-    extension).
+    A Float field raises here, before any job runs: the reference writer's
+    Float case is commented out (writer.go:285-296), so a Float column hits
+    its ``default: panic("invalid field type")`` (writer.go:308-310).
     """
-    if strict:
-        for f in desc.ordered_fields():
-            if f.type == FieldType.FLOAT:
-                raise ValueError(
-                    f"invalid field type: 'Float' (field {f.name!r} of entity "
-                    f"{desc.name!r}) — the reference CSV writer does not "
-                    "support Float (writer.go:285-296 commented out; "
-                    "panics at writer.go:308-310); use strict=False to "
-                    "render it anyway"
-                )
+    for f in desc.ordered_fields():
+        if f.type == FieldType.FLOAT:
+            raise ValueError(
+                f"invalid field type: 'Float' (field {f.name!r} of entity "
+                f"{desc.name!r}) — the reference CSV writer does not "
+                "support Float (writer.go:285-296 commented out; "
+                "panics at writer.go:308-310)"
+            )
     cols: list[Column] = [csv_quote(strip_nul(F.col("id")))]
     if desc.immutable:
         cols.append(F.col("block$").cast("string"))

@@ -20,6 +20,12 @@ an in-memory state map.  Semantics reproduced here:
 Zero-width ranges ``[n,n)`` from same-block CREATE->UPDATE are kept
 (graph-node compatible, ref csvprocessor/entity.go:23-29).
 
+The sequences the reference stops on (CREATE on a live id, DELETE on an
+unseen id or on an immutable entity, a lifetime starter missing a
+non-nullable field) are folded the tolerant way here; :func:`lifetimes`
+annotates each change so that :func:`validate_ops` can report them and
+tocsv can fail on them (:func:`raise_on`) in the same id window.
+
 Spark-first design — ONE shuffle (hash by ``id``), no Python in the hot
 path.  The naive formulation needs a second window partitioned by
 ``(id, lifetime)`` (and hence a second exchange) for the field overlay after
@@ -50,17 +56,41 @@ OP_UPDATE = 2
 OP_DELETE = 3
 OP_FINAL = 4
 
-META_COLS = ("id", "block_num", "seq", "operation")
+META_COLS = ("id", "block_num", "seq", "operation", "_lifetime", "_live")
+
+
+def _w() -> Window:
+    return Window.partitionBy("id").orderBy("block_num", "seq")
+
+
+def lifetimes(changes: DataFrame) -> DataFrame:
+    """Annotate each change with its lifetime and liveness.
+
+    ``_lifetime`` is the number of terminators (DELETE/FINAL) strictly
+    before the change; it partitions an id's history into independent
+    re-creations.  ``_live`` is true when a starter (CREATE/UPDATE) came
+    earlier in the same lifetime, i.e. the reference's state map holds the
+    id when the change arrives (processor.go:235).  One id window, the one
+    :func:`fold_versions` runs on.
+    """
+    op = F.col("operation")
+    w_prev = _w().rowsBetween(Window.unboundedPreceding, -1)
+    lifetime = F.coalesce(
+        F.sum(F.when(op.isin(OP_DELETE, OP_FINAL), F.lit(1))).over(w_prev),
+        F.lit(0),
+    )
+    # live iff the latest starter or terminator before this row is a
+    # starter; reads no other window result, so both share one operator
+    last = F.last(
+        F.when(op.between(OP_CREATE, OP_FINAL), op), ignorenulls=True
+    ).over(w_prev)
+    return changes.withColumn("_lifetime", lifetime).withColumn(
+        "_live", F.coalesce(last.isin(OP_CREATE, OP_UPDATE), F.lit(False))
+    )
 
 
 def scd2_versions(
-    changes: DataFrame,
-    field_cols: Sequence[str] | None = None,
-    id_col: str = "id",
-    block_col: str = "block_num",
-    seq_col: str = "seq",
-    op_col: str = "operation",
-    keep_lifetime: bool = False,
+    changes: DataFrame, field_cols: Sequence[str] | None = None
 ) -> DataFrame:
     """Fold a change-log DataFrame into versioned rows.
 
@@ -72,27 +102,26 @@ def scd2_versions(
     ``block_range_end`` (NULL end == open range ``[start,)``) and the
     overlaid field values.
     """
-    if field_cols is None:
-        field_cols = [c for c in changes.columns if c not in META_COLS]
+    return fold_versions(lifetimes(changes), field_cols)
 
-    op = F.col(op_col)
-    w = Window.partitionBy(id_col).orderBy(block_col, seq_col)
+
+def fold_versions(
+    lived: DataFrame, field_cols: Sequence[str] | None = None
+) -> DataFrame:
+    """:func:`scd2_versions` over changes already annotated by
+    :func:`lifetimes` (tocsv checks them in between)."""
+    if field_cols is None:
+        field_cols = [c for c in lived.columns if c not in META_COLS]
+
+    op = F.col("operation")
+    w = _w()
     w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_prev = w.rowsBetween(Window.unboundedPreceding, -1)
 
     is_starter = op.isin(OP_CREATE, OP_UPDATE)
-    # lifetime = number of terminators (DELETE/FINAL) strictly before this
-    # event; partitions each id's history into independent re-creations.
-    lifetime = F.coalesce(
-        F.sum(F.when(op.isin(OP_DELETE, OP_FINAL), F.lit(1))).over(w_prev),
-        F.lit(0),
-    )
-
     df = (
-        changes.withColumn("_lifetime", lifetime)
-        .withColumn("_idx", F.row_number().over(w))
-        .withColumn("_next_op", F.lead(op_col).over(w))
-        .withColumn("_next_block", F.lead(block_col).over(w))
+        lived.withColumn("_idx", F.row_number().over(w))
+        .withColumn("_next_op", F.lead("operation").over(w))
+        .withColumn("_next_block", F.lead("block_num").over(w))
     )
 
     # Field overlay: most recent set value within the same lifetime.  FINAL
@@ -113,18 +142,13 @@ def scd2_versions(
         )
 
     next_op = F.col("_next_op")
-    out = df.select(
-        F.col(id_col).alias("id"),
-        F.col(block_col).alias("block_range_start"),
+    return df.select(
+        "id",
+        F.col("block_num").alias("block_range_start"),
         # next starter or DELETE closes the version; next FINAL (or
-        # nothing) leaves it open.  A next CREATE here is the tolerated
-        # create-on-live path (the reference treats it as FATAL,
-        # processor.go:238-241 — validate_ops reports it): it must close
-        # the previous version at its block exactly like UPDATE, matching
-        # the sequential reference_fold and the streaming state folds
-        # (found by the r9 cross-engine CSV differential: duplicate ids
-        # in a synthesized log made the window emit open-range rows the
-        # fold closed).
+        # nothing) leaves it open.  A next CREATE on the live id (fatal in
+        # the reference, processor.go:238-241, and in tocsv) closes it
+        # like UPDATE, matching the sequential reference_fold.
         F.when(
             next_op.isin(OP_CREATE, OP_UPDATE, OP_DELETE),
             F.col("_next_block"),
@@ -133,139 +157,115 @@ def scd2_versions(
         # event's block for superseded rows, the FINAL block for finalized
         # rows, NULL for end-of-log flush rows.
         F.col("_next_block").alias("emit_block"),
-        *( [F.col("_lifetime").alias("lifetime")] if keep_lifetime else [] ),
         *overlays,
         op.alias("_op"),
     ).where(F.col("_op").isin(OP_CREATE, OP_UPDATE)).drop("_op")
 
-    return out
-
 
 def immutable_rows(
-    changes: DataFrame,
-    field_cols: Sequence[str] | None = None,
-    id_col: str = "id",
-    block_col: str = "block_num",
-    op_col: str = "operation",
+    changes: DataFrame, field_cols: Sequence[str] | None = None
 ) -> DataFrame:
     """Immutable-entity layout: every CREATE (and tolerated UPDATE) emits
     immediately with ``block$ = block_num``; FINAL is ignored, DELETE is
-    invalid (ref processor.go:247-252, 256-266, 285-287, 299-301).
+    fatal (:func:`immutable_fatal`; ref processor.go:247-252, 256-266,
+    285-287, 299-301).
 
     Pure projection + filter — no shuffle at all.
     """
     if field_cols is None:
         field_cols = [c for c in changes.columns if c not in META_COLS]
-    return changes.where(F.col(op_col).isin(OP_CREATE, OP_UPDATE)).select(
-        F.col(id_col).alias("id"),
-        F.col(block_col).alias("block$"),
+    return changes.where(F.col("operation").isin(OP_CREATE, OP_UPDATE)).select(
+        "id",
+        F.col("block_num").alias("block$"),
         *[F.col(f) for f in field_cols],
     )
 
 
-def validate_ops(
-    changes: DataFrame,
-    id_col: str = "id",
-    block_col: str = "block_num",
-    seq_col: str = "seq",
-    op_col: str = "operation",
-) -> DataFrame:
-    """Operation-sequence violations the reference treats as fatal
-    (processor.go:238-241 CREATE on a live id; :288-293 DELETE on an unseen
-    id; :285-287 DELETE on an immutable entity is the caller's check).
-    Returns (id, block_num, operation, issue) — empty means clean; strict
-    callers raise when non-empty, tolerant callers proceed exactly like
-    scd2_versions does (which mirrors the reference's tolerated paths).
-
-    Same single id-window as scd2_versions — no extra shuffle shape.
-    """
-    op = F.col(op_col)
-    w_prev = (
-        Window.partitionBy(id_col)
-        .orderBy(block_col, seq_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    lifetime = F.coalesce(
-        F.sum(F.when(op.isin(OP_DELETE, OP_FINAL), F.lit(1))).over(w_prev),
-        F.lit(0),
-    )
-    staged = changes.withColumn("_lt", lifetime)
-    # latest lifetime that has a starter before this row; the id is live
-    # iff that equals the current lifetime (no terminator in between)
-    started = F.max(
-        F.when(op.isin(OP_CREATE, OP_UPDATE), F.col("_lt"))
-    ).over(w_prev)
-    live = F.coalesce(started == F.col("_lt"), F.lit(False))
-    issue = (
+def op_issue() -> Column:
+    """``create_on_live`` / ``delete_unseen`` on the operation sequences the
+    reference treats as fatal (processor.go:238-241, :288-293), NULL on any
+    other change.  Reads :func:`lifetimes`' ``_live``."""
+    op, live = F.col("operation"), F.col("_live")
+    return (
         F.when((op == OP_CREATE) & live, F.lit("create_on_live"))
         .when((op == OP_DELETE) & ~live, F.lit("delete_unseen"))
     )
+
+
+def validate_ops(changes: DataFrame) -> DataFrame:
+    """Report of the changes :func:`op_issue` flags, as (id, block_num,
+    operation, issue) — empty means clean.  :func:`scd2_versions` folds such
+    a log the tolerant way; tocsv fails on it (:func:`mutable_fatal`)."""
     return (
-        staged.withColumn("_issue", issue)
-        .where(F.col("_issue").isNotNull())
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(block_col).alias("block_num"),
-            op.alias("operation"),
-            F.col("_issue").alias("issue"),
-        )
+        lifetimes(changes)
+        .withColumn("issue", op_issue())
+        .where(F.col("issue").isNotNull())
+        .select("id", "block_num", "operation", "issue")
     )
 
 
-def state_at_block(
-    versions: DataFrame,
-    block: int,
-    start_col: str = "block_range_start",
-    end_col: str = "block_range_end",
-) -> DataFrame:
+def _fatal(
+    entity: str, issue: Column, starter: Column, not_null: Sequence[str]
+) -> Column:
+    at = F.concat(
+        F.lit(f" for entity {entity} id "), F.col("id"),
+        F.lit(" at block "), F.col("block_num").cast("string"),
+    )
+    msg = F.concat(issue, at)
+    if not_null:
+        missing = F.array_compact(
+            F.array(*[F.when(F.col(f).isNull(), F.lit(f)) for f in not_null])
+        )
+        msg = F.coalesce(msg, F.when(
+            starter & (F.size(missing) > 0),
+            F.concat(F.lit("field ["), F.array_join(missing, ", "),
+                     F.lit("] not found"), at),
+        ))
+    return msg
+
+
+def mutable_fatal(entity: str, not_null: Sequence[str]) -> Column:
+    """The reference's fatal verdict on one change of a mutable entity, as a
+    message naming the entity, id and block, NULL when the change is valid:
+    an :func:`op_issue`, or a lifetime starter (CREATE, or UPDATE on an
+    unseen id) missing a ``not_null`` field (processor.go:243-245,
+    :267-271).  An UPDATE on a live id is validated only as the merged
+    state (:276-278), which a valid start already satisfies, so partial
+    updates are legal.  Reads :func:`lifetimes`' ``_live``."""
+    op = F.col("operation")
+    starter = (op == OP_CREATE) | ((op == OP_UPDATE) & ~F.col("_live"))
+    return _fatal(entity, op_issue(), starter, not_null)
+
+
+def immutable_fatal(entity: str, not_null: Sequence[str]) -> Column:
+    """Row-local fatal verdict for an immutable entity: a DELETE
+    (processor.go:285-287), or a CREATE/UPDATE missing a ``not_null`` field
+    (both validate the event, :243-245, :256-266).  No window: the
+    reference keeps no state for immutable ids."""
+    op = F.col("operation")
+    issue = F.when(op == OP_DELETE, F.lit("delete_on_immutable"))
+    return _fatal(entity, issue, op.isin(OP_CREATE, OP_UPDATE), not_null)
+
+
+def raise_on(changes: DataFrame, fatal: Column) -> DataFrame:
+    """``changes`` whose ``operation`` fails the job with ``fatal``'s
+    message at any row where it is set.  Every later operator reads
+    ``operation`` on every row (the version window, the emit filter), so
+    the check runs inside the write job on DELETE rows too and no filter
+    or short-circuit can skip it."""
+    return changes.withColumn(
+        "operation",
+        F.when(fatal.isNull(), F.col("operation")).otherwise(F.raise_error(fatal)),
+    )
+
+
+def state_at_block(versions: DataFrame, block: int) -> DataFrame:
     """graph-node's primary read: entity state as-of a block —
     ``block_range @> B`` i.e. ``start <= B < end`` with NULL end open.
     On bundle-partitioned storage the start predicate prunes files; at most
     one version per id matches (the ranges partition each lifetime)."""
+    end = F.col("block_range_end")
     return versions.where(
-        (F.col(start_col) <= F.lit(block))
-        & (F.col(end_col).isNull() | (F.col(end_col) > F.lit(block)))
-    )
-
-
-def validate_changes(
-    changes: DataFrame,
-    not_null_fields: Sequence[str],
-    id_col: str = "id",
-    block_col: str = "block_num",
-    seq_col: str = "seq",
-    op_col: str = "operation",
-) -> DataFrame:
-    """Validation report: lifetime-STARTING events (CREATE, or UPDATE on an
-    unseen id — the tolerated-create path) missing a non-nullable field.
-
-    Matches the reference exactly: CREATE validates the event
-    (processor.go:243-245), UPDATE-on-unseen validates the event
-    (:267-271), but UPDATE on a live id validates only the accumulated
-    previous state (:276-278) — partial update events are legal.
-    """
-    op = F.col(op_col)
-    w_prev = (
-        Window.partitionBy(id_col)
-        .orderBy(block_col, seq_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    lifetime = F.coalesce(
-        F.sum(F.when(op.isin(OP_DELETE, OP_FINAL), F.lit(1))).over(w_prev),
-        F.lit(0),
-    )
-    staged = changes.withColumn("_lt", lifetime)
-    started = F.max(
-        F.when(op.isin(OP_CREATE, OP_UPDATE), F.col("_lt"))
-    ).over(w_prev)
-    live = F.coalesce(started == F.col("_lt"), F.lit(False))
-    is_starter = (op == OP_CREATE) | ((op == OP_UPDATE) & ~live)
-    checks = F.array_compact(
-        F.array(*[F.when(F.col(f).isNull(), F.lit(f)) for f in not_null_fields])
-    )
-    return (
-        staged.withColumn("_starter", is_starter)  # window expr: not in WHERE
-        .withColumn("missing_fields", checks)
-        .where(F.col("_starter") & (F.size("missing_fields") > 0))
-        .select(id_col, block_col, op_col, "missing_fields")
+        (F.col("block_range_start") <= F.lit(block))
+        & (end.isNull() | (end > F.lit(block)))
     )

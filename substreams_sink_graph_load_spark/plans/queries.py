@@ -2324,7 +2324,7 @@ def normalize_names_q(spark, sf_dir):
 def validate_notnull_q(spark, sf_dir):
     """Non-null validation report (§2.2 P7): purchase events with a
     synthesized-absent required field surface as (row id, field name) —
-    the report the engine raises on in strict mode."""
+    the check tocsv fails on (operators/scd2.mutable_fatal)."""
     e = _events(spark, sf_dir)
     required = F.when(F.col("value") >= 1.0, F.col("value"))  # synth nulls
     return (

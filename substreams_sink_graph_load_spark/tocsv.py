@@ -8,22 +8,34 @@ declarative DataFrame DAG:
     read text -> from_json -> typed extract -> SCD-2 window -> CSV render
     -> bundled write
 
-Shuffle budget: exactly two exchanges — one hash(id) for the version window,
-one hash(bundle_start) for file assembly.  Both are necessary at 100 TB (the
-reference's zero-shuffle design caps at one machine / one entity per
-process); everything between them is whole-stage codegen.
+The reference's fatal inputs fail that same write job: each check is a
+``raise_error`` inside a column every row evaluates (the scan's block
+number, the operation the version window reads), so a clean run starts no
+extra job and a failing one leaves no bundle.
+
+Shuffle budget: one hash(id) exchange for the version window (none for an
+immutable entity) and one hash(bundle_start) for file assembly.  Both are
+necessary at 100 TB (the reference's zero-shuffle design caps at one machine
+/ one entity per process); everything between them is whole-stage codegen.
+The scan adds a third, hash(_file), for the per-file line numbers
+(``sources/jsonl.read_change_jsonl``) that order same-block events and name
+an unparseable line.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schema.entities import EntityDesc, parse_schema_file
 from .sources.jsonl import check_contiguity, read_change_jsonl, typed_extract
-from .operators.scd2 import immutable_rows, scd2_versions
+from .operators.scd2 import (
+    fold_versions, immutable_fatal, immutable_rows, lifetimes, mutable_fatal,
+    raise_on,
+)
 from .operators.pg_csv import csv_header, render_entity_csv
 from .operators.bundles import bundle_start_col, write_bundled_csv
 
@@ -36,16 +48,18 @@ def tocsv(
     schema_file: str,
     stop_block: int,
     bundle_size: int = 1000,
-    strict: bool = False,
 ) -> list[str]:
     """Transform one entity's JSONL change-log into bundled CSV files.
 
     Mirrors the reference CLI contract: reads ``<src>/<entity>/*.jsonl``,
     writes ``<dest>/<entity>/NNNNNNNNNN-NNNNNNNNNN.csv``.
 
-    ``strict=True`` reproduces the reference's fatal paths: any
-    create-on-live / delete-unseen sequence or missing non-nullable field
-    raises before anything is written (costs one extra validation pass).
+    Fails like the reference, leaving no bundle and no ``_staged``
+    directory: a Float field raises before any job runs; an unparseable
+    line (processor.go:205-214), a CREATE on a live id, a DELETE on an
+    unseen id or on an immutable entity, or a lifetime starter missing a
+    non-nullable field (processor.go:238-293) fails the write job itself,
+    naming the file and line or the entity, id and block.
     """
     if stop_block <= 0:
         raise ValueError("stop_block must be > 0")
@@ -64,63 +78,45 @@ def tocsv(
     # end-of-log flush rows the reference would never write
     files = check_contiguity(all_files, stop_block, require_coverage=True)
     raw = read_change_jsonl(spark, files)
-    if strict:
-        # a line that fails from_json yields a null block_num; the loose
-        # path would silently drop it at the stop filter below, but the
-        # reference fails on any unparseable line (processor.go:205-214)
-        corrupt = raw.where(F.col("block_num").isNull()).limit(1).collect()
-        if corrupt:
-            raise ValueError(
-                f"unparseable JSONL line in {corrupt[0]['_file']} "
-                f"(line {corrupt[0]['_line_no']})"
-            )
-    raw = raw.where(F.col("block_num") < stop_block)
+    # a line that fails from_json has a NULL block_num: fail on it before
+    # the stop filter could drop it
+    unparseable = F.raise_error(F.concat(
+        F.lit("unparseable JSONL line in "), F.col("_file"),
+        F.lit(" (line "), F.col("_line_no").cast("string"), F.lit(")"),
+    ))
+    raw = raw.withColumn(
+        "block_num", F.coalesce(F.col("block_num"), unparseable)
+    ).where(F.col("block_num") < stop_block)
 
     typed = typed_extract(raw, desc, originals=list(desc.fields))
-    if strict:
-        _raise_on_violations(typed, desc)
-    versions = build_versions(
-        typed, desc, bundle_size,
-        last_block=last_event_block(spark, files, stop_block),
-    )
-
-    rendered = render_entity_csv(versions, desc, strict=strict)
+    # a Float field raises here, before any job runs
+    rendered = render_entity_csv(build_versions(typed, desc, bundle_size), desc)
+    if not desc.immutable:
+        # end-of-log flush rows go to the last event's bundle
+        emit = F.coalesce(
+            F.col("emit_block"), F.lit(last_event_block(spark, files, stop_block))
+        )
+        rendered = rendered.withColumn(
+            "bundle_start", bundle_start_col(emit, bundle_size)
+        ).withColumn("_order_block", emit)
     dest = os.path.join(dest_dir, entity)
     os.makedirs(dest, exist_ok=True)
-    return write_bundled_csv(
-        spark,
-        rendered,
-        dest,
-        header=csv_header(desc),
-        first_block=0,
-        stop_block=stop_block,
-        bundle_size=bundle_size,
-        order_cols=["_order_block", "_order_seq"],
-    )
-
-
-def _raise_on_violations(typed: DataFrame, desc: EntityDesc) -> None:
-    from .operators.scd2 import validate_changes, validate_ops
-
-    not_null = [
-        f.name for f in desc.ordered_fields()
-        if f.name != "id" and not f.nullable
-    ]
-    bad_fields = validate_changes(typed, not_null).limit(5).collect()
-    if bad_fields:
-        r = bad_fields[0]
-        raise ValueError(
-            f"field {r['missing_fields']} not found for entity {desc.name} "
-            f"id {r['id']} at block {r['block_num']} (+{len(bad_fields) - 1} more)"
+    try:
+        return write_bundled_csv(
+            spark,
+            rendered,
+            dest,
+            header=csv_header(desc),
+            first_block=0,
+            stop_block=stop_block,
+            bundle_size=bundle_size,
+            order_cols=["_order_block", "_order_seq"],
         )
-    if not desc.immutable:
-        bad_ops = validate_ops(typed).limit(5).collect()
-        if bad_ops:
-            r = bad_ops[0]
-            raise ValueError(
-                f"{r['issue']} for entity {desc.name} id {r['id']} "
-                f"at block {r['block_num']} (+{len(bad_ops) - 1} more)"
-            )
+    except SparkRuntimeException as e:
+        # a check fired; the aborted write job has removed _staged already
+        if e.getCondition() != "USER_RAISED_EXCEPTION":
+            raise
+        raise ValueError(e.getMessageParameters()["errorMessage"]) from e
 
 
 def tocsv_all(
@@ -181,33 +177,30 @@ def last_event_block(
 
 
 def build_versions(
-    typed: DataFrame,
-    desc: EntityDesc,
-    bundle_size: int,
-    last_block: int | None = None,
+    typed: DataFrame, desc: EntityDesc, bundle_size: int
 ) -> DataFrame:
-    """Versioned rows + bundle routing.
+    """Versioned rows, each change checked for the reference's fatal inputs
+    (:func:`~.operators.scd2.raise_on`), with the routing each row decides
+    alone.
 
-    A version row is written while processing its *closing* event (UPDATE/
-    DELETE supersede, FINAL flush), so it belongs to the closing block's
-    bundle; end-of-log flush rows land in the last processed block's bundle
-    (ref csvprocessor/processor.go:168-190, Roll-per-line at :192-230).
+    An immutable row goes to its own block's bundle.  A mutable version
+    row is written while processing its *closing* event (UPDATE/DELETE
+    supersede, FINAL flush), so it belongs to the closing block's bundle
+    (``emit_block``); end-of-log flush rows (NULL ``emit_block``) land in
+    the last processed block's bundle, which only a scan can tell (ref
+    csvprocessor/processor.go:168-190, Roll-per-line at :192-230).
     """
+    not_null = [
+        f.name for f in desc.ordered_fields() if f.name != "id" and not f.nullable
+    ]
     if desc.immutable:
-        rows = immutable_rows(typed)
+        rows = immutable_rows(raise_on(typed, immutable_fatal(desc.name, not_null)))
         return (
             rows.withColumn("bundle_start", bundle_start_col(F.col("block$"), bundle_size))
             .withColumn("_order_block", F.col("block$"))
             .withColumn("_order_seq", F.lit(0).cast("long"))
         )
-
-    if last_block is None:
-        last_block = typed.agg(F.max("block_num")).collect()[0][0] or 0
-    versions = scd2_versions(typed)
-    emit = F.coalesce(F.col("emit_block"), F.lit(last_block))
-    return (
-        versions.withColumn("bundle_start", bundle_start_col(emit, bundle_size))
-        .withColumn("_order_block", emit)
-        .withColumn("_order_seq", F.col("block_range_start"))
-        .drop("emit_block")
-    )
+    lived = lifetimes(typed)
+    return fold_versions(
+        raise_on(lived, mutable_fatal(desc.name, not_null))
+    ).withColumn("_order_seq", F.col("block_range_start"))

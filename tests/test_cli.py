@@ -148,6 +148,26 @@ def test_tocsv_all_command(spark, schema_file, tmp_path):
     assert "account: 3 bundles" in out and "transfer: 3 bundles" in out
 
 
+def test_tocsv_all_command_fails_on_one_entity(spark, tmp_path):
+    """One entity's fatal input fails the whole command, and that entity
+    is left with no bundle and no _staged directory."""
+    import test_pipeline_e2e as e2e
+
+    src, dest = tmp_path / "jsonl", tmp_path / "csv"
+    sf = tmp_path / "schema2.graphql"
+    sf.write_text(e2e.SDL)
+    e2e.write_log(src, "account", [e2e.ev(1, "Account", "a1", 1, e2e.FULL_ACCOUNT)])
+    e2e.write_log(src, "transfer", [
+        e2e.ev(10, "Transfer", "t1", 1, [("fromAccount", {"String_": "a1"}),
+                                         ("value", {"Bigint": "42"})]),
+        e2e.ev(20, "Transfer", "t1", 3, []),
+    ])
+    with pytest.raises(ValueError, match="delete_on_immutable for entity "
+                                         "transfer id t1 at block 20"):
+        run_cli("tocsv-all", str(src), str(dest), str(sf), "1000")
+    assert os.listdir(dest / "transfer") == []
+
+
 def test_run_entities_flag_and_resume_validation(spark, tmp_path):
     """Reference run.go:48-52/76-99 flag parity: --entities replaces the
     schema argument (exactly one required), --start-block must align to

@@ -91,10 +91,10 @@ def test_csv_quote_unicode_whitespace(spark):
     assert one(spark, csv_quote(F.lit("éx"))) == "éx"
 
 
-def test_float_strict_mode(spark):
+def test_float_is_fatal(spark):
     """The reference CSV writer has no Float branch (writer.go:285-296
-    commented out -> default panic at :308-310): strict mode raises, plain
-    mode renders the value as a documented extension."""
+    commented out -> default panic at :308-310): rendering raises before
+    any job runs."""
     import pytest
 
     sdl = "type F @entity { id: ID!\n ratio: Float! }"
@@ -104,6 +104,4 @@ def test_float_strict_mode(spark):
         "id string, block_range_start long, block_range_end long, ratio double",
     )
     with pytest.raises(ValueError, match="invalid field type: 'Float'"):
-        render_entity_csv(df, desc, strict=True)
-    plain = [r["line"] for r in render_entity_csv(df, desc).collect()]
-    assert plain == ['f1,"[5,)",0.5']
+        render_entity_csv(df, desc)

@@ -30,6 +30,11 @@ type Transfer @entity(immutable: true) {
   fromAccount: String!
   value: BigInt!
 }
+
+type Reading @entity {
+  id: ID!
+  ratio: Float!
+}
 """
 
 
@@ -75,6 +80,7 @@ ACCOUNT_EVENTS = {
             ("balance", {"Bigint": "7"}),
             ("active", {"Boolean": False}),
             ("txCount", {"Int32": 0}),
+            ("tags", {"Array": {"value": [{"Typed": {"String_": "b"}}]}}),
         ]),
     ],
 }
@@ -102,12 +108,8 @@ def fixture_dirs(tmp_path):
     schema_file = tmp_path / "schema.graphql"
     schema_file.write_text(SDL)
     for entity, files in (("account", ACCOUNT_EVENTS), ("transfer", TRANSFER_EVENTS)):
-        d = src / entity
-        d.mkdir(parents=True)
         for fname, events in files.items():
-            with open(d / fname, "w") as fh:
-                for e in events:
-                    fh.write(json.dumps(e) + "\n")
+            write_log(src, entity, events, fname)
     return str(src), str(tmp_path / "csv"), str(schema_file)
 
 
@@ -136,7 +138,7 @@ def test_tocsv_account(spark, fixture_dirs):
     assert read_csv(dest, "account", "0000002000-0000002999.csv") == (
         hdr + "\n"
         + 'a1,"[500,2100)",true,250,alice,\\xdeadbeef,"{x\\,y,z}",2\n'
-        + 'a2,"[2200,)",false,7,bob,NULL,,0\n'
+        + 'a2,"[2200,)",false,7,bob,NULL,{b},0\n'
     )
 
 
@@ -162,84 +164,132 @@ def test_tocsv_stop_block_truncation(spark, fixture_dirs):
     assert 'a2,"[2200,)"' in body
 
 
-def test_tocsv_strict_mode(spark, fixture_dirs, tmp_path):
-    """strict=True reproduces the reference's fatal validation paths."""
-    import pytest as _pytest
-
-    src, dest, schema_file = fixture_dirs
-    # a fully-valid log passes strict mode (note: ACCOUNT_EVENTS itself is
-    # deliberately NOT strict-valid — a2's CREATE omits the non-nullable
-    # tags field, which the reference's ValidateFields would reject but its
-    # CSV writer tolerates with defaults; we mirror both behaviors)
-    ok_src = tmp_path / "ok"
-    d0 = ok_src / "account"
-    d0.mkdir(parents=True)
-    with open(d0 / "0000000000-0000000999.jsonl", "w") as fh:
-        fh.write(json.dumps(ev(1, "Account", "ok1", 1, [
-            ("name", {"String_": "x"}),
-            ("balance", {"Bigint": "1"}),
-            ("active", {"Boolean": True}),
-            ("txCount", {"Int32": 1}),
-            ("tags", {"Array": {"value": [{"Typed": {"String_": "t"}}]}}),
-        ])) + "\n")
-        fh.write(json.dumps(ev(5, "Account", "ok1", 2, [
-            ("balance", {"Bigint": "2"}),  # partial UPDATE on live id: legal
-        ])) + "\n")
-    tocsv(spark, str(ok_src), dest + "_strict", "account", schema_file,
-          stop_block=1000, bundle_size=1000, strict=True)
-    # a double-create trips it
-    bad_src = tmp_path / "bad" 
-    d = bad_src / "account"
-    d.mkdir(parents=True)
-    with open(d / "0000000000-0000000999.jsonl", "w") as fh:
-        for block in (1, 2):
-            fh.write(json.dumps(ev(block, "Account", "dup", 1, [
-                ("name", {"String_": "x"}),
-                ("balance", {"Bigint": "1"}),
-                ("active", {"Boolean": True}),
-                ("txCount", {"Int32": 1}),
-                ("tags", {"Array": {"value": [{"Typed": {"String_": "t"}}]}}),
-            ])) + "\n")
-    with _pytest.raises(ValueError, match="create_on_live"):
-        tocsv(spark, str(bad_src), str(tmp_path / "out"), "account",
-              schema_file, stop_block=1000, bundle_size=1000, strict=True)
-    # a missing required field trips the field check
-    bad2 = tmp_path / "bad2"
-    d2 = bad2 / "account"
-    d2.mkdir(parents=True)
-    with open(d2 / "0000000000-0000000999.jsonl", "w") as fh:
-        fh.write(json.dumps(ev(1, "Account", "m1", 1, [
-            ("name", {"String_": "x"}),
-        ])) + "\n")
-    with _pytest.raises(ValueError, match="not found for entity"):
-        tocsv(spark, str(bad2), str(tmp_path / "out2"), "account",
-              schema_file, stop_block=1000, bundle_size=1000, strict=True)
+FULL_ACCOUNT = [
+    ("name", {"String_": "x"}),
+    ("balance", {"Bigint": "1"}),
+    ("active", {"Boolean": True}),
+    ("txCount", {"Int32": 1}),
+    ("tags", {"Array": {"value": [{"Typed": {"String_": "t"}}]}}),
+]
 
 
-def test_tocsv_strict_rejects_corrupt_lines(spark, fixture_dirs, tmp_path):
-    """The reference fails on any unparseable JSONL line; loose mode drops
-    it, strict mode raises with the file and line."""
-    import pytest as _pytest
+def write_log(src, entity, lines, fname="0000000000-0000000999.jsonl"):
+    """One bundle file of ``lines``: events as JSON, strings verbatim."""
+    d = src / entity
+    d.mkdir(parents=True, exist_ok=True)
+    with open(d / fname, "w") as fh:
+        for line in lines:
+            fh.write((line if isinstance(line, str) else json.dumps(line)) + "\n")
 
+
+def test_tocsv_accepts_valid_sequences(spark, fixture_dirs, tmp_path):
+    """The legal sequences next to the fatal ones pass: a partial UPDATE
+    on a live id (only the merged state is validated, processor.go:
+    276-278), an UPDATE on an unseen id carrying every non-null field
+    (tolerated create, :267-275), a re-creation after DELETE, a FINAL."""
+    _, _, schema_file = fixture_dirs
+    src = tmp_path / "ok"
+    write_log(src, "account", [
+        ev(1, "Account", "ok1", 1, FULL_ACCOUNT),
+        ev(5, "Account", "ok1", 2, [("balance", {"Bigint": "2"})]),
+        ev(7, "Account", "ok1", 3, []),
+        ev(9, "Account", "ok1", 2, [
+            ("name", {"String_": "y"}), ("balance", {"Bigint": "3"}),
+            ("active", {"Boolean": False}), ("txCount", {"Int32": 0}),
+            ("tags", {"Array": {"value": []}}),
+        ]),
+        ev(12, "Account", "ok1", 4, []),
+    ])
+    files = tocsv(spark, str(src), str(tmp_path / "csv"), "account",
+                  schema_file, stop_block=1000, bundle_size=1000)
+    assert open(files[0]).read() == (
+        "id,block_range,active,balance,name,payload,tags,tx_count\n"
+        'ok1,"[1,5)",true,1,x,NULL,{t},1\n'
+        'ok1,"[5,7)",true,2,x,NULL,{t},1\n'
+        'ok1,"[9,)",false,3,y,NULL,{},0\n'
+    )
+
+
+FATAL_CASES = {
+    # processor.go:205-214: the line fails to unmarshal
+    "unparseable_line": (
+        "account",
+        [ev(1, "Account", "c1", 1, FULL_ACCOUNT), "{this is not json"],
+        r"unparseable JSONL line in \S*/account/0000000000-0000000999\.jsonl"
+        r" \(line 2\)",
+    ),
+    # processor.go:238-241
+    "create_on_live": (
+        "account",
+        [ev(1, "Account", "dup", 1, FULL_ACCOUNT),
+         ev(2, "Account", "dup", 1, FULL_ACCOUNT)],
+        r"create_on_live for entity account id dup at block 2$",
+    ),
+    # processor.go:288-293; the DELETE row emits no version of its own
+    "delete_unseen": (
+        "account",
+        [ev(1, "Account", "a1", 1, FULL_ACCOUNT),
+         ev(3, "Account", "ghost", 3, [])],
+        r"delete_unseen for entity account id ghost at block 3$",
+    ),
+    # processor.go:243-245
+    "missing_not_null": (
+        "account",
+        [ev(1, "Account", "m1", 1, [("name", {"String_": "x"})])],
+        r"field \[active, balance, tags, tx_count\] not found for entity "
+        r"account id m1 at block 1$",
+    ),
+    # processor.go:285-287
+    "delete_immutable": (
+        "transfer",
+        [ev(10, "Transfer", "t1", 1, [("fromAccount", {"String_": "a1"}),
+                                      ("value", {"Bigint": "42"})]),
+         ev(20, "Transfer", "t1", 3, [])],
+        r"delete_on_immutable for entity transfer id t1 at block 20$",
+    ),
+    # writer.go:308-310
+    "float_column": (
+        "reading",
+        [ev(1, "Reading", "r1", 1, [("ratio", {"Float": 0.5})])],
+        r"invalid field type: 'Float' \(field 'ratio' of entity 'reading'\)",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(FATAL_CASES))
+def test_tocsv_fatal_input(spark, fixture_dirs, tmp_path, case):
+    """Each input the reference stops on fails tocsv with one loud error
+    naming the entity and id/block (or file and line), and leaves no
+    bundle and no _staged directory behind."""
+    _, _, schema_file = fixture_dirs
+    entity, lines, message = FATAL_CASES[case]
+    src, dest = tmp_path / "src", tmp_path / "csv"
+    write_log(src, entity, lines)
+    with pytest.raises(ValueError, match=message):
+        tocsv(spark, str(src), str(dest), entity, schema_file,
+              stop_block=1000, bundle_size=1000)
+    assert not os.path.isdir(dest / entity) or os.listdir(dest / entity) == []
+
+
+def test_tocsv_rejects_corrupt_lines(spark, fixture_dirs, tmp_path):
+    """An unparseable line is fatal wherever it sits in the listing, also
+    in an immutable entity's log, in a bundle past the first and in the
+    bundle the stop block cuts: the check runs before the stop-block
+    filter, which would drop its NULL block number."""
     _, _, schema_file = fixture_dirs
     src = tmp_path / "corrupt"
-    d = src / "account"
-    d.mkdir(parents=True)
-    with open(d / "0000000000-0000000999.jsonl", "w") as fh:
-        fh.write(json.dumps(ev(1, "Account", "c1", 1, [
-            ("name", {"String_": "x"}), ("balance", {"Bigint": "1"}),
-            ("active", {"Boolean": True}), ("txCount", {"Int32": 1}),
-            ("tags", {"Array": {"value": []}}),
-        ])) + "\n")
-        fh.write("{this is not json\n")
-    # loose: the corrupt line vanishes, pipeline succeeds
-    files = tocsv(spark, str(src), str(tmp_path / "loose"), "account",
-                  schema_file, stop_block=1000, bundle_size=1000)
-    assert "c1" in open(files[0]).read()
-    # strict: fatal, names the file and line
-    with _pytest.raises(ValueError, match="unparseable JSONL line"):
-        tocsv(spark, str(src), str(tmp_path / "strict"), "account",
-              schema_file, stop_block=1000, bundle_size=1000, strict=True)
+    write_log(src, "transfer", [
+        ev(10, "Transfer", "t1", 1, [("fromAccount", {"String_": "a1"}),
+                                     ("value", {"Bigint": "42"})]),
+    ])
+    write_log(src, "transfer", [
+        ev(1500, "Transfer", "t2", 1, [("fromAccount", {"String_": "a2"}),
+                                       ("value", {"Bigint": "9"})]),
+        '{"entity_change": {"entity": "Transfer", "id": "t3"',
+    ], fname="0000001000-0000001999.jsonl")
+    with pytest.raises(ValueError, match=r"0000001000-0000001999\.jsonl \(line 2\)"):
+        tocsv(spark, str(src), str(tmp_path / "csv"), "transfer",
+              schema_file, stop_block=1600, bundle_size=1000)
 
 
 def test_tocsv_requires_full_coverage(spark, fixture_dirs):

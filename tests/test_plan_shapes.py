@@ -406,3 +406,59 @@ def test_scan_catalog_memoizes_per_session(spark, sf_dir):
     c = q._t(spark, sf_dir, "lineitem")
     assert c is not a
     assert c.schema == a.schema
+
+
+def exchange_keys(plan: str) -> list[str]:
+    """Hash keys of the Exchange nodes in an executed plan's description
+    (its Initial Plan: the adaptive Final Plan repeats them)."""
+    initial = plan.split("\n\n")[0].split("== Initial Plan ==")[1]
+    return sorted(
+        re.search(
+            rf"\({i}\) Exchange\n.*?Arguments: hashpartitioning\((\w+)#", plan, re.S
+        ).group(1)
+        for i in re.findall(r"Exchange \((\d+)\)", initial)
+    )
+
+
+@pytest.mark.parametrize(
+    "entity,max_jobs,keys",
+    [
+        ("account", 6, ["_file", "bundle_start", "id"]),
+        ("transfer", 4, ["_file", "bundle_start"]),
+    ],
+    ids=["account", "transfer"],
+)
+def test_tocsv_checks_add_no_job_or_exchange(spark, tmp_path, entity, max_jobs, keys):
+    """tocsv's fatal checks ride the write job: a clean run on the e2e
+    fixture starts no more jobs than the unchecked pipeline did (account
+    6, transfer 4), and the write keeps one hash(id) exchange for the
+    version window and one hash(bundle_start) for file assembly, next to
+    the scan's hash(_file) line-number window."""
+    import json
+
+    import test_pipeline_e2e as e2e
+
+    from substreams_sink_graph_load_spark.tocsv import tocsv
+
+    schema = tmp_path / "schema.graphql"
+    schema.write_text(e2e.SDL)
+    events = {"account": e2e.ACCOUNT_EVENTS, "transfer": e2e.TRANSFER_EVENTS}
+    for fname, evs in events[entity].items():
+        e2e.write_log(tmp_path / "jsonl", entity, evs, fname=fname)
+    dest = tmp_path / "csv"
+    sc = spark.sparkContext
+    group = f"tocsv-{entity}-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        tocsv(spark, str(tmp_path / "jsonl"), str(dest), entity, str(schema),
+              stop_block=3000, bundle_size=1000)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= max_jobs
+
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plan = [
+        p for p in (runs.apply(i).physicalPlanDescription() for i in range(runs.size()))
+        if "InsertIntoHadoopFsRelationCommand" in p and str(dest / entity) in p
+    ][-1]
+    assert exchange_keys(plan) == keys
