@@ -16,7 +16,9 @@ A reference user maps each command 1:1:
 SQL-emitting commands print their statements (pipe to psql); data commands
 run Spark jobs.  ``run`` reads a wire JSONL file, the stand-in for the
 reference's gRPC stream, in one batch (streaming/ingest.py); it resumes by
-``--start-block`` + ``--start-poi``, as the reference does.
+``--start-block`` + ``--start-poi``, as the reference does.  A fatal input
+(a ``ValueError``) is printed by ``python -m`` as one
+``graphload-spark: error:`` line with exit status 1; :func:`main` raises it.
 """
 
 from __future__ import annotations
@@ -28,7 +30,15 @@ import sys
 def _spark():
     from .session import get_spark
 
-    return get_spark(app_name="graphload-spark")
+    spark = get_spark(app_name="graphload-spark")
+    # A failed task reaches the user as the job's exception; the executor's
+    # and the task set's log copies of it, each with the full Java stack,
+    # only bury that line (the task set's one-line abort notice stays).
+    log4j = spark._jvm.org.apache.logging.log4j
+    set_level = log4j.core.config.Configurator.setLevel
+    set_level("org.apache.spark.executor.Executor", log4j.Level.FATAL)
+    set_level("org.apache.spark.scheduler.TaskSetManager", log4j.Level.ERROR)
+    return spark
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -1337,8 +1337,9 @@ def poi_chain_q(spark, sf_dir):
     any change to the wire decode, the per-block parallel fold, the
     numpy XXH3 kernels, the pause semantics, or the cross-block chain
     shifts every digest after the break.  Per-block states fold in
-    parallel (applyInPandas over block groups); the chain is a
-    driver-side prefix fold over one 32-byte row per block.  The
+    parallel (one repartition on block_num, one mapInArrow fold per
+    partition); the chain is a driver-side prefix fold over one 32-byte
+    row per block.  The
     sf-SCALED POI surface (millions of events) is exercised by the run
     stage (streaming/ingest.py; its 1.8M-event throughput is in PLANS.md
     "End-to-end tocsv throughput") where the digests also feed the poi2$

@@ -183,73 +183,30 @@ class ProofOfIndexing:
 
 
 def fold_blocks_batched(
-    blocks: dict[int, list[tuple[int, dict]]],
+    blocks: dict[int, list[tuple[int, object]]],
 ) -> dict[int, tuple[bytes, int]]:
-    """Fold MANY blocks' parsed entity changes into paused 32-byte states.
-
-    Thin wrapper over :func:`fold_runs_batched` for whole-block callers:
-    each block is one run at ordinal offset 0, and the pause-time count
-    write is applied here (the run fold leaves states unpaused so
-    partial runs of one block can be merged first).
-    Returns block_num -> (state32, n_events).
-    """
-    runs = [(block, block, 0, evs) for block, evs in blocks.items()]
-    out: dict[int, tuple[bytes, int]] = {}
-    for key, (state, n) in fold_runs_batched(runs).items():
-        out[key] = (pause_block_state(key, state, n), n)
-    return out
-
-
-def pause_block_state(block: int, state32: bytes, total_events: int) -> bytes:
-    """Apply the pause-time count write to an UNPAUSED block state:
-    ``U64(total_events)`` hashed at the block address (poi.go:48-73).
-    Used by whole-block folds (total = the run's own length) and by the
-    shuffle-free path after merging a block's partial-run states."""
-    h = FastHasher.from_bytes(state32)
-    U64(total_events).stable_hash(
-        addr_children(ADDRESS_ROOT, (1, 0, block, 0)), h
-    )
-    return h.to_bytes()
-
-
-def merge_block_states(states: list[bytes]) -> bytes:
-    """Merge UNPAUSED partial states of ONE block: the FldMix mixer is
-    commutative and write counts add, so partial folds over disjoint
-    event subsets (each at its correct ordinal offsets) combine to the
-    same state as one sequential fold."""
-    h = FastHasher.from_bytes(states[0])
-    for s in states[1:]:
-        h.mixin(FastHasher.from_bytes(s))
-    return h.to_bytes()
-
-
-def fold_runs_batched(
-    runs: list[tuple[object, int, int, list[tuple[int, object]]]],
-) -> dict[object, tuple[bytes, int]]:
-    """Fold event RUNS into UNPAUSED 32-byte hasher states, with the
-    event-addressed fixed-length writes batched through the numpy XXH3
+    """Fold MANY blocks' entity changes into paused 32-byte states, with
+    the event-addressed fixed-length writes batched through the numpy XXH3
     kernels (xxh3_batch): per event only the entity/id string writes stay
     scalar; the map-entry state mix-ins (32 B) and the operation variant
     byte (1 B) — ~7 of ~9 hash calls — accumulate into columns and hash
     in two vectorized passes.
 
-    A run is ``(key, block_num, offset, [(seq, event), ...])``: a
-    contiguous slice of one block's seq-ordered event stream whose first
-    event sits at within-block ordinal ``offset``.  Event i of the run
-    hashes at address ``[1, 0, block_num, 0, offset + i]``.  Bit-identical
-    to per-event ``ProofOfIndexing`` folding: the FldMix monoid is
-    commutative, so deferring a subset of each block's writes and mixing
-    them in afterwards reaches the same state, and the write COUNT is
-    order-independent by construction.  The pause-time count write is NOT
-    applied — callers pause once per block with the TOTAL event count
-    (:func:`pause_block_state`) after merging partials.
+    ``blocks`` maps block_num -> ``[(seq, event), ...]`` in any order;
+    event i of the block's (seq, event)-sorted stream hashes at address
+    ``[1, 0, block_num, 0, i]``, then the pause-time count write closes
+    the block (poi.go:48-73).  Bit-identical to per-event
+    ``ProofOfIndexing`` folding: the FldMix monoid is commutative, so
+    deferring a subset of each block's writes and mixing them in
+    afterwards reaches the same state, and the write COUNT is
+    order-independent by construction.
 
     Each event is either the parsed ``entity_change`` dict or the raw
     wire line (parsed here, just-in-time: holding a whole partition's
     parsed dicts alive is ~10x the memory of the raw strings and was
     measured 4x slower end-to-end from worker GC churn —
     parse-use-discard keeps them nursery-collected).
-    Returns key -> (unpaused_state32, n_events_in_run).
+    Returns block_num -> (state32, n_events).
     """
     import json as _json
     import numpy as np
@@ -258,24 +215,24 @@ def fold_runs_batched(
 
     M64 = (1 << 64) - 1
     M63 = (1 << 63) - 1
-    hashers: dict[object, FastHasher] = {}
-    n_events: dict[object, int] = {}
+    hashers: dict[int, FastHasher] = {}
+    n_events: dict[int, int] = {}
     s32_seed: list[int] = []
     s32_hi: list[int] = []
     s32_state: list[bytes] = []
-    s32_key: list[object] = []
+    s32_key: list[int] = []
     # entity/id string writes (2 per event) batch through the
     # variable-length short-string kernels — the last scalar xxh3 calls
     # on the per-event path (~15 us each pure-Python; ~0.5 us batched)
     str_data: list[bytes] = []
     str_seed: list[int] = []
     str_hi: list[int] = []
-    str_key: list[object] = []
+    str_key: list[int] = []
     v_seed = {OP_REMOVE_VARIANT: [], OP_SET_VARIANT: []}
     v_hi = {OP_REMOVE_VARIANT: [], OP_SET_VARIANT: []}
     v_key = {OP_REMOVE_VARIANT: [], OP_SET_VARIANT: []}
 
-    for key, block, offset, evs in runs:
+    for block, evs in blocks.items():
         # Sort (seq, payload) exactly like the scalar twin's events.sort()
         # (the per-event oracle fold in tests/test_poi_spark.py): with
         # duplicate seqs a seq-only stable sort would address events by
@@ -290,9 +247,9 @@ def fold_runs_batched(
             )
         )
         h = FastHasher()
-        hashers[key] = h
-        n_events[key] = len(evs)
-        for idx, (_, ev) in enumerate(evs, start=offset):
+        hashers[block] = h
+        n_events[block] = len(evs)
+        for idx, (_, ev) in enumerate(evs):
             ch = ev if isinstance(ev, dict) else _json.loads(ev)["entity_change"]
             addr = addr_children(ADDRESS_ROOT, (1, 0, block, 0, idx))
             # String.stable_hash == one write of the utf-8 bytes at the
@@ -303,14 +260,14 @@ def fold_runs_batched(
                 str_data.append(ent)
                 str_seed.append(a0 & M64)
                 str_hi.append((a0 >> 64) & M63)
-                str_key.append(key)
+                str_key.append(block)
             eid = ch["id"].encode("utf-8")
             if eid:
                 a1 = addr_child(addr, 1)
                 str_data.append(eid)
                 str_seed.append(a1 & M64)
                 str_hi.append((a1 >> 64) & M63)
-                str_key.append(key)
+                str_key.append(block)
             op = ch.get("operation")
             # 3 = the wire protocol's OPERATION_DELETE (operators/poi.py
             # OP_DELETE); everything else maps to SetEntity, matching
@@ -329,10 +286,10 @@ def fold_runs_batched(
                     s32_seed.append(mseed)
                     s32_hi.append(mhi)
                     s32_state.append(_map_entry_state(name, typed))
-                    s32_key.append(key)
+                    s32_key.append(block)
             v_seed[variant].append(addr & M64)
             v_hi[variant].append((addr >> 64) & M63)
-            v_key[variant].append(key)
+            v_key[variant].append(block)
 
     if str_data:
         lo, hi = hash_bytes_seeded(
@@ -365,11 +322,15 @@ def fold_runs_batched(
             h = hashers[k]
             h.mixer = fldmix_combine(h.mixer, hi_part | (l << 64) | (hh << 128))
             h.count += 1
-    for h in hashers.values():
-        h.count &= (1 << 64) - 1
-    return {
-        key: (h.to_bytes(), n_events[key]) for key, h in hashers.items()
-    }
+    out: dict[int, tuple[bytes, int]] = {}
+    for block, h in hashers.items():
+        U64(n_events[block]).stable_hash(
+            addr_children(ADDRESS_ROOT, (1, 0, block, 0)), h
+        )
+        out[block] = (h.to_bytes(), n_events[block])
+    return out
+
+
 
 
 def chain_block_states(states: list[tuple[int, bytes]], start: bytes | None = None) -> list[tuple[int, bytes]]:

@@ -192,18 +192,17 @@ def check_final_blocks_only(
 def check_final_blocks_from_runs(
     runs: list[tuple[int, int, int, int]],
 ) -> tuple[bool, int | None]:
-    """Order check derived from :func:`operators.poi.discover_runs`
-    output — zero extra scans when the caller computes runs for the POI
-    fold anyway.
+    """Order check from :func:`operators.poi.discover_runs`' per-block
+    cursor intervals — no scan of its own.
 
-    Returns ``(ok, high_water)``.  ``ok=False`` means the run structure
-    cannot PROVE the global cursor order (some runs' seq intervals
-    overlap — physically interleaved staging), and the caller must fall
-    back to :func:`check_final_blocks_only`'s windowed scan; it never
-    means "order violated".  A proven violation raises the same
-    ValueError as the windowed check: runs sorted by min_seq with
-    pairwise-disjoint intervals ARE the global seq order, each run holds
-    exactly one block, so a run whose block sits below the running
+    Returns ``(ok, high_water)``.  ``ok=False`` means the intervals cannot
+    PROVE the global cursor order (some blocks' seq intervals overlap: a
+    block recurs after another one), and the caller must fall back to
+    :func:`check_final_blocks_only`'s windowed scan, which names the first
+    bad cursor; it never means "order violated".  A proven violation
+    raises the same ValueError as the windowed check: intervals sorted by
+    min_seq and pairwise disjoint ARE the global seq order, each holds
+    exactly one block, so an interval whose block sits below the running
     high-water mark starts (at its min_seq) the same first-violation
     cursor the windowed check reports.
     """
@@ -433,12 +432,17 @@ def run_ingest(
     The reference's source contract is enforced: block numbers must be
     non-decreasing in cursor order — an undo/reorg signal (a block below
     the high-water mark) is fatal (ref sinker.go:291-293 errors on any
-    undo; the sink demands final-blocks-only).
+    undo; the sink demands final-blocks-only).  The check reads each
+    block's cursor interval from one JVM aggregate
+    (:func:`operators.poi.discover_runs`) and scans the log only when
+    intervals overlap; its high-water mark is ``last_block.txt``.
 
     ``first_block`` is the sinker start block and ``start_poi`` the digest
     of the block before it — the reference's resume pair (run.go:76-99).
     Bundle enumeration starts at its aligned bundle, and demux and POI
-    both see only blocks at or after it.
+    both see only blocks at or after it.  Only the POI fold
+    (:func:`operators.poi.poi_tocsv`, with ``chain_id``) starts Python
+    workers.
     """
     from ..operators.poi import discover_runs
 
@@ -447,11 +451,7 @@ def run_ingest(
     ingest.process_batch(read_wire(spark, wire_path), 0)
 
     staged = ingest.staged_df()
-    # One narrow (block_num, seq) pass serves BOTH the order check and
-    # the POI fold's run offsets — at cluster scale that deletes a full
-    # log-key shuffle+window (the former standalone order check)
-    runs = discover_runs(staged)
-    ok, last = (False, None) if runs is None else check_final_blocks_from_runs(runs)
+    ok, last = check_final_blocks_from_runs(discover_runs(staged))
     if not ok:
         last = check_final_blocks_only(staged)
     # The sinker start block: blocks below first_block belong to an
@@ -465,21 +465,12 @@ def run_ingest(
     )
 
     if chain_id is not None:
-        from ..operators.poi import RUNS_UNAVAILABLE, poi_tocsv
+        from ..operators.poi import poi_tocsv
 
-        # The staged log is written in cursor order (each task stages one
-        # wire split), so the shuffle-free POI fold applies; it validates the
-        # assumption and falls back to the shuffle path on any mismatch.
-        # Each run holds one block, so the resumed rows' runs are the
-        # runs at or after first_block.  runs=None means discovery
-        # exceeded its bound — tell the fold so it goes straight to the
-        # shuffle path instead of re-scanning to rediscover the overflow.
         files["poi2$"] = poi_tocsv(
             spark, resumed, dest_dir, chain_id, stop_block,
             bundle_size=bundle_size, start_poi=start_poi,
-            first_block=first_block, assume_sorted=True,
-            runs=RUNS_UNAVAILABLE if runs is None
-            else [r for r in runs if r[0] >= first_block],
+            first_block=first_block,
         )
 
     # the order check computed the global max (None on an empty log)

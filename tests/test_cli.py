@@ -168,6 +168,38 @@ def test_tocsv_all_command_fails_on_one_entity(spark, tmp_path):
     assert os.listdir(dest / "transfer") == []
 
 
+def test_module_reports_fatal_input_in_one_line(tmp_path):
+    """``python -m`` on an unparseable line exits 1 with the message once
+    and no Java stack frame on stderr.  It runs in its own process: the
+    shared test JVM's log output cannot be captured."""
+    import subprocess
+    import sys
+
+    src = tmp_path / "src" / "transfer"
+    src.mkdir(parents=True)
+    (src / "0000000000-0000000999.jsonl").write_text(
+        json.dumps({"entity_change": {
+            "entity": "Transfer", "id": "t1", "operation": 1,
+            "fields": [{"name": "value", "new_value": {"Typed": {"Bigint": "42"}}}],
+        }, "block_num": 10}) + "\nnot json at all\n"
+    )
+    schema = tmp_path / "schema.graphql"
+    schema.write_text(SDL)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1", SPARK_DRIVER_MEMORY="1g")
+    proc = subprocess.run(
+        [sys.executable, "-m", "substreams_sink_graph_load_spark", "tocsv",
+         str(tmp_path / "src"), str(tmp_path / "csv"), "transfer",
+         str(schema), "1000"],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    message = f"unparseable JSONL line in file:{src}/0000000000-0000000999.jsonl (line 2)"
+    assert proc.returncode == 1, proc.stderr
+    assert proc.stderr.count(message) == 1, proc.stderr
+    assert f"graphload-spark: error: {message}\n" in proc.stderr
+    assert not [l for l in proc.stderr.splitlines() if l.startswith("\tat")], proc.stderr
+
+
 def test_run_entities_flag_and_resume_validation(spark, tmp_path):
     """Reference run.go:48-52/76-99 flag parity: --entities replaces the
     schema argument (exactly one required), --start-block must align to

@@ -158,18 +158,23 @@ def test_run_ingest_rerun_same_workdir(spark, wire, tmp_path):
 
 def test_run_ingest_rejects_out_of_order(spark, tmp_path):
     """Undo/reorg parity: a block below the high-water mark is fatal
-    (ref sinker.go:291-293 — final-blocks-only contract)."""
+    (ref sinker.go:291-293 — final-blocks-only contract).  A recurring
+    block overlaps its own earlier interval, so the windowed scan names
+    the cursor."""
     wire = tmp_path / "bad_wire.jsonl"
-    with open(wire, "w") as fh:
-        for block in (10, 20, 15):  # 15 arrives after 20: undo signal
-            fh.write(json.dumps({"entity_change": {"entity": "Account", "id": "x",
-                                                   "operation": 2, "fields": []},
-                                 "block_num": block}) + "\n")
-    with pytest.raises(ValueError, match="high-water mark"):
-        run_ingest(
-            spark, str(tmp_path / "out"), entities=["account"],
-            stop_block=1000, wire_path=str(wire), bundle_size=1000,
-        )
+    # 15 (a new block) or 10 (a recurring one) arrives after 20: undo signal
+    for last in (15, 10):
+        with open(wire, "w") as fh:
+            for block in (10, 20, last):
+                fh.write(json.dumps({"entity_change": {"entity": "Account", "id": "x",
+                                                       "operation": 2, "fields": []},
+                                     "block_num": block}) + "\n")
+        with pytest.raises(ValueError, match=f"cursor 2: block {last} below "
+                                             "high-water mark 20"):
+            run_ingest(
+                spark, str(tmp_path / "out"), entities=["account"],
+                stop_block=1000, wire_path=str(wire), bundle_size=1000,
+            )
 
 
 def test_unseen_entity_materializes_empty_bundles(spark, wire, tmp_path):
@@ -329,6 +334,33 @@ def test_run_side_tables_start_no_python_worker(spark, wire):
     ]
 
 
+@pytest.mark.parametrize("chain_id,python_execs", [("chain-py", 1), (None, 0)])
+def test_run_starts_python_for_one_job(spark, wire, tmp_path, chain_id, python_execs):
+    """Of run_ingest's SQL executions only the POI fold's plan holds a
+    Python node: one execution with a chain id, none without (the order
+    check's per-block intervals are a JVM aggregate)."""
+    wire_path, _ = wire
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        runs = store.executionsList()
+        return {runs.apply(i).executionId(): runs.apply(i) for i in range(runs.size())}
+
+    before = set(executions())
+    run_ingest(
+        spark, str(tmp_path / "out"), entities=["account", "transfer"],
+        stop_block=3000, wire_path=wire_path, bundle_size=1000,
+        chain_id=chain_id,
+    )
+    new = [e for i, e in executions().items() if i not in before]
+    assert new
+    python = [
+        e.physicalPlanDescription() for e in new
+        if any(n in e.physicalPlanDescription() for n in ("MapInArrow", "MapInPandas"))
+    ]
+    assert len(python) == python_execs, python
+
+
 def _account_line(block):
     return json.dumps({"entity_change": {"entity": "Account", "id": "x",
                                          "operation": 1, "fields": []},
@@ -473,18 +505,19 @@ def test_demux_raises_on_block_in_first_bundle_but_below_first(spark, tmp_path):
 
 
 def test_check_final_blocks_from_runs_paths():
-    """The run-derived order check: proves order on disjoint intervals,
-    raises the windowed check's error on a block regression, and returns
-    indeterminate (never a false verdict) on interleaved intervals."""
+    """The order check over per-block cursor intervals (block, min seq,
+    max seq, events): proves order on disjoint intervals, raises the
+    windowed check's error on a block regression, and returns
+    indeterminate (never a false verdict) on overlapping intervals."""
     import pytest
 
     from substreams_sink_graph_load_spark.streaming.ingest import (
         check_final_blocks_from_runs,
     )
 
-    # clean: two partitions' runs, blocks non-decreasing in seq order
+    # clean: blocks non-decreasing in seq order, in any row order
     ok, hwm = check_final_blocks_from_runs(
-        [(5, 0, 9, 10), (5, 10, 14, 5), (7, 15, 19, 5)]
+        [(7, 15, 19, 5), (5, 0, 14, 15)]
     )
     assert ok and hwm == 7
 
@@ -494,7 +527,8 @@ def test_check_final_blocks_from_runs_paths():
             [(5, 0, 9, 10), (7, 10, 19, 10), (3, 20, 24, 5)]
         )
 
-    # interleaved seq intervals -> indeterminate, caller falls back
+    # block 5 recurs after block 6 -> overlapping intervals ->
+    # indeterminate, the caller falls back to the windowed scan
     ok, hwm = check_final_blocks_from_runs(
         [(5, 0, 10, 6), (6, 5, 14, 6)]
     )

@@ -3,6 +3,8 @@ digests as the reference's sequential per-block fold."""
 
 import json
 
+import pytest
+
 from substreams_sink_graph_load_spark.operators.poi import poi_block_states, poi_chain
 from substreams_sink_graph_load_spark.stablehash.core import FastHasher, fldmix_combine, _I
 from substreams_sink_graph_load_spark.stablehash.poi import ProofOfIndexing
@@ -48,11 +50,11 @@ EVENTS = [
 ]
 
 
-def _sequential_chain():
+def _sequential_chain(events=EVENTS):
     """Reference-shaped sequential fold: one ProofOfIndexing per block,
     Pause(prev) chaining."""
     by_block = {}
-    for b, s, line in EVENTS:
+    for b, s, line in events:
         by_block.setdefault(b, []).append((s, line))
     prev = None
     out = []
@@ -244,7 +246,7 @@ def test_batched_fold_duplicate_seqs_match_scalar():
 
 
 # ---------------------------------------------------------------------------
-# Shuffle-free sorted fold (poi_block_states_sorted)
+# Order independence over a multi-file staged log
 # ---------------------------------------------------------------------------
 
 
@@ -269,136 +271,28 @@ def _synth_events(n_blocks=60, events_per_block=7):
     return rows
 
 
-def _write_sorted_parquet(spark, rows, path, files=4):
-    """Write rows as several parquet files in cursor order, like the
-    staged micro-batch appends (file k holds a contiguous seq range)."""
-    per = (len(rows) + files - 1) // files
-    for k in range(files):
-        chunk = rows[k * per : (k + 1) * per]
-        if not chunk:
-            continue
-        spark.createDataFrame(
-            chunk, "block_num long, seq long, value string"
-        ).coalesce(1).write.mode("append").parquet(path)
-
-
-def test_sorted_fold_matches_shuffle_fold(spark, tmp_path):
-    from substreams_sink_graph_load_spark.operators.poi import (
-        poi_block_states_sorted,
-    )
+@pytest.mark.parametrize(
+    "shuffle,cuts",
+    [(False, [0, 105, 210, 315, 420]), (True, [0, 105, 210, 315, 420]),
+     (False, [0, 200, 420])],
+    ids=["cursor-order", "rows-shuffled", "block-spans-files"],
+)
+def test_chain_independent_of_staged_order(spark, tmp_path, shuffle, cuts):
+    """poi_chain over a multi-file parquet log equals the sequential fold
+    whatever the physical row order: files in cursor order (cuts on block
+    boundaries), rows shuffled across the files, and block 29 split over
+    two files (cut at row 200 of 7-event blocks)."""
+    import random
 
     rows = _synth_events()
+    if shuffle:
+        random.Random(5).shuffle(rows)
     path = str(tmp_path / "staged")
-    _write_sorted_parquet(spark, rows, path)
-    raw = spark.read.parquet(path)
-
-    # tiny splits force blocks to straddle split boundaries -> multi-run
-    # blocks exercise the offset + merge machinery
-    got = poi_block_states_sorted(raw, target_split_bytes=4096)
-    assert got is not None and len(got) == 60
-
-    want = {
-        r["block_num"]: (bytes(r["state"]), r["n_events"])
-        for r in poi_block_states(raw).collect()
-    }
-    assert {b: (st, n) for b, st, n in got} == want
-
-
-def test_sorted_chain_matches_sequential(spark, tmp_path):
-    path = str(tmp_path / "staged")
-    _write_sorted_parquet(spark, EVENTS, path, files=2)
-    raw = spark.read.parquet(path)
-    df = poi_chain(spark, raw, chain_id="test-chain", assume_sorted=True)
+    for a, b in zip(cuts, cuts[1:]):
+        spark.createDataFrame(
+            rows[a:b], "block_num long, seq long, value string"
+        ).coalesce(1).write.mode("append").parquet(path)
+    df = poi_chain(spark, spark.read.parquet(path), chain_id="c")
     got = {(r["block_num"], r["digest"]) for r in df.collect()}
-    want = {(b, d.hex()) for b, d in _sequential_chain()}
-    assert got == want
-
-
-def test_interleaved_blocks_with_disjoint_intervals_still_exact(spark):
-    """Alternating single-event runs interleave blocks physically, but
-    every run's seq interval is a point — disjoint per block — so the
-    offset reconstruction is still valid and must match the shuffle
-    fold exactly (the validator accepts strictly more than physically
-    sorted input; what it accepts it must get right)."""
-    from substreams_sink_graph_load_spark.operators.poi import (
-        poi_block_states_sorted,
-    )
-
-    rows = []
-    seq = 0
-    for i in range(40):
-        b = 1 + (i % 2)
-        rows.append((b, seq, _line(b, "Account", "a", 1, [("n", {"String_": str(i)})])))
-        seq += 1
-    raw = spark.createDataFrame(rows, "block_num long, seq long, value string").coalesce(1)
-    got = poi_block_states_sorted(raw)
-    want = {
-        r["block_num"]: (bytes(r["state"]), r["n_events"])
-        for r in poi_block_states(raw).collect()
-    }
-    assert got is not None and {b: (st, n) for b, st, n in got} == want
-
-
-def test_sorted_fold_falls_back_on_overlapping_runs(spark):
-    """A block whose two arrival runs OVERLAP in seq space ([0,5] then
-    [2,3]) has no derivable run order — the sorted fold must refuse
-    (return None) and the chain must answer through the fallback."""
-    from substreams_sink_graph_load_spark.operators.poi import (
-        poi_block_states_sorted,
-    )
-
-    def ev(b, s):
-        return (b, s, _line(b, "Account", "a", 1, [("n", {"String_": str(s)})]))
-
-    rows = [ev(1, 0), ev(1, 5), ev(2, 1), ev(1, 2), ev(1, 3)]
-    raw = spark.createDataFrame(rows, "block_num long, seq long, value string").coalesce(1)
-    assert poi_block_states_sorted(raw) is None
-
-    df = poi_chain(spark, raw, chain_id="c", assume_sorted=True)
-    classic = poi_chain(spark, raw, chain_id="c", assume_sorted=False)
-    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, classic.collect()))
-
-
-def test_sorted_fold_restores_split_conf(spark, tmp_path):
-    from substreams_sink_graph_load_spark.operators.poi import (
-        poi_block_states_sorted,
-    )
-
-    key = "spark.sql.files.maxPartitionBytes"
-    prior = spark.conf.get(key, None)
-    path = str(tmp_path / "staged")
-    _write_sorted_parquet(spark, EVENTS, path, files=1)
-    poi_block_states_sorted(spark.read.parquet(path))
-    assert spark.conf.get(key, None) == prior
-
-
-def test_runs_unavailable_sentinel_skips_rediscovery(spark, tmp_path):
-    """When run discovery already ran upstream and exceeded its bound,
-    the fold must NOT repeat the pass-1 scan: RUNS_UNAVAILABLE routes
-    straight to the fallback (None), even on a log the fold could
-    otherwise handle — while runs=None still triggers discovery."""
-    from substreams_sink_graph_load_spark.operators.poi import (
-        RUNS_UNAVAILABLE,
-        poi_block_states_sorted,
-    )
-
-    rows = _synth_events(n_blocks=10)
-    path = str(tmp_path / "staged")
-    _write_sorted_parquet(spark, rows, path)
-    raw = spark.read.parquet(path)
-    assert poi_block_states_sorted(raw, runs=RUNS_UNAVAILABLE) is None
-    assert len(poi_block_states_sorted(raw, runs=None)) == 10
-
-
-def test_discover_runs_driver_bound(spark, tmp_path):
-    """Over max_runs returns None after materializing at most
-    max_runs+1 driver rows (take, not collect)."""
-    from substreams_sink_graph_load_spark.operators.poi import discover_runs
-
-    rows = _synth_events(n_blocks=30)
-    path = str(tmp_path / "staged")
-    _write_sorted_parquet(spark, rows, path)
-    raw = spark.read.parquet(path)
-    assert discover_runs(raw, max_runs=5) is None
-    full = discover_runs(raw)
-    assert full is not None and len(full) >= 30
+    want = {(b, d.hex()) for b, d in _sequential_chain(_synth_events())}
+    assert got == want and len(got) == 60
