@@ -31,12 +31,14 @@ def _spark():
     from .session import get_spark
 
     spark = get_spark(app_name="graphload-spark")
-    # A failed task reaches the user as the job's exception; the executor's
-    # and the task set's log copies of it, each with the full Java stack,
-    # only bury that line (the task set's one-line abort notice stays).
+    # A failed task reaches the user as the job's exception; its log copies
+    # with the full Java stack (executor, write task, write job) only bury
+    # that line (the task set's one-line abort notice stays).
     log4j = spark._jvm.org.apache.logging.log4j
     set_level = log4j.core.config.Configurator.setLevel
-    set_level("org.apache.spark.executor.Executor", log4j.Level.FATAL)
+    for logger in ("executor.Executor", "util.Utils",
+                   "sql.execution.datasources.FileFormatWriter"):
+        set_level(f"org.apache.spark.{logger}", log4j.Level.FATAL)
     set_level("org.apache.spark.scheduler.TaskSetManager", log4j.Level.ERROR)
     return spark
 
@@ -240,9 +242,7 @@ def main(argv: list[str] | None = None) -> int:
         # 15 s throughput heartbeat (ref sinker/stats.go cadence)
         from .streaming.stats import ProgressReporter
 
-        rep = ProgressReporter(spark, "run").start()
-        files = None
-        try:
+        with ProgressReporter(spark, "run") as rep:
             files = run_ingest(
                 spark,
                 args.dest,
@@ -255,12 +255,9 @@ def main(argv: list[str] | None = None) -> int:
                 first_block=first_block,
                 workdir=args.working_dir,
             )
-        finally:
             rep.stop(
                 last_block=args.stop_block - 1,
-                bundles=sum(len(fs) for fs in files.values())
-                if files is not None
-                else "n/a",
+                bundles=sum(len(fs) for fs in files.values()),
             )
         for ent, fs in sorted(files.items()):
             print(f"{ent}: {len(fs)} bundles")

@@ -75,42 +75,51 @@ def header_rows(
     )
 
 
+def claim_bundle(part_dir: str, target: str) -> None:
+    """Turn a ``partitionBy`` write's partition directory into the bundle
+    file ``target``: move its one ``part-*`` file, or concatenate (and
+    remove) its files in name order — none gives an empty file."""
+    parts = sorted(glob.glob(os.path.join(part_dir, "part-*")))
+    if len(parts) == 1:
+        shutil.move(parts[0], target)
+        return
+    with open(target, "wb") as out:
+        for p in parts:
+            with open(p, "rb") as fh:
+                shutil.copyfileobj(fh, out)
+            os.remove(p)
+
+
 def write_bundled_lines(
     spark: SparkSession,
     lines: DataFrame,
     dest_dir: str,
-    header: str | None,
+    header: str,
     first_block: int,
     stop_block: int,
     bundle_size: int,
-    order_cols: list[str] | None = None,
-    ext: str = "csv",
+    order_cols: list[str],
 ) -> list[str]:
-    """Write a ``line``-column DataFrame as bundled text files.
+    """Write a ``line``-column DataFrame as bundled CSV files.
 
-    ``lines`` must carry ``bundle_start`` (long) and ``line`` (string); any
-    ``order_cols`` define deterministic row order within a bundle.  With a
-    ``header`` (CSV mode) every expected bundle gets a header row; without
-    one (JSONL mode) empty bundles materialize as empty files.  Returns the
-    list of files written (every expected bundle, including empty ones).
+    ``lines`` must carry ``bundle_start`` (long) and ``line`` (string);
+    ``order_cols`` define deterministic row order within a bundle.  Every
+    expected bundle gets a ``header`` row first, so empty bundles
+    materialize too.  Returns the list of files written (every expected
+    bundle, including empty ones).
     """
-    bounds = boundaries(first_block, stop_block, bundle_size)
-    order_cols = order_cols or []
-
     data_rows = lines.select(
         "bundle_start", F.lit(1).alias("_hdr"), *[F.col(c).cast("long") for c in order_cols], "line"
     )
-    if header is not None:
-        # Header sorts before data via the _hdr flag; one header row per
-        # expected bundle also materializes empty bundles.
-        hdr_rows = header_rows(
-            spark, header, first_block, stop_block, bundle_size, order_cols
-        )
-        data_rows = hdr_rows.unionByName(data_rows)
+    # Header sorts before data via the _hdr flag; one header row per
+    # expected bundle also materializes empty bundles.
+    hdr_rows = header_rows(
+        spark, header, first_block, stop_block, bundle_size, order_cols
+    )
 
     staged = os.path.join(dest_dir, "_staged")
     (
-        data_rows
+        hdr_rows.unionByName(data_rows)
         .repartition("bundle_start")
         # the rendered line is the FINAL tiebreaker: rows tied on every
         # order_col (e.g. two versions of a duplicated id closed by the
@@ -128,19 +137,9 @@ def write_bundled_lines(
 
     # Driver-side rename: partition dirs -> exact reference file names.
     written = []
-    for s, e in bounds:
-        part_dir = os.path.join(staged, f"bundle_start={s}")
-        parts = sorted(glob.glob(os.path.join(part_dir, "part-*")))
-        target = os.path.join(dest_dir, bundle_filename(s, e, ext))
-        if len(parts) == 1:
-            shutil.move(parts[0], target)
-        elif not parts:  # empty bundle, headerless mode: empty file
-            open(target, "wb").close()
-        else:  # defensive: concatenate (shouldn't happen post-repartition)
-            with open(target, "wb") as out:
-                for p in parts:
-                    with open(p, "rb") as fh:
-                        shutil.copyfileobj(fh, out)
+    for s, e in boundaries(first_block, stop_block, bundle_size):
+        target = os.path.join(dest_dir, bundle_filename(s, e))
+        claim_bundle(os.path.join(staged, f"bundle_start={s}"), target)
         written.append(target)
     shutil.rmtree(staged, ignore_errors=True)
     return written
@@ -154,10 +153,10 @@ def write_bundled_csv(
     first_block: int,
     stop_block: int,
     bundle_size: int,
-    order_cols: list[str] | None = None,
+    order_cols: list[str],
 ) -> list[str]:
     """Bundled CSV files (header per bundle) — see write_bundled_lines."""
     return write_bundled_lines(
         spark, lines, dest_dir, header, first_block, stop_block,
-        bundle_size, order_cols, ext="csv",
+        bundle_size, order_cols,
     )

@@ -8,8 +8,23 @@ threshold, Arrow for the pandas-UDF paths).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import SparkSession
+
+
+@contextmanager
+def user_errors() -> Iterator[None]:
+    """Re-raise a job failed by a ``raise_error`` check as a ``ValueError``
+    with just its message: the fatal input the CLI reports in one line."""
+    try:
+        yield
+    except SparkRuntimeException as e:
+        if e.getCondition() != "USER_RAISED_EXCEPTION":
+            raise
+        raise ValueError(e.getMessageParameters()["errorMessage"]) from e
 
 
 _SHIPPED: set[int] = set()

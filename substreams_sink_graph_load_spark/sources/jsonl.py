@@ -14,10 +14,10 @@ Float Array`` and Array wraps ``{"value": [{"Typed": {<Key>: <val>}}, ...]}``
 
 Spark-first: we give ``from_json`` the complete explicit struct schema (never
 inferred — matching the reference, which declares schema in GraphQL), so the
-whole decode stays JVM-side.  Event order within a file is captured from the
-line's byte offset; with the reference's strictly block-ordered bundle files,
-``(bundle_start, offset)`` is a stable total order -> the ``seq`` column
-SURVEY §2.3 requires (monotonically_increasing_id would NOT survive re-reads).
+whole decode stays JVM-side.  Event order within a file is the line's scan
+position; with the reference's strictly block-ordered bundle files,
+``(block_num, seq)`` is a stable total order -> the ``seq`` column SURVEY
+§2.3 requires.  ``streaming/ingest.read_wire`` shares the line reader.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -96,62 +96,77 @@ CHANGE_JSON_SCHEMA = T.StructType(
 )
 
 
-def read_change_jsonl(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    """Scan bundled JSONL files into raw change rows with a stable ``seq``.
-
-    ``path`` may contain globs (``<dir>/<entity>/*.jsonl``).  The text source
-    is used (not ``spark.read.json``) so we can carry the per-file byte
-    offset as the intra-file order — JSON inference is avoided entirely.
-    """
-    raw = spark.read.text(path).select(
-        F.col("value"),
+def _text(spark: SparkSession, path: str | list[str], value: Column) -> DataFrame:
+    """``value`` and the line's position in one projection (:func:`read_lines`)."""
+    return spark.read.text(path, lineSep="\n").select(
+        value,
         F.col("_metadata.file_path").alias("_file"),
         F.col("_metadata.file_block_start").alias("_bstart"),
-    )
-    return parse_change_lines(raw)
-
-
-def parse_change_lines(raw: DataFrame) -> DataFrame:
-    """Parse (value, _file) text rows into typed change rows with a stable
-    per-file line order (the body of :func:`read_change_jsonl`).
-    """
-    # _bstart (_metadata.file_block_start) anchors the ordering when one
-    # file spans multiple scan splits: monotonically_increasing_id is only
-    # ordered WITHIN a split, and relying on Spark's internal split
-    # enumeration order across splits of the same file would be an
-    # undocumented invariant.  (_bstart, _mid) is documented-stable: splits
-    # are byte ranges, ids ascend within each.
-    bstart = (
-        F.col("_bstart") if "_bstart" in raw.columns else F.lit(0).cast("long")
-    )
-    raw = raw.select(
-        "value",
-        "_file",
-        bstart.alias("_bstart"),
-        # generated during the scan in row order per partition; the text
-        # source emits each split's lines in byte order, so ordering by
-        # (_bstart, _mid) *within a file* recovers the exact line number.
         F.monotonically_increasing_id().alias("_mid"),
     )
-    w = Window.partitionBy("_file").orderBy("_bstart", "_mid")
-    parsed = raw.select(
-        F.from_json("value", CHANGE_JSON_SCHEMA).alias("j"),
-        F.col("_file"),
-        F.row_number().over(w).alias("_line_no"),
+
+
+def read_lines(spark: SparkSession, path: str | list[str]) -> DataFrame:
+    """The one line reader for the wire and the bundles: ``(value, _file,
+    _bstart, _mid)`` rows on the JVM text source.
+
+    It splits on ``\\n`` only, as the reference does, so a CRLF line keeps
+    its ``\\r``.  ``_bstart`` is the scan split's file offset and ``_mid``
+    the row's ``monotonically_increasing_id``: each split's lines come in
+    byte order, so ``(_bstart, _mid)`` orders a file's lines without a sort
+    or a shuffle, and :func:`line_number` turns it into the line number.
+    """
+    return _text(spark, path, F.col("value"))
+
+
+def line_number(lines: DataFrame) -> Column:
+    """The exact 1-based line number of each :func:`read_lines` row in its
+    file, blank lines counted.
+
+    A split's ``_mid`` values are consecutive, so one small job collects
+    each (file, split)'s line count and first ``_mid``; their per-file
+    prefix sums shift ``_mid`` to the line number.  Exact on any frame read
+    with the same file listing and split size as ``lines``.
+    """
+    splits = (
+        lines.groupBy("_file", "_bstart")
+        .agg(F.count("*").alias("n"), F.min("_mid").alias("mid0"))
+        .collect()
     )
-    return parsed.select(
+    offsets, path, before = [], None, 0
+    for r in sorted(splits, key=lambda r: (r["_file"], r["_bstart"])):
+        if r["_file"] != path:
+            path, before = r["_file"], 0
+        offsets += [F.lit(f"{r['_bstart']} {path}"), F.lit(before + 1 - r["mid0"])]
+        before += r["n"]
+    by_split = F.create_map(*offsets).cast("map<string,bigint>")
+    return F.col("_mid") + by_split[F.concat_ws(" ", "_bstart", "_file")]
+
+
+def read_change_jsonl(spark: SparkSession, path: str | list[str]) -> DataFrame:
+    """Scan bundled JSONL files into raw change rows.
+
+    ``path`` may contain globs (``<dir>/<entity>/*.jsonl``).  The text
+    source is used (not ``spark.read.json``), so JSON inference is avoided
+    entirely and each row keeps its :func:`read_lines` position.  ``seq``
+    is ``struct(_bstart, _mid)``: it orders events within their file, and
+    bundle files are disjoint block ranges, so ``(block_num, seq)`` is the
+    log's order.  A line ``from_json`` cannot parse has a NULL
+    ``block_num``.
+
+    The full-schema ``from_json`` runs in the projection that computes the
+    nondeterministic ``_mid``, so a filter on ``block_num`` stays above it
+    instead of being pushed below the parse with a second copy of it.
+    """
+    j = _text(spark, path, F.from_json("value", CHANGE_JSON_SCHEMA).alias("j"))
+    return j.select(
         F.col("j.block_num").alias("block_num"),
         F.col("j.entity_change.entity").alias("entity"),
         F.col("j.entity_change.id").alias("id"),
         F.col("j.entity_change.operation").alias("operation"),
         F.col("j.entity_change.fields").alias("fields"),
-        F.col("_file"),
-        F.col("_line_no"),
-    ).withColumn(
-        # global stable order: (block_num, line order within its file);
-        # bundle files are disjoint block ranges, so this totals correctly.
-        "seq",
-        F.col("_line_no").cast("long"),
+        "_file", "_bstart", "_mid",
+        F.struct("_bstart", "_mid").alias("seq"),
     )
 
 
@@ -213,22 +228,17 @@ def typed_extract(
     )
 
 
-def check_contiguity(
-    filenames: list[str],
-    stop_block: int | None = None,
-    require_coverage: bool = False,
-) -> list[str]:
+def check_contiguity(filenames: list[str], stop_block: int) -> list[str]:
     """Contiguity check over the bundle *file listing* (empty bundle files
     count): each file must start at the previous file's end + 1; files
     starting at/after the stop block are cut off (ref csvprocessor/
     processor.go:109-152).  Returns the files to load, in block order.
 
-    ``require_coverage=True`` additionally demands the listing reach
-    ``stop_block``: the reference errors out when the input falls short
-    (processor.go:145-146 ``entities do not cover the full range``) — its
-    end-of-log flush guard (processor.go:168) is therefore only ever
-    reached with full coverage, so flush rows never materialize for a
-    truncated input there.
+    The listing must reach ``stop_block``: the reference errors out when
+    the input falls short (processor.go:145-146 ``entities do not cover
+    the full range``) — its end-of-log flush guard (processor.go:168) is
+    therefore only ever reached with full coverage, so flush rows never
+    materialize for a truncated input there.
 
     Driver-side on purpose — it's a metadata walk, exactly like the
     reference's ``inputStore.Walk``; O(#files), no data touched.
@@ -242,7 +252,7 @@ def check_contiguity(
     ranged.sort()
     out, prev_end = [], None
     for start, end, fn in ranged:
-        if stop_block is not None and start >= stop_block:
+        if start >= stop_block:
             break
         if prev_end is not None and start != prev_end + 1:
             raise ValueError(
@@ -250,12 +260,11 @@ def check_contiguity(
             )
         prev_end = end
         out.append(fn)
-    if require_coverage and stop_block is not None:
-        covered_to = -1 if prev_end is None else prev_end
-        if covered_to + 1 < stop_block:
-            first = out[0] if out else "<none>"
-            raise ValueError(
-                f"entities do not cover the full range ({first!r} -> "
-                f"{covered_to + 1}), stop block: {stop_block}"
-            )
+    covered_to = -1 if prev_end is None else prev_end
+    if covered_to + 1 < stop_block:
+        first = out[0] if out else "<none>"
+        raise ValueError(
+            f"entities do not cover the full range ({first!r} -> "
+            f"{covered_to + 1}), stop block: {stop_block}"
+        )
     return out

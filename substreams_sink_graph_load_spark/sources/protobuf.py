@@ -303,16 +303,15 @@ PROTO_PARSED_SCHEMA = T.StructType(
             ),
         ),
         T.StructField("_file", T.StringType()),
-        T.StructField("_line_no", T.IntegerType()),
         T.StructField("seq", T.LongType()),
     ]
 )
 
 
 def parse_change_protobuf(raw: DataFrame) -> DataFrame:
-    """Decode ``(block_num, payload[, _file, seq])`` wire rows into the same
-    row shape :func:`..sources.jsonl.parse_change_lines` produces, one row
-    per entity change.
+    """Decode ``(block_num, payload[, _file, seq])`` wire rows into the
+    change columns :func:`..sources.jsonl.read_change_jsonl` produces, one
+    row per entity change.
 
     ``seq`` orders changes globally; absent, ``block_num`` is used (wire
     payloads are one-per-block, already totally ordered by block).  Change
@@ -333,7 +332,7 @@ def parse_change_protobuf(raw: DataFrame) -> DataFrame:
                 block = int(rec.block_num)
                 fname = getattr(rec, "_file", None) if has_file else None
                 seq = int(getattr(rec, "seq")) if has_seq else block
-                for i, c in enumerate(decode_entity_changes(bytes(payload))):
+                for c in decode_entity_changes(bytes(payload)):
                     rows.append(
                         {
                             "block_num": block,
@@ -348,7 +347,6 @@ def parse_change_protobuf(raw: DataFrame) -> DataFrame:
                                 for f in c["fields"]
                             ],
                             "_file": fname,
-                            "_line_no": i + 1,
                             "seq": seq,
                         }
                     )

@@ -161,11 +161,6 @@ def xxh3_128_seed(data: bytes, seed: int = 0) -> tuple[int, int]:
     return _xxh3_128_seed_uncached(data, seed)
 
 
-def xxh3_128_seed_int(data: bytes, seed: int = 0) -> int:
-    lo, hi = xxh3_128_seed(data, seed)
-    return (hi << 64) | lo
-
-
 def _len_0(seed: int) -> tuple[int, int]:
     s = K_SECRET
     lo = _xxh64_avalanche(seed ^ _r64(s, 64) ^ _r64(s, 72))

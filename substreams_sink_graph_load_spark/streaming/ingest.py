@@ -26,8 +26,12 @@ import urllib.parse
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.bundles import boundaries, bundle_filename, bundle_start_col
+from ..operators.bundles import (
+    boundaries, bundle_filename, bundle_start_col, claim_bundle,
+)
 from ..schema.normalize import normalize_field
+from ..session import user_errors
+from ..sources.jsonl import line_number, read_lines
 
 # last member of the wire object (types.go:3-9 field order); lines that
 # miss it (reordered members, junk) fall back to a real JSON parse
@@ -36,39 +40,19 @@ _BLOCK_RE = r'"block_num"\s*:\s*(-?\d+)\s*\}\s*$'
 
 def read_wire(spark: SparkSession, wire_path: str) -> DataFrame:
     """The wire file as ``(block_num, seq, value)`` rows, read in one batch
-    on the JVM text source.
+    by the bundles' line reader (:func:`..sources.jsonl.read_lines`).
 
-    ``seq`` is the exact global line cursor: blank lines count toward it
-    and are then dropped.  It needs no sort and no shuffle of the log: the
-    text source emits each split's lines in byte order, so a split's
-    ``monotonically_increasing_id`` values are consecutive, and one small
-    job collects each split's (count, min id) to turn them into prefix
-    offsets keyed by ``_metadata.file_block_start``.  ``lineSep="\\n"``
-    keeps a CRLF line's ``\\r`` in ``value``.  A missing path fails the
-    read; a line without an integer ``block_num`` fails the job, naming the
-    file and its cursor (the reference fails at the payload unmarshal).
+    ``seq`` is the 0-based :func:`..sources.jsonl.line_number`, the exact
+    global line cursor without a sort or a shuffle; blank lines count
+    toward it and are then dropped.  A missing path fails the read, a path
+    naming several files raises (one cursor would interleave them), and a
+    line without an integer ``block_num`` fails the job, naming the file
+    and its cursor (the reference fails at the payload unmarshal).
     """
-    lines = spark.read.text(wire_path, lineSep="\n").select(
-        "value",
-        F.col("_metadata.file_path").alias("_file"),
-        F.col("_metadata.file_block_start").alias("_bstart"),
-        F.monotonically_increasing_id().alias("_mid"),
-    )
-    splits = sorted(
-        lines.groupBy("_file", "_bstart")
-        .agg(F.count("*").alias("n"), F.min("_mid").alias("mid0"))
-        .collect(),
-        key=lambda r: r["_bstart"],
-    )
-    if len({r["_file"] for r in splits}) > 1:
+    lines = read_lines(spark, wire_path)
+    if len(lines.inputFiles()) > 1:
         raise ValueError(f"wire path {wire_path} names more than one file")
-    shift, off = [], 0
-    for r in splits:
-        shift += [F.lit(r["_bstart"]), F.lit(off - r["mid0"])]
-        off += r["n"]
-    seq = F.col("_mid") + F.create_map(*shift).cast("map<bigint,bigint>")[
-        F.col("_bstart")
-    ]
+    seq = line_number(lines) - 1
     fast = F.regexp_extract("value", _BLOCK_RE, 1)
     block = F.when(fast != "", fast.cast("long")).otherwise(
         F.from_json("value", "block_num bigint")["block_num"]
@@ -375,21 +359,8 @@ def demux_jsonl(
         ent_dir = os.path.join(staged, f"entity={urllib.parse.quote(snake, safe='')}")
         files: list[str] = []
         for s, e in bounds:
-            parts = sorted(
-                glob.glob(os.path.join(ent_dir, f"bundle_start={s}", "part-*"))
-            )
             target = os.path.join(dest, bundle_filename(s, e, "jsonl"))
-            if len(parts) == 1:
-                shutil.move(parts[0], target)
-            elif not parts:  # empty (or never-emitted entity): empty file
-                open(target, "wb").close()
-            else:  # defensive: concatenate (shouldn't happen post-repartition)
-                with open(target, "wb") as outfh:
-                    for p in parts:
-                        with open(p, "rb") as fh:
-                            shutil.copyfileobj(fh, outfh)
-                        # consumed: the leftover audit below must not see it
-                        os.remove(p)
+            claim_bundle(os.path.join(ent_dir, f"bundle_start={s}"), target)
             files.append(target)
         out[snake] = files
     # Belt-and-braces: nothing with bytes in it may remain before teardown
@@ -448,7 +419,8 @@ def run_ingest(
 
     workdir = workdir or os.path.join(dest_dir, "_work_ingest")
     ingest = WireIngest(spark, workdir, stop_block)
-    ingest.process_batch(read_wire(spark, wire_path), 0)
+    with user_errors():  # a corrupt wire line fails the staging write
+        ingest.process_batch(read_wire(spark, wire_path), 0)
 
     staged = ingest.staged_df()
     ok, last = check_final_blocks_from_runs(discover_runs(staged))

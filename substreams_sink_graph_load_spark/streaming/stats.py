@@ -22,7 +22,7 @@ import time
 
 class ProgressReporter:
     """Print one progress line every ``interval_s`` seconds while running,
-    and a final summary on ``stop()``.
+    and a final summary on ``stop()`` or when a ``with`` body returns.
 
     >>> rep = ProgressReporter(spark, "tocsv account")
     >>> rep.start()
@@ -89,5 +89,8 @@ class ProgressReporter:
     def __enter__(self) -> "ProgressReporter":
         return self.start()
 
-    def __exit__(self, *exc) -> None:
-        self.stop()
+    def __exit__(self, exc_type, *exc) -> None:
+        # no summary for a failed body: the command's last line is its error
+        if exc_type is None and not self._halt.is_set():
+            self.stop()
+        self._halt.set()

@@ -17,27 +17,33 @@ Shuffle budget: one hash(id) exchange for the version window (none for an
 immutable entity) and one hash(bundle_start) for file assembly.  Both are
 necessary at 100 TB (the reference's zero-shuffle design caps at one machine
 / one entity per process); everything between them is whole-stage codegen.
-The scan adds a third, hash(_file), for the per-file line numbers
-(``sources/jsonl.read_change_jsonl``) that order same-block events and name
-an unparseable line.
+The scan adds none: same-block events are ordered by their scan position in
+their file (``sources/jsonl.read_change_jsonl``'s ``seq``), and the exact
+line number an unparseable-line error names is computed only once that
+error has failed the job.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.errors import SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schema.entities import EntityDesc, parse_schema_file
-from .sources.jsonl import check_contiguity, read_change_jsonl, typed_extract
+from .session import user_errors
+from .sources.jsonl import (
+    check_contiguity, line_number, read_change_jsonl, read_lines, typed_extract,
+)
 from .operators.scd2 import (
     fold_versions, immutable_fatal, immutable_rows, lifetimes, mutable_fatal,
     raise_on,
 )
 from .operators.pg_csv import csv_header, render_entity_csv
 from .operators.bundles import bundle_start_col, write_bundled_csv
+
+
+_UNPARSEABLE = "unparseable JSONL line at"
 
 
 def tocsv(
@@ -76,13 +82,13 @@ def tocsv(
     # coverage is mandatory like the reference (processor.go:145-146): an
     # input listing short of stop_block errors instead of silently emitting
     # end-of-log flush rows the reference would never write
-    files = check_contiguity(all_files, stop_block, require_coverage=True)
+    files = check_contiguity(all_files, stop_block)
     raw = read_change_jsonl(spark, files)
     # a line that fails from_json has a NULL block_num: fail on it before
-    # the stop filter could drop it
-    unparseable = F.raise_error(F.concat(
-        F.lit("unparseable JSONL line in "), F.col("_file"),
-        F.lit(" (line "), F.col("_line_no").cast("string"), F.lit(")"),
+    # the stop filter could drop it.  The job knows the line only by its
+    # scan position; the failure path below turns that into its number.
+    unparseable = F.raise_error(F.concat_ws(
+        " ", F.lit(_UNPARSEABLE), "_bstart", "_mid", "_file",
     ))
     raw = raw.withColumn(
         "block_num", F.coalesce(F.col("block_num"), unparseable)
@@ -102,21 +108,30 @@ def tocsv(
     dest = os.path.join(dest_dir, entity)
     os.makedirs(dest, exist_ok=True)
     try:
-        return write_bundled_csv(
-            spark,
-            rendered,
-            dest,
-            header=csv_header(desc),
-            first_block=0,
-            stop_block=stop_block,
-            bundle_size=bundle_size,
-            order_cols=["_order_block", "_order_seq"],
-        )
-    except SparkRuntimeException as e:
-        # a check fired; the aborted write job has removed _staged already
-        if e.getCondition() != "USER_RAISED_EXCEPTION":
+        with user_errors():
+            return write_bundled_csv(
+                spark,
+                rendered,
+                dest,
+                header=csv_header(desc),
+                first_block=0,
+                stop_block=stop_block,
+                bundle_size=bundle_size,
+                order_cols=["_order_block", "_order_seq"],
+            )
+    except ValueError as e:
+        if not str(e).startswith(_UNPARSEABLE):
             raise
-        raise ValueError(e.getMessageParameters()["errorMessage"]) from e
+        # the aborted write job has removed _staged already
+        bstart, mid, path = str(e)[len(_UNPARSEABLE) + 1:].split(" ", 2)
+        lines = read_lines(spark, files)
+        at = (
+            (F.col("_file") == path)
+            & (F.col("_bstart") == int(bstart))
+            & (F.col("_mid") == int(mid))
+        )
+        n = lines.where(at).select(line_number(lines)).first()[0]
+        raise ValueError(f"unparseable JSONL line in {path} (line {n})") from e
 
 
 def tocsv_all(
@@ -155,9 +170,7 @@ def tocsv_all(
         return dict(ex.map(one, entities))
 
 
-def last_event_block(
-    spark: SparkSession, files: list[str], stop_block: int | None = None
-) -> int:
+def last_event_block(spark: SparkSession, files: list[str], stop_block: int) -> int:
     """Max event block across the bundled files — scanned from the LAST
     non-empty file only (bundles are disjoint ascending block ranges, so
     the global max lives there).  O(one bundle), not a full input scan;
@@ -167,9 +180,7 @@ def last_event_block(
         if os.path.getsize(fn) == 0:
             continue
         b = F.get_json_object("value", "$.block_num").cast("long")
-        df = spark.read.text(fn).select(b.alias("b"))
-        if stop_block is not None:
-            df = df.where(F.col("b") < stop_block)
+        df = spark.read.text(fn).select(b.alias("b")).where(F.col("b") < stop_block)
         m = df.agg(F.max("b")).collect()[0][0]
         if m is not None:
             return int(m)

@@ -200,6 +200,34 @@ def test_module_reports_fatal_input_in_one_line(tmp_path):
     assert not [l for l in proc.stderr.splitlines() if l.startswith("\tat")], proc.stderr
 
 
+def test_module_reports_corrupt_wire_line_in_one_line(tmp_path):
+    """``python -m ... run`` on a corrupt wire line exits 1 with the
+    line-cursor message once, no Java stack frame and no ``done`` summary:
+    the error is stderr's last line."""
+    import subprocess
+    import sys
+
+    wire = tmp_path / "wire.jsonl"
+    wire.write_text(json.dumps({"entity_change": {
+        "entity": "Transfer", "id": "t1", "operation": 1, "fields": [],
+    }, "block_num": 10}) + "\nnot json at all\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1", SPARK_DRIVER_MEMORY="1g")
+    proc = subprocess.run(
+        [sys.executable, "-m", "substreams_sink_graph_load_spark", "run",
+         str(wire), str(tmp_path / "out"), "--entities", "transfer", "1000"],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    lines = proc.stderr.splitlines()
+    assert proc.returncode == 1, proc.stderr
+    assert proc.stderr.count("cursor (seq) 1") == 1, proc.stderr
+    assert lines[-1].startswith("graphload-spark: error: wire line without an "
+                                f"integer block_num in {wire} at line cursor "
+                                "(seq) 1: not json at all"), proc.stderr
+    assert not [l for l in lines if l.startswith("\tat")], proc.stderr
+    assert not [l for l in lines if "] done" in l], proc.stderr
+
+
 def test_run_entities_flag_and_resume_validation(spark, tmp_path):
     """Reference run.go:48-52/76-99 flag parity: --entities replaces the
     schema argument (exactly one required), --start-block must align to

@@ -306,10 +306,14 @@ def test_tocsv_requires_full_coverage(spark, fixture_dirs):
 
 def test_seq_stable_across_file_splits(spark, tmp_path):
     """A single JSONL file forced into many scan splits must still yield
-    seq == physical line number: the (_bstart, _mid) ordering key anchors
+    seq == physical line number: line_number's per-split offsets anchor
     intra-file order on _metadata.file_block_start instead of Spark's
     internal split enumeration order."""
-    from substreams_sink_graph_load_spark.sources.jsonl import read_change_jsonl
+    from pyspark.sql import functions as F
+
+    from substreams_sink_graph_load_spark.sources.jsonl import (
+        line_number, read_lines,
+    )
 
     path = tmp_path / "big"
     path.mkdir()
@@ -323,14 +327,76 @@ def test_seq_stable_across_file_splits(spark, tmp_path):
     try:
         # confirm the conf really splits the single file at scan time
         assert spark.read.text(fn).rdd.getNumPartitions() > 4
-        df = read_change_jsonl(spark, fn)
-        rows = df.select("block_num", "seq").collect()
+        lines = read_lines(spark, fn)
+        rows = lines.select(
+            F.get_json_object("value", "$.block_num").cast("long").alias("block_num"),
+            line_number(lines).alias("seq"),
+        ).collect()
         assert len(rows) == 5000
         for r in rows:
             # block i sits on line i+1 of the file
             assert r["seq"] == r["block_num"] + 1, (r["block_num"], r["seq"])
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_tocsv_crlf_bundle_writes_same_csv(spark, fixture_dirs, tmp_path):
+    """The line reader splits on \\n only, so a CRLF bundle line keeps its
+    \\r; from_json reads it as trailing whitespace, and the CSV bytes equal
+    those of the same bundles with \\n endings (same-block order too)."""
+    _, _, schema_file = fixture_dirs
+    events = {
+        "account": {
+            **ACCOUNT_EVENTS,
+            "0000002000-0000002999.jsonl": ACCOUNT_EVENTS["0000002000-0000002999.jsonl"]
+            + [ev(2200, "Account", "a2", 2, [("balance", {"Bigint": "8"})])],
+        },
+        "transfer": TRANSFER_EVENTS,
+    }
+    out = {}
+    for end in ("\n", "\r\n"):
+        src, dest = tmp_path / f"src{len(end)}", tmp_path / f"csv{len(end)}"
+        for entity, files in events.items():
+            (src / entity).mkdir(parents=True)
+            for fname, evs in files.items():
+                (src / entity / fname).write_bytes(
+                    "".join(json.dumps(e) + end for e in evs).encode()
+                )
+            tocsv(spark, str(src), str(dest), entity, schema_file,
+                  stop_block=3000, bundle_size=1000)
+        out[end] = {
+            f"{entity}/{name}": (dest / entity / name).read_bytes()
+            for entity in events for name in sorted(os.listdir(dest / entity))
+        }
+    assert len(out["\n"]) == 6
+    assert out["\r\n"] == out["\n"]
+    assert b'a2,"[2200,2200)"' in out["\n"]["account/0000002000-0000002999.csv"]
+
+
+@pytest.mark.parametrize("entity", ["account", "transfer"])
+def test_tocsv_unparseable_line_in_later_split(spark, fixture_dirs, tmp_path, entity):
+    """An unparseable line in a later scan split of a multi-split bundle is
+    named with its exact line number (per-split offsets on the failure
+    path), for the mutable and the immutable write plan."""
+    _, _, schema_file = fixture_dirs
+    fields = {
+        "account": FULL_ACCOUNT,
+        "transfer": [("fromAccount", {"String_": "a" * 40}), ("value", {"Bigint": "1"})],
+    }[entity]
+    lines = [ev(i // 4, entity.title(), f"x{i}", 1, fields) for i in range(1500)]
+    lines[1234] = "not json at all"
+    src = tmp_path / "src"
+    write_log(src, entity, lines)
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "16384")
+    try:
+        assert spark.read.text(str(src / entity)).rdd.getNumPartitions() > 4
+        with pytest.raises(ValueError, match=r"0000000000-0000000999\.jsonl \(line 1235\)$"):
+            tocsv(spark, str(src), str(tmp_path / "csv"), entity, schema_file,
+                  stop_block=1000, bundle_size=1000)
+    finally:
+        spark.conf.set(key, prior)
 
 
 def test_tocsv_missing_middle_bundle_is_fatal(spark, fixture_dirs):
@@ -365,11 +431,9 @@ def test_check_contiguity_coverage_and_cutoff():
         "/x/0000002000-0000002999.jsonl",
     ]
     # listing order does not matter; the file at the stop block is cut
-    assert check_contiguity(files[::-1], 2000, require_coverage=True) == files[:2]
-    assert check_contiguity(files, 3000, require_coverage=True) == files
+    assert check_contiguity(files[::-1], 2000) == files[:2]
+    assert check_contiguity(files, 3000) == files
     with pytest.raises(ValueError, match="entities do not cover the full range"):
-        check_contiguity(files, 3001, require_coverage=True)
+        check_contiguity(files, 3001)
     with pytest.raises(ValueError, match="entities do not cover the full range"):
-        check_contiguity(files[:1], 1500, require_coverage=True)
-    # without require_coverage a short listing is accepted as-is
-    assert check_contiguity(files[:1], 1500) == files[:1]
+        check_contiguity(files[:1], 1500)

@@ -423,17 +423,18 @@ def exchange_keys(plan: str) -> list[str]:
 @pytest.mark.parametrize(
     "entity,max_jobs,keys",
     [
-        ("account", 6, ["_file", "bundle_start", "id"]),
-        ("transfer", 4, ["_file", "bundle_start"]),
+        ("account", 5, ["bundle_start", "id"]),
+        ("transfer", 2, ["bundle_start"]),
     ],
     ids=["account", "transfer"],
 )
 def test_tocsv_checks_add_no_job_or_exchange(spark, tmp_path, entity, max_jobs, keys):
     """tocsv's fatal checks ride the write job: a clean run on the e2e
-    fixture starts no more jobs than the unchecked pipeline did (account
-    6, transfer 4), and the write keeps one hash(id) exchange for the
-    version window and one hash(bundle_start) for file assembly, next to
-    the scan's hash(_file) line-number window."""
+    fixture starts at most 5 jobs for account and 2 for transfer, and the
+    write keeps one hash(id) exchange for the version window and one
+    hash(bundle_start) for file assembly; the scan adds none (no per-file
+    line-number window), and the full-schema from_json is evaluated once
+    per row, not again in a pushed-down stop-block filter."""
     import json
 
     import test_pipeline_e2e as e2e
@@ -462,3 +463,13 @@ def test_tocsv_checks_add_no_job_or_exchange(spark, tmp_path, entity, max_jobs, 
         if "InsertIntoHadoopFsRelationCommand" in p and str(dest / entity) in p
     ][-1]
     assert exchange_keys(plan) == keys
+    # one parse node over the scan: no pruned copy of from_json in a
+    # stop-block filter pushed below the full-schema projection
+    initial = plan.split("\n\n")[0].split("== Initial Plan ==")[1]
+    details = {
+        d[1:].split(")")[0]: d for d in re.split(r"\n\n(?=\(\d+\) )", plan)
+    }
+    parses = [details[i] for i in re.findall(r"\((\d+)\)$", initial, re.M)
+              if "from_json(" in details[i]]
+    assert len(parses) == 1, plan
+    assert parses[0].count("from_json(StructField(entity_change,") == 1, plan
