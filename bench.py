@@ -408,10 +408,12 @@ def main() -> None:
     # in-pass at 8g). 24g keeps the old-gen churn off the timings.
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
 
-    from substreams_sink_graph_load_spark.session import get_spark
+    from substreams_sink_graph_load_spark.session import KEEP_C2, get_spark
     from substreams_sink_graph_load_spark.plans import QUERIES
 
-    spark = get_spark(app_name="bench")
+    # one JVM runs every query BENCH_RUNS times: it keeps C2
+    spark = get_spark(app_name="bench",
+                      extra_conf={"spark.driver.extraJavaOptions": KEEP_C2})
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm the JVM + parquet footers + Python UDF workers once so timings

@@ -23,7 +23,7 @@ import duckdb
 import pandas as pd
 
 import __spark_entry__ as entry_mod
-from substreams_sink_graph_load_spark.session import get_spark
+from substreams_sink_graph_load_spark.session import KEEP_C2, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -36,7 +36,9 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main(names: list[str]) -> int:
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    # one JVM runs the whole registry: it keeps C2
+    spark = get_spark(master="local[8]", shuffle_partitions=8,
+                      extra_conf={"spark.driver.extraJavaOptions": KEEP_C2})
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -196,7 +196,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "run":
         from .schema.entities import parse_schema_file
-        from .streaming.ingest import run_ingest
+        from .streaming.ingest import read_last_block, run_ingest
 
         # exactly one of schema / --entities (ref run.go:126-136)
         if args.schema and args.entities:
@@ -256,8 +256,8 @@ def main(argv: list[str] | None = None) -> int:
                 workdir=args.working_dir,
             )
             rep.stop(
-                last_block=args.stop_block - 1,
                 bundles=sum(len(fs) for fs in files.values()),
+                last_block=read_last_block(args.dest),
             )
         for ent, fs in sorted(files.items()):
             print(f"{ent}: {len(fs)} bundles")

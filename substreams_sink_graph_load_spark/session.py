@@ -14,6 +14,10 @@ from contextlib import contextmanager
 from pyspark.errors import SparkRuntimeException
 from pyspark.sql import SparkSession
 
+# A JVM that lives for minutes earns back its C2 compiles: a long-lived
+# caller passes this as ``spark.driver.extraJavaOptions``.
+KEEP_C2 = "-XX:TieredStopAtLevel=4"
+
 
 @contextmanager
 def user_errors() -> Iterator[None]:
@@ -77,6 +81,18 @@ def get_spark(
     - Arrow on: every pandas UDF / mapInPandas path transfers via Arrow.
     - UTC session timezone: deterministic timestamp semantics across engines
       (the DuckDB oracle is timezone-naive).
+    - C1 only (``-XX:TieredStopAtLevel=1`` as the driver's default Java
+      option): each CLI command starts a JVM that lives well under a
+      minute, and its C2 compiles mostly do not pay back before it exits.
+      In local mode the driver JVM also runs the tasks.  Spark puts a
+      caller's ``spark.driver.extraJavaOptions`` after this default, so a
+      long-lived caller keeps C2 by passing :data:`KEEP_C2` there
+      (``bench.py``, ``scripts/oracle_check.py`` and the test suite do).
+      When PySpark launches the JVM, this setting replaces any
+      ``spark.driver.defaultJavaOptions`` in ``spark-defaults.conf``;
+      pass such options in ``extra_conf``'s
+      ``spark.driver.extraJavaOptions`` instead.  Under ``spark-submit``
+      the driver JVM is already running and the setting has no effect.
     """
     # default: the cores this process may run on (its CPU affinity)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
@@ -98,6 +114,7 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -449,3 +449,9 @@ def run_ingest(
     with open(os.path.join(dest_dir, "last_block.txt"), "w") as fh:
         fh.write(f"{last or 0}:\n")
     return files
+
+
+def read_last_block(dest_dir: str) -> int:
+    """The high-water mark :func:`run_ingest` wrote to ``last_block.txt``."""
+    with open(os.path.join(dest_dir, "last_block.txt")) as fh:
+        return int(fh.read().rstrip(":\n"))

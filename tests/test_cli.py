@@ -105,7 +105,7 @@ def test_inject_csv_print_sql(schema_file, tmp_path):
     assert 'FORCE_NOT_NULL ("id", "block_range", "name")' in out
 
 
-def test_run_and_tocsv_commands(spark, schema_file, tmp_path):
+def test_run_and_tocsv_commands(spark, schema_file, tmp_path, capsys):
     wire = tmp_path / "wire.jsonl"
     with open(wire, "w") as fh:
         for block, ent, id_, op, fields in [
@@ -123,6 +123,9 @@ def test_run_and_tocsv_commands(spark, schema_file, tmp_path):
                       "--chain-id", "c1")
     assert rc == 0
     assert "account: 1 bundles" in out and "poi2$: 1 bundles" in out
+    # the summary reports the high-water mark written, not stop - 1
+    done = [l for l in capsys.readouterr().err.splitlines() if "[run] done" in l]
+    assert len(done) == 1 and done[0].endswith(" last_block=900"), done
     rc, out = run_cli("tocsv", dest, str(tmp_path / "csv"), "account",
                       schema_file, "1000")
     assert rc == 0
