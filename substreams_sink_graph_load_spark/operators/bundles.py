@@ -1,4 +1,5 @@
-"""Block-range bundling: boundary math, file naming, bundled CSV writing.
+"""Block-range bundling: boundary math, file naming, and the one bundle
+writer behind ``run``'s JSONL bundles and ``tocsv``'s CSV bundles.
 
 Parity targets (ref bundler/bundler.go:100-203, bundler_test.go:10-88;
 csvprocessor/writer.go:35-99, 326-328; bundler/writer/common.go:29-31):
@@ -10,12 +11,12 @@ csvprocessor/writer.go:35-99, 326-328; bundler/writer/common.go:29-31):
 - bundles with zero rows are still materialized (header-only files) — the
   reference emits "boundaries to skip" so downstream contiguity checks pass
 
-The write path is Spark-native: one hash repartition on ``bundle_start`` (so
-each bundle lands in exactly one task -> exactly one file per partition
-directory), a within-partition sort for deterministic row order, a
-``partitionBy`` text sink, then a driver-side metadata rename to the exact
-``NNNNNNNNNN-NNNNNNNNNN.csv`` names.  Renames are O(#bundles) metadata ops,
-not data movement.
+The write path is Spark-native (:func:`write_bundled_lines`): one hash
+repartition on (target directory, ``bundle_start``), so each bundle lands in
+exactly one task; a within-partition sort for deterministic row order; one
+two-level ``partitionBy`` text sink; then driver-side renames to the exact
+``NNNNNNNNNN-NNNNNNNNNN`` names.  Renames are O(#bundles) metadata ops, not
+data movement.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,22 +58,25 @@ def expected_bundles(first_block: int, stop_block: int, bundle_size: int) -> lis
 
 def header_rows(
     spark: SparkSession,
-    header: str,
+    headers: list[str],
     first_block: int,
     stop_block: int,
     bundle_size: int,
     order_cols: list[str],
 ) -> DataFrame:
-    """One ``header`` row per bundle of :func:`boundaries`, shaped like
-    write_bundled_lines' data rows with ``_hdr`` = 0.  The bundle starts
-    come from ``spark.range``, so no Python worker starts."""
-    return spark.range(
-        first_block - first_block % bundle_size, stop_block, bundle_size
-    ).select(
-        F.col("id").alias("bundle_start"),
+    """One row per (target, bundle) of :func:`boundaries`, carrying
+    ``headers[target]``, shaped like write_bundled_lines' data rows with
+    ``_hdr`` = 0.  The rows come from one ``spark.range``, so no Python
+    worker starts."""
+    first = first_block - first_block % bundle_size
+    n = len(boundaries(first_block, stop_block, bundle_size))
+    target = (F.col("id") / n).cast("int")
+    return spark.range(len(headers) * n).select(
+        target.alias("target"),
+        (F.col("id") % n * bundle_size + first).alias("bundle_start"),
         F.lit(0).alias("_hdr"),
         *[F.lit(0).cast("long").alias(c) for c in order_cols],
-        F.lit(header).alias("line"),
+        F.array(*[F.lit(h) for h in headers])[target].alias("line"),
     )
 
 
@@ -93,70 +98,97 @@ def claim_bundle(part_dir: str, target: str) -> None:
 def write_bundled_lines(
     spark: SparkSession,
     lines: DataFrame,
-    dest_dir: str,
-    header: str,
+    dest_dirs: list[str],
+    headers: list[str] | None,
     first_block: int,
     stop_block: int,
     bundle_size: int,
     order_cols: list[str],
 ) -> list[str]:
-    """Write a ``line``-column DataFrame as bundled CSV files.
+    """Write ``line`` rows as bundle files into several directories in one
+    job: every JSONL bundle of ``run`` and every CSV bundle of ``tocsv``
+    and ``poi2$`` is cut here.
 
-    ``lines`` must carry ``bundle_start`` (long) and ``line`` (string);
-    ``order_cols`` define deterministic row order within a bundle.  Every
-    expected bundle gets a ``header`` row first, so empty bundles
-    materialize too.  Returns the list of files written (every expected
-    bundle, including empty ones).
+    ``lines`` carries ``target`` (int, the index of its directory in
+    ``dest_dirs``), ``bundle_start`` (long), ``order_cols`` and ``line``
+    (string).  ``order_cols``, then ``line``, order a bundle's rows.  With
+    ``headers`` (one per directory) the bundles are ``.csv`` files whose
+    first line is their directory's header; without, ``.jsonl`` files with
+    no header.  Every directory gets every bundle of
+    :func:`boundaries`, empty ones included (header-only or empty files).
+
+    One hash repartition on (target, bundle_start) puts each bundle in one
+    task, so each partition directory of the two-level ``partitionBy`` text
+    write holds one bundle; the driver then renames the directories to the
+    ``NNNNNNNNNN-NNNNNNNNNN`` names (metadata ops, no data movement).  The
+    staged tree is a fresh directory per call, so concurrent calls into one
+    destination do not collide.  A failed job removes it; a partition
+    directory outside the expected (target, bundle) set raises and keeps
+    it, as does any ``part-*`` file left unclaimed.  Returns every file
+    written, in ``dest_dirs`` order, then bundle order.
     """
-    data_rows = lines.select(
-        "bundle_start", F.lit(1).alias("_hdr"), *[F.col(c).cast("long") for c in order_cols], "line"
+    bounds = boundaries(first_block, stop_block, bundle_size)
+    rows = lines.select(
+        "target", "bundle_start", F.lit(1).alias("_hdr"),
+        *[F.col(c).cast("long") for c in order_cols], "line",
     )
-    # Header sorts before data via the _hdr flag; one header row per
-    # expected bundle also materializes empty bundles.
-    hdr_rows = header_rows(
-        spark, header, first_block, stop_block, bundle_size, order_cols
+    if headers is not None:
+        # the header sorts first in its bundle, and materializes an
+        # otherwise empty one
+        rows = header_rows(
+            spark, headers, first_block, stop_block, bundle_size, order_cols
+        ).unionByName(rows)
+    for d in dest_dirs:
+        os.makedirs(d, exist_ok=True)
+    staged = os.path.join(
+        os.path.commonpath(dest_dirs), f"_staged-{uuid.uuid4().hex}"
     )
+    try:
+        (
+            rows.repartition("target", "bundle_start")
+            # the line is the final tiebreaker: rows tied on every order
+            # column (two versions of a duplicated id closed by the same
+            # block) would otherwise land in plan-dependent order
+            .sortWithinPartitions("target", "bundle_start", "_hdr", *order_cols, "line")
+            # the projection after the sort keeps its order (no exchange)
+            .select("target", "bundle_start", "line")
+            .write.partitionBy("target", "bundle_start")
+            .text(staged, lineSep="\n")
+        )
+    except Exception:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
+    # a partition directory the claim loop below would not visit would be
+    # deleted with the tree: refuse it first (a metadata walk, no data read)
+    want = {f"bundle_start={s}" for s, _ in bounds}
+    for t_path in glob.glob(os.path.join(staged, "target=*")):
+        t = os.path.basename(t_path)
+        if t not in {f"target={i}" for i in range(len(dest_dirs))}:
+            raise ValueError(
+                f"bundle writer staged unexpected target dir {t!r}; rows "
+                "would be dropped with the staged tree"
+            )
+        for bs_path in glob.glob(os.path.join(t_path, "bundle_start=*")):
+            if os.path.basename(bs_path) not in want:
+                raise ValueError(
+                    f"bundle writer staged rows at {bs_path!r} outside block "
+                    f"range [{first_block}, {stop_block}); refusing to drop them"
+                )
 
-    staged = os.path.join(dest_dir, "_staged")
-    (
-        hdr_rows.unionByName(data_rows)
-        .repartition("bundle_start")
-        # the rendered line is the FINAL tiebreaker: rows tied on every
-        # order_col (e.g. two versions of a duplicated id closed by the
-        # same block) would otherwise land in partitioning-dependent
-        # order — output bytes must not depend on the physical plan
-        # (found by the r9 replay-vs-TWS CSV differential)
-        .sortWithinPartitions("bundle_start", "_hdr", *order_cols, "line")
-        # text sink accepts exactly one string column; the projection after
-        # the sort is order-preserving (no exchange in between)
-        .select("bundle_start", "line")
-        .write.mode("overwrite")
-        .partitionBy("bundle_start")
-        .text(staged, lineSep="\n")
-    )
-
-    # Driver-side rename: partition dirs -> exact reference file names.
+    ext = "jsonl" if headers is None else "csv"
     written = []
-    for s, e in boundaries(first_block, stop_block, bundle_size):
-        target = os.path.join(dest_dir, bundle_filename(s, e))
-        claim_bundle(os.path.join(staged, f"bundle_start={s}"), target)
-        written.append(target)
-    shutil.rmtree(staged, ignore_errors=True)
+    for i, d in enumerate(dest_dirs):
+        for s, e in bounds:
+            target = os.path.join(d, bundle_filename(s, e, ext))
+            claim_bundle(os.path.join(staged, f"target={i}", f"bundle_start={s}"), target)
+            written.append(target)
+    # the audit should make this unreachable; a future change of the
+    # staging layout then fails loudly instead of deleting rows
+    leftover = [
+        p for p in glob.glob(os.path.join(staged, "**", "part-*"), recursive=True)
+        if os.path.getsize(p) > 0
+    ]
+    if leftover:
+        raise RuntimeError(f"staged files unclaimed by any bundle: {leftover[:5]}")
+    shutil.rmtree(staged)
     return written
-
-
-def write_bundled_csv(
-    spark: SparkSession,
-    lines: DataFrame,
-    dest_dir: str,
-    header: str,
-    first_block: int,
-    stop_block: int,
-    bundle_size: int,
-    order_cols: list[str],
-) -> list[str]:
-    """Bundled CSV files (header per bundle) — see write_bundled_lines."""
-    return write_bundled_lines(
-        spark, lines, dest_dir, header, first_block, stop_block,
-        bundle_size, order_cols,
-    )

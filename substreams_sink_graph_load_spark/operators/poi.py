@@ -196,18 +196,16 @@ def poi_tocsv(
     reference's bundlers."""
     import os
 
-    from .bundles import write_bundled_csv
+    from . import bundles
 
     chain = poi_chain(spark, raw, chain_id, start_poi=start_poi)
     versions = poi_entity_versions(chain)
     rendered = render_poi_csv(versions, bundle_size)
-    dest = os.path.join(dest_dir, "poi2$")
-    os.makedirs(dest, exist_ok=True)
-    return write_bundled_csv(
+    return bundles.write_bundled_lines(
         spark,
-        rendered,
-        dest,
-        header="id,block_range,digest",
+        rendered.withColumn("target", F.lit(0)),
+        [os.path.join(dest_dir, "poi2$")],
+        ["id,block_range,digest"],
         first_block=first_block,
         stop_block=stop_block,
         bundle_size=bundle_size,

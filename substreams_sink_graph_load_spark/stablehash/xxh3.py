@@ -6,9 +6,9 @@ Only the 128-bit seeded variant is provided, matching what the reference's
 hasher uses (ref stablehash/fast_hasher.go:81-95 calls
 ``xxh3.Hash128Seed``).
 
-The ``xxhash`` C wheel is not available in this environment, hence the pure
-port.  POI inputs are tiny (field encodings, 24-byte mixer states), so the
-short-input paths dominate; fine for the UDF batch path.
+This port is the package's only scalar XXH3: it needs no C ``xxhash``
+wheel.  POI inputs are tiny (field encodings, 24-byte mixer states), so the
+short-input paths dominate.
 
 The POI hot path hashes through the numpy kernels in ``xxh3_batch.py``
 (differential-tested against this port); this module is the scalar trust
@@ -124,41 +124,12 @@ def _xxh3_128_seed_uncached(data: bytes, seed: int) -> tuple[int, int]:
     return _hash_long(data, n, seed)
 
 
-def _make_c_accelerated():
-    """Use the C ``xxhash`` library when present (standard on real
-    clusters; absent in this container) — but only after it reproduces
-    three pure-Python golden vectors, so a semantic mismatch can never
-    ship silently.  Returns the accelerated fn or None.
-    """
-    try:
-        import xxhash
-    except ImportError:
-        return None
-
-    def fast(data: bytes, seed: int) -> tuple[int, int]:
-        d = xxhash.xxh3_128(data, seed=seed).intdigest()
-        return d & M64, d >> 64
-
-    for probe, seed in ((b"", 0), (b"spark", 42), (b"x" * 200, 7)):
-        if fast(probe, seed) != _xxh3_128_seed_uncached(probe, seed):
-            return None  # pragma: no cover - foreign xxhash variant
-    return fast
-
-
-_C_FAST = _make_c_accelerated()
-
-
 def xxh3_128_seed(data: bytes, seed: int = 0) -> tuple[int, int]:
     """Return (low64, high64) of XXH3-128(data, seed).
 
     Every call carries a distinct seed (the field address incorporates
-    block and event index), so memoization cannot help; the C xxhash
-    accelerator (when installed and golden-verified) is the fast path,
-    pure Python the always-available fallback."""
-    seed &= M64
-    if _C_FAST is not None:
-        return _C_FAST(data, seed)
-    return _xxh3_128_seed_uncached(data, seed)
+    block and event index), so memoization cannot help."""
+    return _xxh3_128_seed_uncached(data, seed & M64)
 
 
 def _len_0(seed: int) -> tuple[int, int]:

@@ -6,10 +6,9 @@ interleaved order, and write ``last_block.txt``.
 Shape: the wire file is complete when ``run`` starts, so it is read as one
 batch on Spark's JVM text source (:func:`read_wire`, exact line cursor
 ``seq``, no Python worker) and staged once to a parquet log; then demux
-cuts the bundle files in one batch job — entity routing is ONE repartition
-on (entity, bundle_start) feeding a single two-level ``partitionBy`` text
-write (every entity x bundle lands in its own directory in one pass; no
-per-entity rescans), and POI is the §2.5 parallel fold.  The reference
+cuts every entity's bundle files in one job of the package's one bundle
+writer (:func:`..operators.bundles.write_bundled_lines`; no per-entity
+rescans), and POI is the §2.5 parallel fold.  The reference
 materializes bundles as the stream crosses boundaries; the observable
 contract (file set, names, contents, order, empty bundles, poi2$ rows,
 last_block marker) is identical.  Resume is the reference's one path:
@@ -18,17 +17,13 @@ last_block marker) is identical.  Resume is the reference's one path:
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
-import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.bundles import (
-    boundaries, bundle_filename, bundle_start_col, claim_bundle,
-)
+from ..operators import bundles
+from ..operators.bundles import bundle_start_col
 from ..schema.normalize import normalize_field
 from ..session import user_errors
 from ..sources.jsonl import line_number, read_lines
@@ -222,11 +217,10 @@ def demux_jsonl(
 
     Entity names normalize to snake_case for the directory (sinker.go:243);
     unknown entities raise, like the reference's router (sinker.go:242-248).
-    One routing pass over the data: a column-pruned distinct builds the
-    raw-spelling -> snake router map (validated against the schema), then
-    ONE repartition on (entity, bundle_start) feeds ONE two-level
-    ``partitionBy`` text write — per-bundle files come out of the partition
-    directories with driver-side renames (metadata ops).
+    A column-pruned distinct builds the raw-spelling -> snake router map
+    (validated against the schema); the map turns each row's entity into
+    its directory's index, and :func:`..operators.bundles.write_bundled_lines`
+    cuts every entity's bundles in one job, ordered by (block_num, seq).
 
     EVERY schema entity materializes every bundle in
     [first_block, stop_block) — never-emitted entities included — as the
@@ -234,13 +228,11 @@ def demux_jsonl(
     and rolls them all, so unseen entities still produce (empty) files.
 
     Strict about its input: any row outside [first_block, stop_block)
-    raises — out-of-envelope bundles via the metadata-only staged-tree
-    audit, unaligned-edge slivers via a pushed-down pre-pass that scans
-    only the edge bundles (and is skipped entirely when both boundaries
-    are bundle-aligned).  Any entity dir the mover would not glob raises,
-    and the staged tree is deleted only once provably empty.  Callers
-    that legitimately resume mid-chain (run_ingest) filter the pre-start
-    blocks themselves first.
+    raises — out-of-envelope bundles via the writer's metadata-only
+    staged-tree audit, unaligned-edge slivers via a pushed-down pre-pass
+    that scans only the edge bundles (and is skipped entirely when both
+    boundaries are bundle-aligned).  Callers that legitimately resume
+    mid-chain (run_ingest) filter the pre-start blocks themselves first.
     """
     # The router key: staged logs carry it as a parquet column (extracted
     # once at staging time, WireIngest.process_batch); a raw frame without
@@ -270,7 +262,7 @@ def demux_jsonl(
         norm_map[raw_name] = snake
 
     # Row-exact range guard, folded to the aligned-envelope edges.  The
-    # staged-tree audit below is bundle-granular: any row whose ALIGNED
+    # writer's staged-tree audit is bundle-granular: any row whose ALIGNED
     # bundle falls outside [first_aligned, stop_block) surfaces there as
     # an unexpected bundle_start dir, at metadata cost.  The only rows it
     # cannot see are the two slivers inside legitimate edge bundles — a
@@ -307,78 +299,24 @@ def demux_jsonl(
 
     # typed explicitly: an empty wire gives an empty map, which Spark
     # would otherwise type map<void,void> and refuse to index by string
+    names = sorted(entities)
     mapping = F.create_map(
-        *[F.lit(x) for kv in sorted(norm_map.items()) for x in kv]
-    ).cast("map<string,string>")
-    staged = os.path.join(dest_dir, "_staged_demux")
-    (
-        raw.select(
-            mapping[ent].alias("entity"),
-            bundle_start_col(F.col("block_num"), bundle_size).alias("bundle_start"),
-            F.col("block_num"),
-            F.col("seq"),
-            F.col("value").alias("line"),
-        )
-        .repartition("entity", "bundle_start")
-        .sortWithinPartitions("entity", "bundle_start", "block_num", "seq")
-        .select("entity", "bundle_start", "line")
-        .write.mode("overwrite")
-        .partitionBy("entity", "bundle_start")
-        .text(staged, lineSep="\n")
+        *[F.lit(x) for raw_name in sorted(norm_map)
+          for x in (raw_name, names.index(norm_map[raw_name]))]
+    ).cast("map<string,int>")
+    rows = raw.select(
+        mapping[ent].alias("target"),
+        bundle_start_col(F.col("block_num"), bundle_size).alias("bundle_start"),
+        "block_num",
+        "seq",
+        F.col("value").alias("line"),
     )
-
-    bounds = boundaries(first_block, stop_block, bundle_size)
-    # Fail-fast audit of the staged partition tree (metadata-only, no data
-    # pass): every entity dir must be one we will glob for, and every
-    # bundle_start must fall inside [first_block, stop_block) — otherwise
-    # the move loop below would never visit those rows and the final
-    # rmtree would silently drop them (data loss, not a degraded run).
-    expected_dirs = {
-        f"entity={urllib.parse.quote(s, safe='')}" for s in entities
-    }
-    valid_starts = {s for s, _ in bounds}
-    for ent_dir_path in glob.glob(os.path.join(staged, "entity=*")):
-        ent_d = os.path.basename(ent_dir_path)
-        if ent_d not in expected_dirs:
-            raise ValueError(
-                f"demux staged unexpected entity dir {ent_d!r} (escaping "
-                f"mismatch vs {sorted(expected_dirs)}); rows would be "
-                "dropped with the staged tree"
-            )
-        for bs_path in glob.glob(os.path.join(ent_dir_path, "bundle_start=*")):
-            bs = int(os.path.basename(bs_path).split("=", 1)[1])
-            if bs not in valid_starts:
-                raise ValueError(
-                    f"demux staged rows at {bs_path!r} outside block range "
-                    f"[{first_block}, {stop_block}); refusing to drop them"
-                )
-    out: dict[str, list[str]] = {}
-    for snake in sorted(entities):
-        dest = os.path.join(dest_dir, snake)
-        os.makedirs(dest, exist_ok=True)
-        ent_dir = os.path.join(staged, f"entity={urllib.parse.quote(snake, safe='')}")
-        files: list[str] = []
-        for s, e in bounds:
-            target = os.path.join(dest, bundle_filename(s, e, "jsonl"))
-            claim_bundle(os.path.join(ent_dir, f"bundle_start={s}"), target)
-            files.append(target)
-        out[snake] = files
-    # Belt-and-braces: nothing with bytes in it may remain before teardown
-    # (the audit above should make this unreachable; keep it so any future
-    # staging-layout drift fails loudly instead of deleting rows).
-    leftover = [
-        p
-        for p in glob.glob(
-            os.path.join(staged, "**", "part-*"), recursive=True
-        )
-        if os.path.getsize(p) > 0
-    ]
-    if leftover:
-        raise RuntimeError(
-            f"demux staged files unclaimed by any bundle: {leftover[:5]}"
-        )
-    shutil.rmtree(staged, ignore_errors=True)
-    return out
+    written = bundles.write_bundled_lines(
+        spark, rows, [os.path.join(dest_dir, e) for e in names], None,
+        first_block, stop_block, bundle_size, ["block_num", "seq"],
+    )
+    per = len(written) // len(names)
+    return {e: written[i * per:(i + 1) * per] for i, e in enumerate(names)}
 
 
 def run_ingest(
@@ -411,7 +349,10 @@ def run_ingest(
     ``first_block`` is the sinker start block and ``start_poi`` the digest
     of the block before it — the reference's resume pair (run.go:76-99).
     Bundle enumeration starts at its aligned bundle, and demux and POI
-    both see only blocks at or after it.  Only the POI fold
+    both see only blocks at or after it.  The JSONL bundles and the
+    ``poi2$`` CSV bundles are cut by the same writer
+    (:func:`..operators.bundles.write_bundled_lines`), one job each.  Only
+    the POI fold
     (:func:`operators.poi.poi_tocsv`, with ``chain_id``) starts Python
     workers.
     """

@@ -3,20 +3,22 @@
 Spark-native equivalent of the reference's ``graphload tocsv`` command
 (ref cmd/substreams-sink-graph-load/tocsv.go:42-85 + csvprocessor/) — but
 instead of a single-threaded state-machine per entity, the whole thing is one
-declarative DataFrame DAG:
+declarative DataFrame DAG, and every entity of a command is one union of
+such DAGs:
 
     read text -> from_json -> typed extract -> SCD-2 window -> CSV render
-    -> bundled write
+    -> union over entities -> bundled write
 
 The reference's fatal inputs fail that same write job: each check is a
 ``raise_error`` inside a column every row evaluates (the scan's block
 number, the operation the version window reads), so a clean run starts no
-extra job and a failing one leaves no bundle.
+extra job and a failing one leaves no bundle of any entity.
 
-Shuffle budget: one hash(id) exchange for the version window (none for an
-immutable entity) and one hash(bundle_start) for file assembly.  Both are
-necessary at 100 TB (the reference's zero-shuffle design caps at one machine
-/ one entity per process); everything between them is whole-stage codegen.
+Shuffle budget: one hash(id) exchange per mutable entity for its version
+window (none for an immutable entity) plus one hash(target, bundle_start)
+exchange per command for file assembly.  Both are necessary at 100 TB (the
+reference's zero-shuffle design caps at one machine / one entity per
+process); everything between them is whole-stage codegen.
 The scan adds none: same-block events are ordered by their scan position in
 their file (``sources/jsonl.read_change_jsonl``'s ``seq``), and the exact
 line number an unparseable-line error names is computed only once that
@@ -25,6 +27,8 @@ error has failed the job.
 
 from __future__ import annotations
 
+import functools
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,7 +44,8 @@ from .operators.scd2 import (
     raise_on,
 )
 from .operators.pg_csv import csv_header, render_entity_csv
-from .operators.bundles import bundle_start_col, write_bundled_csv
+from .operators import bundles
+from .operators.bundles import bundle_start_col
 
 
 _UNPARSEABLE = "unparseable JSONL line at"
@@ -55,83 +60,18 @@ def tocsv(
     stop_block: int,
     bundle_size: int = 1000,
 ) -> list[str]:
-    """Transform one entity's JSONL change-log into bundled CSV files.
+    """Transform one entity's JSONL change-log into bundled CSV files:
+    :func:`tocsv_all`'s plan over one entity.
 
     Mirrors the reference CLI contract: reads ``<src>/<entity>/*.jsonl``,
     writes ``<dest>/<entity>/NNNNNNNNNN-NNNNNNNNNN.csv``.
-
-    Fails like the reference, leaving no bundle and no ``_staged``
-    directory: a Float field raises before any job runs; an unparseable
-    line (processor.go:205-214), a CREATE on a live id, a DELETE on an
-    unseen id or on an immutable entity, or a lifetime starter missing a
-    non-nullable field (processor.go:238-293) fails the write job itself,
-    naming the file and line or the entity, id and block.
     """
-    if stop_block <= 0:
-        raise ValueError("stop_block must be > 0")
     descs = parse_schema_file(schema_file)
     if entity not in descs:
         raise ValueError(f"cannot find entity {entity!r} in schema {schema_file!r}")
-    desc = descs[entity]
-
-    import glob as _glob
-
-    all_files = sorted(_glob.glob(os.path.join(src_dir, entity, "*.jsonl")))
-    if not all_files:
-        raise ValueError(f"cannot find any entity file under {src_dir}/{entity}")
-    # coverage is mandatory like the reference (processor.go:145-146): an
-    # input listing short of stop_block errors instead of silently emitting
-    # end-of-log flush rows the reference would never write
-    files = check_contiguity(all_files, stop_block)
-    raw = read_change_jsonl(spark, files)
-    # a line that fails from_json has a NULL block_num: fail on it before
-    # the stop filter could drop it.  The job knows the line only by its
-    # scan position; the failure path below turns that into its number.
-    unparseable = F.raise_error(F.concat_ws(
-        " ", F.lit(_UNPARSEABLE), "_bstart", "_mid", "_file",
-    ))
-    raw = raw.withColumn(
-        "block_num", F.coalesce(F.col("block_num"), unparseable)
-    ).where(F.col("block_num") < stop_block)
-
-    typed = typed_extract(raw, desc, originals=list(desc.fields))
-    # a Float field raises here, before any job runs
-    rendered = render_entity_csv(build_versions(typed, desc, bundle_size), desc)
-    if not desc.immutable:
-        # end-of-log flush rows go to the last event's bundle
-        emit = F.coalesce(
-            F.col("emit_block"), F.lit(last_event_block(spark, files, stop_block))
-        )
-        rendered = rendered.withColumn(
-            "bundle_start", bundle_start_col(emit, bundle_size)
-        ).withColumn("_order_block", emit)
-    dest = os.path.join(dest_dir, entity)
-    os.makedirs(dest, exist_ok=True)
-    try:
-        with user_errors():
-            return write_bundled_csv(
-                spark,
-                rendered,
-                dest,
-                header=csv_header(desc),
-                first_block=0,
-                stop_block=stop_block,
-                bundle_size=bundle_size,
-                order_cols=["_order_block", "_order_seq"],
-            )
-    except ValueError as e:
-        if not str(e).startswith(_UNPARSEABLE):
-            raise
-        # the aborted write job has removed _staged already
-        bstart, mid, path = str(e)[len(_UNPARSEABLE) + 1:].split(" ", 2)
-        lines = read_lines(spark, files)
-        at = (
-            (F.col("_file") == path)
-            & (F.col("_bstart") == int(bstart))
-            & (F.col("_mid") == int(mid))
-        )
-        n = lines.where(at).select(line_number(lines)).first()[0]
-        raise ValueError(f"unparseable JSONL line in {path} (line {n})") from e
+    return _write_entities(
+        spark, src_dir, dest_dir, {entity: descs[entity]}, stop_block, bundle_size
+    )[entity]
 
 
 def tocsv_all(
@@ -142,49 +82,147 @@ def tocsv_all(
     stop_block: int,
     bundle_size: int = 1000,
 ) -> dict[str, list[str]]:
-    """Every schema entity in one Spark application.
+    """Every schema entity with a directory under ``src_dir``, in one plan.
 
     The reference parallelizes tocsv by launching one OS process per entity
-    (README.md:42-45); here entities are concurrent jobs in one shared
-    session (Spark job submission is thread-safe) — scheduler slots fill
-    across entities during each job's narrow stages and driver-side file
-    renames.  At most four entity jobs run at once.
+    (README.md:42-45); here every entity's rows are one union, written by
+    one job, so the jobs started do not grow with the entity count: one
+    :func:`last_event_block` job and the write.
+
+    Fails like the reference, leaving no bundle of any entity and no
+    staged directory: a Float field raises before any job runs; an
+    unparseable line (processor.go:205-214), a CREATE on a live id, a
+    DELETE on an unseen id or on an immutable entity, or a lifetime
+    starter missing a non-nullable field (processor.go:238-293) fails the
+    write job itself, naming the file and line or the entity, id and
+    block.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    entities = [
-        e for e in sorted(parse_schema_file(schema_file))
+    descs = parse_schema_file(schema_file)
+    return _write_entities(
+        spark, src_dir, dest_dir,
         # schema may declare entities the stream never emitted
-        if os.path.isdir(os.path.join(src_dir, e))
-    ]
+        {e: d for e, d in sorted(descs.items())
+         if os.path.isdir(os.path.join(src_dir, e))},
+        stop_block, bundle_size,
+    )
 
-    def one(entity: str) -> tuple[str, list[str]]:
-        return entity, tocsv(
-            spark, src_dir, dest_dir, entity, schema_file,
-            stop_block=stop_block, bundle_size=bundle_size,
+
+def _write_entities(
+    spark: SparkSession,
+    src_dir: str,
+    dest_dir: str,
+    descs: dict[str, EntityDesc],
+    stop_block: int,
+    bundle_size: int,
+) -> dict[str, list[str]]:
+    """The tocsv plan: each entity's typed extract, SCD-2 window and CSV
+    render, unioned and written in one job to ``<dest>/<entity>/``."""
+    if stop_block <= 0:
+        raise ValueError("stop_block must be > 0")
+    if not descs:
+        return {}
+    files = {}
+    for entity in descs:
+        listed = sorted(glob.glob(os.path.join(src_dir, entity, "*.jsonl")))
+        if not listed:
+            raise ValueError(f"cannot find any entity file under {src_dir}/{entity}")
+        # coverage is mandatory like the reference (processor.go:145-146): an
+        # input listing short of stop_block errors instead of silently
+        # emitting end-of-log flush rows the reference would never write
+        files[entity] = check_contiguity(listed, stop_block)
+    # a Float field raises here, before any job runs
+    rendered = [
+        render_entity_csv(
+            build_versions(_typed(spark, files[e], d, stop_block, i), d, bundle_size), d
         )
+        for i, (e, d) in enumerate(descs.items())
+    ]
+    last = last_event_block(
+        spark, {e: files[e] for e, d in descs.items() if not d.immutable}, stop_block
+    )
+    parts = []
+    for i, (entity, df) in enumerate(zip(descs, rendered)):
+        if entity in last:
+            # end-of-log flush rows go to the last event's bundle
+            emit = F.coalesce(F.col("emit_block"), F.lit(last[entity]))
+            df = df.withColumn(
+                "bundle_start", bundle_start_col(emit, bundle_size)
+            ).withColumn("_order_block", emit)
+        parts.append(df.select(
+            F.lit(i).alias("target"), "bundle_start", "_order_block", "_order_seq", "line"
+        ))
+    try:
+        with user_errors():
+            written = bundles.write_bundled_lines(
+                spark,
+                functools.reduce(DataFrame.unionByName, parts),
+                [os.path.join(dest_dir, e) for e in descs],
+                [csv_header(d) for d in descs.values()],
+                first_block=0,
+                stop_block=stop_block,
+                bundle_size=bundle_size,
+                order_cols=["_order_block", "_order_seq"],
+            )
+    except ValueError as e:
+        if not str(e).startswith(_UNPARSEABLE):
+            raise
+        # the writer has removed the aborted job's staged tree
+        target, bstart, mid, path = str(e)[len(_UNPARSEABLE) + 1:].split(" ", 3)
+        lines = read_lines(spark, list(files.values())[int(target)])
+        at = (
+            (F.col("_file") == path)
+            & (F.col("_bstart") == int(bstart))
+            & (F.col("_mid") == int(mid))
+        )
+        n = lines.where(at).select(line_number(lines)).first()[0]
+        raise ValueError(f"unparseable JSONL line in {path} (line {n})") from e
+    per = len(written) // len(descs)
+    return {e: written[i * per:(i + 1) * per] for i, e in enumerate(descs)}
 
-    if len(entities) <= 1:
-        return dict(one(e) for e in entities)
-    with ThreadPoolExecutor(max_workers=min(4, len(entities))) as ex:
-        return dict(ex.map(one, entities))
+
+def _typed(
+    spark: SparkSession, files: list[str], desc: EntityDesc, stop_block: int, target: int
+) -> DataFrame:
+    """One entity's change rows below ``stop_block``, one typed column per
+    field.  A line that fails from_json has a NULL block_num: the job
+    fails on it before the stop filter could drop it, naming the line by
+    its target and scan position; :func:`_write_entities` turns that into
+    its number."""
+    unparseable = F.raise_error(F.concat_ws(
+        " ", F.lit(f"{_UNPARSEABLE} {target}"), "_bstart", "_mid", "_file",
+    ))
+    raw = read_change_jsonl(spark, files).withColumn(
+        "block_num", F.coalesce(F.col("block_num"), unparseable)
+    ).where(F.col("block_num") < stop_block)
+    return typed_extract(raw, desc, originals=list(desc.fields))
 
 
-def last_event_block(spark: SparkSession, files: list[str], stop_block: int) -> int:
-    """Max event block across the bundled files — scanned from the LAST
-    non-empty file only (bundles are disjoint ascending block ranges, so
-    the global max lives there).  O(one bundle), not a full input scan;
-    at 100 TB this is the difference between a metadata nibble and a
-    second pass over the dataset."""
-    for fn in sorted(files, reverse=True):
-        if os.path.getsize(fn) == 0:
-            continue
+def last_event_block(
+    spark: SparkSession, files: dict[str, list[str]], stop_block: int
+) -> dict[str, int]:
+    """Each entity's max event block below ``stop_block``, read from its
+    LAST non-empty bundle file only (bundles are disjoint ascending block
+    ranges, so the max lives there): one small job over every entity's
+    last file.  An entity whose last file holds no such block moves on to
+    its previous file in a further job; one with none left gets 0."""
+    pending = {
+        e: [f for f in sorted(fs, reverse=True) if os.path.getsize(f) > 0]
+        for e, fs in files.items()
+    }
+    out = {e: 0 for e in files}
+    while any(pending.values()):
+        now = [(e, fs.pop(0)) for e, fs in pending.items() if fs]
         b = F.get_json_object("value", "$.block_num").cast("long")
-        df = spark.read.text(fn).select(b.alias("b")).where(F.col("b") < stop_block)
-        m = df.agg(F.max("b")).collect()[0][0]
-        if m is not None:
-            return int(m)
-    return 0
+        scans = [
+            spark.read.text(fn).select(F.lit(e).alias("e"), b.alias("b"))
+            for e, fn in now
+        ]
+        union = functools.reduce(DataFrame.unionByName, scans)
+        found = union.where(F.col("b") < stop_block).groupBy("e").agg(F.max("b")).collect()
+        for e, m in found:
+            out[e] = m
+            pending[e] = []
+    return out
 
 
 def build_versions(

@@ -5,12 +5,12 @@ import os
 
 from pyspark.sql import functions as F
 
-from substreams_sink_graph_load_spark.operators import (
+from substreams_sink_graph_load_spark.operators import bundles
+from substreams_sink_graph_load_spark.operators.bundles import (
     boundaries,
     bundle_filename,
     bundle_start_col,
     expected_bundles,
-    write_bundled_csv,
 )
 
 
@@ -45,11 +45,11 @@ def test_write_bundled_csv(spark, tmp_path):
     dest = str(tmp_path / "acct")
     os.makedirs(dest, exist_ok=True)
     lines = spark.createDataFrame(
-        [(0, 5, "r1"), (0, 3, "r0"), (2000, 1, "r2")],
-        "bundle_start long, emit long, line string",
+        [(0, 0, 5, "r1"), (0, 0, 3, "r0"), (0, 2000, 1, "r2")],
+        "target int, bundle_start long, emit long, line string",
     )
-    files = write_bundled_csv(
-        spark, lines, dest, header="id,block_range",
+    files = bundles.write_bundled_lines(
+        spark, lines, [dest], ["id,block_range"],
         first_block=0, stop_block=2500, bundle_size=1000,
         order_cols=["emit"],
     )

@@ -152,8 +152,9 @@ def test_tocsv_all_command(spark, schema_file, tmp_path):
 
 
 def test_tocsv_all_command_fails_on_one_entity(spark, tmp_path):
-    """One entity's fatal input fails the whole command, and that entity
-    is left with no bundle and no _staged directory."""
+    """One entity's fatal input fails the whole command as one job: no
+    entity, the healthy one included, is left with a bundle, and no
+    _staged directory is left under the destination."""
     import test_pipeline_e2e as e2e
 
     src, dest = tmp_path / "jsonl", tmp_path / "csv"
@@ -169,6 +170,8 @@ def test_tocsv_all_command_fails_on_one_entity(spark, tmp_path):
                                          "transfer id t1 at block 20"):
         run_cli("tocsv-all", str(src), str(dest), str(sf), "1000")
     assert os.listdir(dest / "transfer") == []
+    assert os.listdir(dest / "account") == []
+    assert sorted(os.listdir(dest)) == ["account", "transfer"]
 
 
 def test_module_reports_fatal_input_in_one_line(tmp_path):

@@ -3,6 +3,7 @@ demuxed per-entity JSONL bundles (+ poi2$ chain + last_block.txt) ->
 tocsv -> CSVs identical to the batch pipeline over hand-laid JSONL."""
 
 import csv
+import glob
 import json
 import os
 
@@ -318,7 +319,7 @@ def test_run_side_tables_start_no_python_worker(spark, wire):
     frames = {
         "wire read": staged,
         "header rows": header_rows(
-            spark, "id,block_range,digest", 0, 3000, 1000, ["_order_block"]
+            spark, ["id,block_range,digest"], 0, 3000, 1000, ["_order_block"]
         ),
         "poi_chain": poi_chain(spark, staged, "chain-plan"),
         "empty poi_chain": poi_chain(spark, staged.limit(0), "chain-plan"),
@@ -329,8 +330,8 @@ def test_run_side_tables_start_no_python_worker(spark, wire):
         for node in ("BatchEvalPython", "ArrowEvalPython", "PythonDataSource",
                      "MapInPandas", "MapInArrow", "PythonRDD"):
             assert node not in text, f"{name}: {node} in\n{text}"
-    assert header_rows(spark, "h", 1500, 3000, 1000, []).collect() == [
-        (1000, 0, "h"), (2000, 0, "h")
+    assert header_rows(spark, ["h", "g"], 1500, 3000, 1000, []).collect() == [
+        (0, 1000, 0, "h"), (0, 2000, 0, "h"), (1, 1000, 0, "g"), (1, 2000, 0, "g")
     ]
 
 
@@ -465,25 +466,20 @@ def test_demux_raises_on_block_below_first(spark, tmp_path):
         )
 
 
-def test_demux_raises_on_entity_dir_escaping_mismatch(
-    spark, tmp_path, monkeypatch
-):
-    """If our quoting of the entity dir name ever diverges from Spark's
-    partition-path escaping, the audit must raise instead of globbing
-    nothing and deleting the rows with the staged tree."""
-    import urllib.parse as up
+def test_bundle_writer_raises_on_unexpected_target_dir(spark, tmp_path):
+    """A row whose target is not the index of a destination directory
+    stages into a directory the claim loop never visits: the audit must
+    raise and keep the staged tree instead of deleting the row with it."""
+    from substreams_sink_graph_load_spark.operators import bundles
 
-    from substreams_sink_graph_load_spark.streaming.ingest import demux_jsonl
-
-    real_quote = up.quote
-    monkeypatch.setattr(
-        up, "quote", lambda s, safe="": "WRONG_" + real_quote(s, safe=safe)
+    rows = spark.createDataFrame(
+        [(0, 0, "kept"), (3, 0, "stray")], "target int, bundle_start long, line string"
     )
-    raw = _raw_df(spark, [(10, 0)])
-    with pytest.raises(ValueError, match="unexpected entity dir"):
-        demux_jsonl(
-            spark, raw, str(tmp_path / "d"), ["account"], stop_block=1000
+    with pytest.raises(ValueError, match="unexpected target dir 'target=3'"):
+        bundles.write_bundled_lines(
+            spark, rows, [str(tmp_path / "d")], None, 0, 1000, 1000, []
         )
+    assert len(glob.glob(str(tmp_path / "d" / "_staged-*" / "target=3" / "*" / "part-*"))) == 1
 
 
 def test_demux_raises_on_block_in_first_bundle_but_below_first(spark, tmp_path):

@@ -3,7 +3,7 @@
 
 from pyspark.sql import functions as F
 
-from substreams_sink_graph_load_spark.operators import (
+from substreams_sink_graph_load_spark.operators.pg_csv import (
     bytea_hex,
     csv_quote,
     pg_array,

@@ -9,10 +9,12 @@ bundle, and stop-block truncation.
 import base64
 import json
 import os
+from pathlib import Path
 
 import pytest
 
-from substreams_sink_graph_load_spark.tocsv import tocsv
+from substreams_sink_graph_load_spark.operators.bundles import expected_bundles
+from substreams_sink_graph_load_spark.tocsv import tocsv, tocsv_all
 
 SDL = """
 type Account @entity {
@@ -397,6 +399,59 @@ def test_tocsv_unparseable_line_in_later_split(spark, fixture_dirs, tmp_path, en
                   stop_block=1000, bundle_size=1000)
     finally:
         spark.conf.set(key, prior)
+
+
+def test_tocsv_all_names_unparseable_line_of_later_entity(spark, fixture_dirs):
+    """In tocsv_all's union of entities, an unparseable line of the second
+    entity is named with its file and exact line (each file its own scan
+    partition, so the first entity's scan holds several), and neither
+    entity gets a bundle."""
+    src, dest, schema_file = fixture_dirs
+    fname = "0000002000-0000002999.jsonl"
+    with open(os.path.join(src, "transfer", fname), "a") as fh:
+        fh.write("not json at all\n")
+    line = len(TRANSFER_EVENTS[fname]) + 1
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "16384")
+    try:
+        with pytest.raises(ValueError, match=rf"transfer/{fname} \(line {line}\)$"):
+            tocsv_all(spark, src, dest, schema_file, stop_block=3000, bundle_size=1000)
+    finally:
+        spark.conf.set(key, prior)
+    assert sorted(os.listdir(dest)) == ["account", "transfer"]
+    assert os.listdir(os.path.join(dest, "account")) == []
+    assert os.listdir(os.path.join(dest, "transfer")) == []
+
+
+def test_tocsv_concurrent_entities_match_sequential(spark, fixture_dirs, tmp_path):
+    """The reference runs tocsv as one process per entity: two tocsv calls
+    on one session into one destination, at the same time, write the
+    bytes of two sequential calls and leave no staged directory."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    src, dest, schema_file = fixture_dirs
+    entities = ["account", "transfer"]
+
+    def run(entity, out):
+        return tocsv(spark, src, out, entity, schema_file,
+                     stop_block=3000, bundle_size=1000)
+
+    def tree(out):
+        return {
+            p.relative_to(out): p.read_bytes() if p.is_file() else None
+            for p in Path(out).rglob("*")
+        }
+
+    for e in entities:
+        run(e, dest)
+    together = tmp_path / "together"
+    with ThreadPoolExecutor(2) as ex:
+        list(ex.map(run, entities, [str(together)] * 2, timeout=600))
+    assert tree(together) == tree(dest)
+    assert sorted(map(str, tree(dest))) == sorted(entities + [
+        f"{e}/{n}" for e in entities for n in expected_bundles(0, 3000, 1000)
+    ])
 
 
 def test_tocsv_missing_middle_bundle_is_fatal(spark, fixture_dirs):

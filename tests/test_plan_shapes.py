@@ -420,49 +420,58 @@ def exchange_keys(plan: str) -> list[str]:
     )
 
 
-@pytest.mark.parametrize(
-    "entity,max_jobs,keys",
-    [
-        ("account", 5, ["bundle_start", "id"]),
-        ("transfer", 2, ["bundle_start"]),
-    ],
-    ids=["account", "transfer"],
-)
-def test_tocsv_checks_add_no_job_or_exchange(spark, tmp_path, entity, max_jobs, keys):
-    """tocsv's fatal checks ride the write job: a clean run on the e2e
-    fixture starts at most 5 jobs for account and 2 for transfer, and the
-    write keeps one hash(id) exchange for the version window and one
-    hash(bundle_start) for file assembly; the scan adds none (no per-file
-    line-number window), and the full-schema from_json is evaluated once
-    per row, not again in a pushed-down stop-block filter."""
-    import json
+# every tocsv command, whatever its entities: one last_event_block job, then
+# the write (its two exchange stages and the write stage, one job each
+# under AQE)
+TOCSV_MAX_JOBS = 5
 
+
+@pytest.mark.parametrize(
+    "entities",
+    [["account"], ["transfer"], ["account", "transfer"]],
+    ids=["account", "transfer", "account+transfer"],
+)
+def test_tocsv_checks_add_no_job_or_exchange(spark, tmp_path, entities):
+    """tocsv_all is one plan: over the e2e fixture it starts at most
+    TOCSV_MAX_JOBS jobs for one entity or two, and its write holds one
+    hash(id) exchange per mutable entity for the version window and one
+    hash(target, bundle_start) exchange for file assembly.  The fatal
+    checks ride the write job; the scan adds no exchange (no per-file
+    line-number window), and each entity's full-schema from_json is
+    evaluated once per row, not again in a pushed-down stop-block
+    filter."""
     import test_pipeline_e2e as e2e
 
-    from substreams_sink_graph_load_spark.tocsv import tocsv
+    from substreams_sink_graph_load_spark.tocsv import tocsv_all
 
     schema = tmp_path / "schema.graphql"
     schema.write_text(e2e.SDL)
     events = {"account": e2e.ACCOUNT_EVENTS, "transfer": e2e.TRANSFER_EVENTS}
-    for fname, evs in events[entity].items():
-        e2e.write_log(tmp_path / "jsonl", entity, evs, fname=fname)
+    for entity in entities:
+        for fname, evs in events[entity].items():
+            e2e.write_log(tmp_path / "jsonl", entity, evs, fname=fname)
     dest = tmp_path / "csv"
     sc = spark.sparkContext
-    group = f"tocsv-{entity}-{tmp_path.name}"
-    sc.setJobGroup(group, group)
-    try:
-        tocsv(spark, str(tmp_path / "jsonl"), str(dest), entity, str(schema),
-              stop_block=3000, bundle_size=1000)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= max_jobs
+
+    def job_ids():
+        # every job of the application, also those a helper thread starts
+        # (a job group set here would not reach such a thread)
+        jobs = sc._jsc.sc().statusStore().jobsList(sc._jvm.java.util.ArrayList())
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    before = job_ids()
+    files = tocsv_all(spark, str(tmp_path / "jsonl"), str(dest), str(schema),
+                      stop_block=3000, bundle_size=1000)
+    assert sorted(files) == entities
+    assert len(job_ids() - before) <= TOCSV_MAX_JOBS
 
     runs = spark._jsparkSession.sharedState().statusStore().executionsList()
     plan = [
         p for p in (runs.apply(i).physicalPlanDescription() for i in range(runs.size()))
-        if "InsertIntoHadoopFsRelationCommand" in p and str(dest / entity) in p
+        if "InsertIntoHadoopFsRelationCommand" in p and str(dest) in p
     ][-1]
-    assert exchange_keys(plan) == keys
+    assert exchange_keys(plan) == ["id"] * entities.count("account") + ["target"]
+    assert re.search(r"hashpartitioning\(target#\d+, bundle_start#\d+L, ", plan)
     # one parse node over the scan: no pruned copy of from_json in a
     # stop-block filter pushed below the full-schema projection
     initial = plan.split("\n\n")[0].split("== Initial Plan ==")[1]
@@ -471,5 +480,6 @@ def test_tocsv_checks_add_no_job_or_exchange(spark, tmp_path, entity, max_jobs, 
     }
     parses = [details[i] for i in re.findall(r"\((\d+)\)$", initial, re.M)
               if "from_json(" in details[i]]
-    assert len(parses) == 1, plan
-    assert parses[0].count("from_json(StructField(entity_change,") == 1, plan
+    assert len(parses) == len(entities), plan
+    for parse in parses:
+        assert parse.count("from_json(StructField(entity_change,") == 1, plan

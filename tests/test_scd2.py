@@ -3,7 +3,7 @@
 
 from pyspark.sql import functions as F
 
-from substreams_sink_graph_load_spark.operators import scd2_versions, immutable_rows
+from substreams_sink_graph_load_spark.operators.scd2 import scd2_versions, immutable_rows
 
 SCHEMA = "id string, block_num long, seq long, operation int, name string, balance string"
 
